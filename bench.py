@@ -237,6 +237,13 @@ def _run_cold(queries, name, spark, sf_dir) -> float:
     return _run(queries, name, spark, sf_dir)
 
 
+def _compiles(spark) -> int:
+    """Janino compiles so far in this JVM (one per generated class that
+    missed Spark's codegen class cache)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _scale10x(queries, spark, sf_dir) -> dict:
     """Bounded 10x leg: build/reuse the disjoint-key replica and re-time
     the representative subset, best-of-2 each, under a wall budget."""
@@ -292,7 +299,11 @@ def main() -> int:
 
     canary_passes: list[float] = []
     samples: dict[str, list[float]] = {}
+    # classes each pass (canary included) had to compile: pass 1 fills
+    # the codegen cache, later passes should find their classes there
+    compiles_per_pass: list[int] = []
     for _ in range(PASSES):
+        compiled = _compiles(spark)
         canary_passes.append(round(_run_cold(queries, CANARY, spark, sf_dir), 3))
         for name in HEADLINE:
             if name not in queries:
@@ -300,6 +311,7 @@ def main() -> int:
             samples.setdefault(name, []).append(
                 _run_cold(queries, name, spark, sf_dir)
             )
+        compiles_per_pass.append(_compiles(spark) - compiled)
     times = {name: round(min(ts), 3) for name, ts in samples.items()}
 
     # Steady-state pagerank leg (r7 verdict #7b): the headline row
@@ -372,6 +384,7 @@ def main() -> int:
         "scale10x_full_recorded": SCALE10X_FULL_RECORDED,
         "scale10x_full_stale": stale,
         "pagerank_steady_state_sec": pagerank_steady,
+        "janino_compiles_per_pass": compiles_per_pass,
     }
     try:
         with open(os.path.join(REPO, "BENCH_LOCAL.json"), "w") as fh:

@@ -1,4 +1,4 @@
-"""Table catalog: load the driver's parquet fixtures and register views.
+"""Table catalog: load the driver's parquet fixtures.
 
 The reference declares its tables externally (Glue DDL in
 ``terraform/main.tf:78-178,224-343``) and never infers schemas at query
@@ -31,9 +31,6 @@ TABLE_NAMES = [
     "documents",
     "embeddings",
 ]
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # Columns written as parquet TIMESTAMP(NANOS), which Spark's vectorized
 # reader rejects; read them as long (legacy conf) and convert to
@@ -82,7 +79,8 @@ def table_path(sf_dir: str, name: str) -> str:
 #: memo is capped at one live plan per table per session. The per-call
 #: stat walk stays: it IS the freshness check (same contract as
 #: _FOOTER_ROWS), and memoizing it would serve stale plans over
-#: rewritten files.
+#: rewritten files. Entries of stopped applications are dropped on the
+#: next insert, so a dead session's plans do not outlive it.
 _TABLE_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}
 
 
@@ -98,7 +96,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # sees it even if a caller unset it between loads
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, name)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, sf_dir, name)
     sig = _path_sig(path)
     memo = _TABLE_MEMO.get(key)
     if memo is not None and memo[0] == sig:
@@ -110,6 +109,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 col, F.timestamp_micros(F.expr(f"{col} div 1000"))
             )
     df = normalize_ntz(df)
+    for dead in [k for k in _TABLE_MEMO if k[0] != app_id]:
+        del _TABLE_MEMO[dead]
     _TABLE_MEMO[key] = (sig, df)
     return df
 
@@ -358,23 +359,4 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
         df._kes_spread = (n, out)
     except Exception:
         pass  # exotic DataFrame subclass refusing attributes — fine
-    return out
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """Load fixture tables and register each as a temp view.
-
-    Registering views means operators can be written in either the
-    DataFrame API or SQL — Catalyst compiles both to the same plan.
-    """
-    out: dict[str, DataFrame] = {}
-    for name in names or TABLE_NAMES:
-        path = table_path(sf_dir, name)
-        if not os.path.exists(path):
-            continue
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
     return out

@@ -271,12 +271,17 @@ def _clone_rep_pairs(
     this prefix unchanged, so the expensive candidate/verify plan is
     written once."""
     # ADVICE r12: release the PREVIOUS call's pins before overwriting
-    # the handle — the two lazy consumers never consume them, so
+    # the handle — the two lazy consumers never release them, so
     # without this each call orphans a persisted clone/band/shingle
     # set in the CacheManager until clearCache or session end (the
     # shingle table is text-sized, the largest pinned object here).
-    # At most one prefix's pins are ever live. Unpersist on a frame
-    # whose session has stopped raises; swallow — dead pins are gone.
+    # At most one prefix's pins are ever live. The cost: when
+    # q_dedup_near_minhash and q_dedup_components run back to back,
+    # the second no longer has its identical prefix subtree swapped
+    # for the first one's filled cache by the CacheManager; it
+    # rebuilds the shingle/band prefix from the scan. Unpersist on a
+    # frame whose session has stopped raises; swallow — dead pins are
+    # gone.
     global LAST_PREFIX_PINS
     for pinned in LAST_PREFIX_PINS:
         try:
@@ -2287,6 +2292,7 @@ def q_lsh_intake_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     heap-debris class the one-JVM 500-query sweeps have OOMed on
     (round-8 fix; the returned DataFrame is a local 1-row frame, so
     downstream re-execution never recomputes the pipeline either)."""
+    global LAST_PREFIX_PINS
     # Bounded-eval width (catalog.bounded_eval_scope): the r8 ABA
     # probe (BASELINE.md "measured r9 perf queue") read this eval
     # at 9.6 s vanilla sf0.01 — 'mixed' class: the batch half (band
@@ -2373,4 +2379,5 @@ def q_lsh_intake_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = combined.collect()
         for cached in (bands, dropped, tp, *LAST_PREFIX_PINS):
             cached.unpersist()
+        LAST_PREFIX_PINS = ()
         return spark.createDataFrame(rows, combined.schema)

@@ -13,6 +13,11 @@ Scale posture (the 100 TB design, tested on local[N]):
 - UTC session timezone so event-time semantics match the oracle and are
   cluster-location independent.
 - Arrow enabled for the pandas_udf / toPandas boundary.
+- Generated-code class cache sized to the registry's working set: one
+  pass over the 52 ``bench.py`` headline queries fills 1,056 cache
+  entries, ten times Spark's default of 100, so a least-recently-used
+  cache that small evicts every class before a re-run of the same plan
+  can reuse it (see the conf comment below).
 """
 
 from __future__ import annotations
@@ -63,6 +68,18 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # --- codegen ------------------------------------------------
+        # Compile each generated class once per JVM, not once per run.
+        # One pass over the 52 bench.py headline queries fills 1,056
+        # entries (a source is keyed once per compiling class loader:
+        # driver and executor). At the default of 100 the LRU cache
+        # evicted every class before its plan ran again, and a re-run
+        # of three headline queries recompiled ~180 classes (Janino,
+        # then HotSpot on the fresh bytecode). 2048 holds about twice
+        # the measured headline set. Static conf: the JVM reads it
+        # once, when CodeGenerator first runs, so it only takes effect
+        # on the first session a JVM builds.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         # --- local-mode ergonomics ----------------------------------
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

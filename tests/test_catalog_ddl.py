@@ -82,3 +82,18 @@ def test_show_and_describe_surface(spark, events_table):
         f"SHOW CREATE TABLE {events_table}"
     ).collect()[0][0]
     assert "USING parquet" in create and "LOCATION" in create
+
+
+def test_table_memo_drops_stopped_applications(spark, tmp_path):
+    from keycloak_event_stream_spark import catalog
+
+    dead = ("local-0-stopped", SF, "region")
+    catalog._TABLE_MEMO[dead] = ((0,), None)
+    try:
+        spark.range(3).write.parquet(catalog.table_path(str(tmp_path), "region"))
+        catalog.load_table(spark, str(tmp_path), "region")
+        assert dead not in catalog._TABLE_MEMO
+        live = spark.sparkContext.applicationId
+        assert (live, str(tmp_path), "region") in catalog._TABLE_MEMO
+    finally:
+        catalog._TABLE_MEMO.pop(dead, None)
