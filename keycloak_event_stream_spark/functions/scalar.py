@@ -26,19 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from keycloak_event_stream_spark.catalog import load_table
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from keycloak_event_stream_spark.registry import register as _q
 
 
 @_q(

@@ -36,19 +36,7 @@ from keycloak_event_stream_spark.catalog import (
     load_table,
     spread,
 )
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from keycloak_event_stream_spark.registry import register as _q
 
 
 # ---------------------------------------------------------------------------
@@ -1685,7 +1673,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dedup_near_minhash (one candidate join, re-rolled under four
     thresholds as conditional aggregates — the sweep costs one small
     cross join with a 4-row literal table, not four dedup runs)."""
-    scored = QUERIES["q_dedup_near_minhash"](spark, sf_dir)
+    scored = q_dedup_near_minhash(spark, sf_dir)
     ts = spark.range(1).select(
         F.explode(
             F.array(F.lit(0.2), F.lit(0.4), F.lit(0.6), F.lit(0.8))
@@ -1805,7 +1793,7 @@ def q_dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_dedup_near_minhash); source labels join in as a broadcast
     doc→source map; the matrix is ≤ |sources|² cells with a
     (count desc, pair) total-order top-k."""
-    scored = QUERIES["q_dedup_near_minhash"](spark, sf_dir)
+    scored = q_dedup_near_minhash(spark, sf_dir)
     meta = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     a = meta.select(
         F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a")

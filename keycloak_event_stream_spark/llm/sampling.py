@@ -17,20 +17,7 @@ from pyspark.sql.window import Window as W
 
 from keycloak_event_stream_spark.catalog import load_table, spread
 from keycloak_event_stream_spark.operators._scale import two_phase_window
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
+from keycloak_event_stream_spark.registry import register as _q
 
 # hash-bucket: first 4 hex chars of md5(key) -> 0..65535, identical in
 # both engines; bucket < threshold*65536 selects a deterministic slice

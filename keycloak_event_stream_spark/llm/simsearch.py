@@ -29,20 +29,7 @@ from pyspark.sql.window import Window as W
 
 from keycloak_event_stream_spark.catalog import load_table, spread
 from keycloak_event_stream_spark.llm.dedup import duck_cosine, spark_cosine
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
+from keycloak_event_stream_spark.registry import register as _q
 
 _N_QUERIES = 5  # query set = vec_id < 5
 _TOP_K = 10
@@ -55,9 +42,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "q_sim_search",
-    oracle=f"""
+_SIM_SEARCH_ORACLE = f"""
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ),
@@ -72,8 +57,10 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        ORDER BY cosine DESC, vec_id) AS rn
           FROM scored)
     WHERE rn <= {_TOP_K}
-    """,
-)
+    """
+
+
+@_q("q_sim_search", oracle=_SIM_SEARCH_ORACLE)
 def q_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for each query vector. The query set is
     broadcast; the corpus is scanned map-side exactly once — at 100 TB
@@ -267,7 +254,7 @@ def _pandas_scorer(queries_bc):
     return score
 
 
-@_q("q_sim_search_pandas", oracle=ORACLE["q_sim_search"])
+@_q("q_sim_search_pandas", oracle=_SIM_SEARCH_ORACLE)
 def q_sim_search_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force ANN with Arrow-batch numpy scoring: the query set is
     a broadcast variable; each corpus batch is scored against all
@@ -611,25 +598,25 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ),
-    b AS (SELECT vec_id, v, {{bucket}} AS bucket FROM e),
+    b AS (SELECT vec_id, v, {_duck_bucket('v')} AS bucket FROM e),
     q AS (SELECT vec_id AS q_id, v AS qv, bucket AS q_bucket
-          FROM b WHERE vec_id < {{nq}}),
+          FROM b WHERE vec_id < {_N_QUERIES}),
     exact AS (
       SELECT q_id, vec_id FROM (
         SELECT q.q_id, e.vec_id,
                row_number() OVER (PARTITION BY q.q_id
-                 ORDER BY {{cos_e}} DESC, e.vec_id) AS rn
+                 ORDER BY {duck_cosine('q.qv', 'e.v')} DESC, e.vec_id) AS rn
         FROM q CROSS JOIN e WHERE e.vec_id <> q.q_id)
-      WHERE rn <= {{k}}
+      WHERE rn <= {_TOP_K}
     ),
     retrieved AS (
       SELECT q_id, vec_id, rn FROM (
         SELECT q.q_id, b.vec_id,
                row_number() OVER (PARTITION BY q.q_id
-                 ORDER BY {{cos_b}} DESC, b.vec_id) AS rn
+                 ORDER BY {duck_cosine('q.qv', 'b.v')} DESC, b.vec_id) AS rn
         FROM q JOIN b ON b.bucket = q.q_bucket
         WHERE b.vec_id <> q.q_id)
-      WHERE rn <= {{k}}
+      WHERE rn <= {_TOP_K}
     )
     SELECT r.q_id,
            CAST(count(*) AS BIGINT) AS n_retrieved,
@@ -702,15 +689,6 @@ def q_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("q_id")
     )
-
-
-ORACLE["q_mrr_eval"] = ORACLE["q_mrr_eval"].format(
-    bucket=_duck_bucket("v"),
-    nq=_N_QUERIES,
-    k=_TOP_K,
-    cos_e=duck_cosine("q.qv", "e.v"),
-    cos_b=duck_cosine("q.qv", "b.v"),
-)
 
 
 @_q(

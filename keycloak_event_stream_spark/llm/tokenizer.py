@@ -37,20 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from keycloak_event_stream_spark.catalog import load_table, spread
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
+from keycloak_event_stream_spark.registry import register as _q
 
 # Private-use sentinels standing in for the merged symbol of each
 # iteration; surfaced back as the readable pair string on output.

@@ -44,20 +44,7 @@ from keycloak_event_stream_spark.catalog import (
     load_table,
     spread,
 )
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
+from keycloak_event_stream_spark.registry import register as _q
 
 _SSQ = (
     "aggregate(v, cast(0.0 as double), (acc, x) -> acc + x * x)"

@@ -1,6 +1,6 @@
 """Batch operators: relational surface (SURVEY.md §2.3).
 
-Each module exposes ``QUERIES: dict[str, (spark, sf_dir) -> DataFrame]``
-and ``ORACLE: dict[str, str]`` (DuckDB SQL twins) which the top-level
-registry merges for the driver contract.
+Each module registers its ``(spark, sf_dir) -> DataFrame`` queries, each
+with its DuckDB SQL twin, through ``registry.register(name, oracle)``;
+``registry.collect()`` returns them for the driver contract.
 """

@@ -30,20 +30,7 @@ from keycloak_event_stream_spark.catalog import (
     spread,
 )
 from keycloak_event_stream_spark.operators._exact import DEC
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
+from keycloak_event_stream_spark.registry import register as _q
 
 _DAMP = 0.85
 _ITERS = 5

@@ -36,20 +36,7 @@ from keycloak_event_stream_spark.catalog import load_table, spread
 from keycloak_event_stream_spark.operators._scale import (
     two_phase_window,
 )
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
+from keycloak_event_stream_spark.registry import register as _q
 
 # Shared heuristic classifier (same rule as q_lang_id) — the engine's
 # running example of a cheap per-row featurizer whose quality we now

@@ -35,21 +35,7 @@ from keycloak_event_stream_spark.operators._exact import (
     sql_davg,
     sql_dsum,
 )
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    """Register a (spark, sf_dir) -> DataFrame query with its oracle."""
-
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from keycloak_event_stream_spark.registry import register as _q
 
 
 # ---------------------------------------------------------------------------
@@ -376,9 +362,7 @@ def q_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "q_join_asof",
-    oracle="""
+_ASOF_ORACLE = """
     WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
          -- max-event_id pre-reduce pins the duplicate-ts pick to the
          -- same tiebreak the Spark window order uses (round-4 ADVICE)
@@ -388,8 +372,10 @@ def q_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
            c.event_id AS last_click_id, c.ts AS last_click_ts
     FROM p ASOF LEFT JOIN c
       ON p.user_id = c.user_id AND p.ts >= c.ts
-    """,
-)
+    """
+
+
+@_q("q_join_asof", oracle=_ASOF_ORACLE)
 def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for each purchase, the latest click at-or-before it by
     the same user. Spark has no native ASOF (SURVEY §7 risk 1); the
@@ -916,7 +902,7 @@ def _asof_pandas_group(pdf):
                    "last_click_id", "last_click_ts"]]
 
 
-@_q("q_join_asof_pandas", oracle=ORACLE["q_join_asof"])
+@_q("q_join_asof_pandas", oracle=_ASOF_ORACLE)
 def q_join_asof_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join, custom-operator formulation: one shuffle on user_id,
     then ``pd.merge_asof`` per group via applyInPandas — the pattern for

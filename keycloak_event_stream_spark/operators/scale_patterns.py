@@ -27,19 +27,7 @@ from pyspark.sql.window import Window as W
 
 from keycloak_event_stream_spark.catalog import footer_rows, load_table, spread
 from keycloak_event_stream_spark.operators._exact import DEC, dsum, sql_dsum
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from keycloak_event_stream_spark.registry import register as _q
 
 
 # ---------------------------------------------------------------------------

@@ -41,19 +41,7 @@ from keycloak_event_stream_spark.operators._exact import dbig, sql_dbig
 from keycloak_event_stream_spark.operators._scale import (
     two_phase_window,
 )
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from keycloak_event_stream_spark.registry import register as _q
 
 
 @_q(
@@ -3314,8 +3302,8 @@ def q_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM wide
     )
     SELECT n0, n1, chi2,
-           round(2.0 * (1.0 - {{phi}}), 6) AS p_value,
-           CAST(CASE WHEN round(2.0 * (1.0 - {{phi}}), 6) < 0.001
+           round(2.0 * (1.0 - {_phi_expr('sqrt(chi2)')}), 6) AS p_value,
+           CAST(CASE WHEN round(2.0 * (1.0 - {_phi_expr('sqrt(chi2)')}), 6) < 0.001
                      THEN 1 ELSE 0 END AS INTEGER) AS srm_flag
     FROM stat
     """,
@@ -3362,11 +3350,6 @@ def q_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q_ab_srm_check"] = ORACLE["q_ab_srm_check"].format(
-    phi=_phi_expr("sqrt(chi2)")
-)
-
-
 @_q(
     "q_bayes_ab",
     oracle=f"""
@@ -3406,8 +3389,8 @@ ORACLE["q_ab_srm_check"] = ORACLE["q_ab_srm_check"].format(
       FROM post
     )
     SELECT na, ka, nb, kb, ma AS p_a_mean, mb AS p_b_mean,
-           round(CASE WHEN zs >= 0 THEN {{phi_pos}}
-                      ELSE 1.0 - {{phi_neg}} END, 6)
+           round(CASE WHEN zs >= 0 THEN {_phi_expr('zs')}
+                      ELSE 1.0 - {_phi_expr('(-zs)')} END, 6)
              AS prob_b_beats_a
     FROM z
     """,
@@ -3489,11 +3472,6 @@ def q_bayes_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("mb").alias("p_b_mean"),
         prob.alias("prob_b_beats_a"),
     )
-
-
-ORACLE["q_bayes_ab"] = ORACLE["q_bayes_ab"].format(
-    phi_pos=_phi_expr("zs"), phi_neg=_phi_expr("(-zs)")
-)
 
 
 @_q(

@@ -39,19 +39,7 @@ from keycloak_event_stream_spark.operators._exact import (
     sql_davg,
     sql_dsum,
 )
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from keycloak_event_stream_spark.registry import register as _q
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -18,10 +18,10 @@ Mirrors the observable semantics of the reference's query builders:
 
 What the reference delegates to Athena — predicate pushdown, partition
 pruning — Catalyst does here, plus one augmentation the reference lacks
-(SURVEY §1.4 Q3/Q4): time-range predicates derive ``dt``/``hour``
-partition predicates with a lateness allowance, so a time-bounded query
-on a 100 TB store touches only the relevant partitions instead of every
-one.
+(SURVEY §1.4 Q3/Q4): time-range predicates derive a ``dt`` partition
+predicate with a lateness allowance, so a time-bounded query on a 100 TB
+store touches only the relevant days instead of every one. The ``hour``
+column is accepted but not yet used for pruning.
 
 No SQL-string IR and no literal escaping (ref F8,
 ``AthenaEventQuery.java:200-205``): values stay typed ``lit()``s, so
@@ -37,8 +37,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from keycloak_event_stream_spark.catalog import load_table
+from keycloak_event_stream_spark.registry import register
 
-_LATENESS = _dt.timedelta(hours=1)  # allowance for misfiled partitions (Q4)
+_LATENESS = _dt.timedelta(hours=1)  # conservative edge widening (Q4)
 
 
 def _ts(value) -> _dt.datetime:
@@ -169,9 +170,11 @@ class EventQueryBuilder:
         return F.lit(t.strftime("%Y-%m-%d %H:%M:%S.%f")).cast("timestamp")
 
     def _partition_pruning_predicates(self) -> list[Column]:
-        """Derive dt/hour predicates from the time range (fixes SURVEY
-        §1.4 Q3), widened by a lateness allowance because partition
-        values come from *arrival* time (Q4). On a dt/hour-partitioned
+        """Derive dt predicates from the time range (fixes SURVEY §1.4
+        Q3). The store writes event-time dt/hour
+        (``sources.keycloak._with_event_time_partitions``, Q4), so the
+        1-hour lateness allowance is conservative: it can only add a
+        partition at each edge, never drop one. On a dt-partitioned
         100 TB table these prune at the file-listing level."""
         preds: list[Column] = []
         if self._dt_col is None:
@@ -371,10 +374,18 @@ class AdminEventQueryBuilder(EventQueryBuilder):
 # Registry entries: the reference's canonical query shapes on the fixture
 # ---------------------------------------------------------------------------
 
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
+@register(
+    "q_eventstore_canonical",
+    oracle="""
+    SELECT event_id, ts, user_id, event_type, value, props
+    FROM events
+    WHERE event_type IN ('click', 'purchase', 'signup')
+      AND ts >= TIMESTAMP '2024-01-05 00:00:00'
+      AND ts <= TIMESTAMP '2024-01-25 23:59:59'
+    ORDER BY ts DESC, event_id DESC
+    LIMIT 200 OFFSET 10
+""",
+)
 def q_eventstore_canonical(spark, sf_dir: str) -> DataFrame:
     """The reference's flagship read-path shape (``buildSql``,
     ``AthenaEventQuery.java:136-159``): IN-list + inclusive time range +
@@ -392,18 +403,16 @@ def q_eventstore_canonical(spark, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_eventstore_canonical"] = q_eventstore_canonical
-ORACLE["q_eventstore_canonical"] = """
+@register(
+    "q_eventstore_user_filter",
+    oracle="""
     SELECT event_id, ts, user_id, event_type, value, props
     FROM events
-    WHERE event_type IN ('click', 'purchase', 'signup')
-      AND ts >= TIMESTAMP '2024-01-05 00:00:00'
-      AND ts <= TIMESTAMP '2024-01-25 23:59:59'
-    ORDER BY ts DESC, event_id DESC
-    LIMIT 200 OFFSET 10
-"""
-
-
+    WHERE event_type IN ('click', 'view') AND user_id = 3
+    ORDER BY ts ASC, event_id ASC
+    LIMIT 500
+""",
+)
 def q_eventstore_user_filter(spark, sf_dir: str) -> DataFrame:
     """Reference shape: conjunctive equality (userid + type) with
     ascending order and a limit (``AthenaEventQuery.java:173-187`` +
@@ -418,12 +427,3 @@ def q_eventstore_user_filter(spark, sf_dir: str) -> DataFrame:
         .to_df()
     )
 
-
-QUERIES["q_eventstore_user_filter"] = q_eventstore_user_filter
-ORACLE["q_eventstore_user_filter"] = """
-    SELECT event_id, ts, user_id, event_type, value, props
-    FROM events
-    WHERE event_type IN ('click', 'view') AND user_id = 3
-    ORDER BY ts ASC, event_id ASC
-    LIMIT 500
-"""

@@ -1,9 +1,10 @@
-"""Merged query registry — the single source for the driver contract.
+"""Query registry — the single source for the driver contract.
 
-Each operator module contributes ``QUERIES`` (name -> (spark, sf_dir) ->
-DataFrame) and ``ORACLE`` (name -> DuckDB SQL). Modules are imported
-defensively so a broken module degrades coverage instead of killing the
-whole contract.
+Every query enters through ``register(name, oracle)``: a decorator that
+records the ``(spark, sf_dir) -> DataFrame`` function and its DuckDB SQL
+twin, and raises on a name registered twice. ``collect()`` imports every
+module in ``_MODULES`` and returns both maps in driver order. A module
+that fails to import fails ``collect()``: coverage never shrinks quietly.
 """
 
 from __future__ import annotations
@@ -14,6 +15,27 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+
+_QUERIES: dict[str, QueryFn] = {}
+_ORACLE: dict[str, str] = {}
+
+
+def register(name: str, oracle: str):
+    """Decorator: enter ``fn`` as query ``name`` with its oracle SQL."""
+
+    def deco(fn: QueryFn) -> QueryFn:
+        if name in _QUERIES:
+            prior = _QUERIES[name]
+            raise ValueError(
+                f"duplicate query name {name}: {fn.__module__}.{fn.__qualname__}"
+                f" and {prior.__module__}.{prior.__qualname__}"
+            )
+        _QUERIES[name] = fn
+        _ORACLE[name] = oracle
+        return fn
+
+    return deco
+
 
 _MODULES = [
     "keycloak_event_stream_spark.operators.relational",
@@ -53,59 +75,13 @@ _MODULES = [
 ]
 
 
-# Registration order is part of the driver contract: the driver's
-# correctness report caps at the FIRST 50 registered queries — ONLY
-# the first 50 names below get driver-window evidence in a given
-# round; everything after the "refill" marker is documentation of past
-# windows plus module-order spillover, NOT driver-checked this round.
-#
-# Round-12 window (the CLOSING window, per VERDICT r11 "Next round"
-# #8 and ADVICE r11 #5 — the round's modified queries must be in the
-# committed correctness window). Coverage arithmetic after r11: 506
-# registered queries, 490 unique names driver-checked (union of
-# CORRECTNESS_r01..r11, zero red on latest check), 16 never checked.
-#
-# In order:
-# (a) the final 16 never-checked names — q_geo_nearest,
-#     q_late_data_quantify, q_dedup_proximity (trimmed from the r11
-#     window at the 50 cap) plus the 13 staged in the r11 plan — a
-#     green r12 closes "every registry name has >=1 green driver row"
-#     at 506/506.
-# (b) every query whose code changed in round 12 (ADVICE r11 #5):
-#     the textstats tokenize unification (q_bm25, q_perplexity_unigram,
-#     q_bigram_lm — one corpus tokenize per run), the salted-skew
-#     pre-aggregation + input-derived salt (q_join_salted_skew), the
-#     persisted recursion body (q_recursive_hierarchy), the
-#     NULL-tolerant partition-by UDTF (q_udtf_partition_agg), the 13
-#     two_phase_window(totals=) migrations (q_ks_test, q_auc_roc,
-#     q_pareto_abc, q_quantile_normalize, q_purchase_intervals,
-#     q_lorenz_deciles, q_abc_xyz, q_rfm_segmentation,
-#     q_time_to_convert, q_gain_curve, q_pr_curve,
-#     q_threshold_optimizer, q_qq_plot), the reverted pin-
-#     materializing count (q_ts_similarity), and the dedup prefix
-#     pin-release (q_dedup_near_minhash, q_dedup_components). All
-#     verified oracle-green at sf0.001+sf0.01 (vanilla parity
-#     included) before this rotation; the driver rows land on the
-#     new code. q_udtf_first_seen was experimented on (Arrow) but is
-#     net comment-only vs its last green row, so it yields its slot.
-# (c) the four r11 graph rewrites (VERDICT r11 #8): their driver
-#     oracle rows predate the round-11 pagerank/hits/kcore/bfs
-#     rewrites; re-checked here on the rewritten code.
-# (d) r11-modified names whose r11 window missed them and that are
-#     not already above: q_kmeans_lloyd (in-row argmin),
-#     q_market_basket (keyed fan-out repartition),
-#     q_window_distinct_running + the grouped_value_counts histogram
-#     rewrites q_spearman, q_lead_time, q_levene_test,
-#     q_percentile_bands_exact, q_winsorized_mean_by.
-#     q_window_range_frame and q_window_ntile (same rewrite class)
-#     did not fit in the 50; their branch equivalence is pinned in
-#     tests/test_scale_windows.py and the primitive itself gets nine
-#     driver rows via (b)/(d) — lowest-risk trim.
-#
-# 16 + 22 + 4 + 8 = 50. Names 51+ are refill (not driver-checked
-# this round): the r11 window first, then prior relative order.
+# The driver window: the driver's correctness report covers only the
+# first 50 registered names. Rule for filling it: first the names whose
+# code changed since their last green driver row, then the names whose
+# green row is oldest. Every other name follows in _MODULES order, then
+# definition order within its module.
 _PRIORITY = [
-    # ---- (a) final 16 never-checked names: coverage closes at 506/506 ----
+    # ---- first driver rows in round 12 ----
     "q_geo_nearest",
     "q_late_data_quantify",
     "q_dedup_proximity",
@@ -122,7 +98,7 @@ _PRIORITY = [
     "q_array_agg",
     "q_explode_outer",
     "q_sql_table_fn",
-    # ---- (b) r12 code-changed: textstats/salted/recursion/udtf/totals=/pins ----
+    # ---- code changed in round 12 ----
     "q_bm25",
     "q_perplexity_unigram",
     "q_bigram_lm",
@@ -145,12 +121,12 @@ _PRIORITY = [
     "q_ts_similarity",
     "q_dedup_near_minhash",
     "q_dedup_components",
-    # ---- (c) r11 graph rewrites, driver rows predate the rewrite ----
+    # ---- round-11 graph rewrites ----
     "q_graph_pagerank",
     "q_graph_hits",
     "q_graph_kcore",
     "q_graph_bfs_levels",
-    # ---- (d) r11-modified still lacking post-change driver evidence ----
+    # ---- code changed in round 11 ----
     "q_kmeans_lloyd",
     "q_market_basket",
     "q_window_distinct_running",
@@ -158,406 +134,18 @@ _PRIORITY = [
     "q_lead_time",
     "q_levene_test",
     "q_percentile_bands_exact",
-    "q_winsorized_mean_by",
-    # ---- refill: past-round windows, relative order preserved ----
-    "q_window_rank",
-    "s_tumbling_counts",
-    "s_session_windows",
-    "q_weekday_seasonality_map",
-    "q_value_histogram_text",
-    "q_repetition_profile",
-    "q_doc_language_mismatch",
-    "q_session_handoff",
-    "q_dedup_normalization_ladder",
-    "q_join_skew_stats",
-    "q_error_burst_detection",
-    "q_rate_limit_window",
-    "q_returns_wilson",
-    "q_discount_band_elasticity",
-    "q_text_ascii_ratio",
-    "q_percentile_trend_weekly",
-    "q_dedup_cross_source",
-    "q_window_nth_value",
-    "q_feed_freshness",
-    "q_sampling_bias_check",
-    "q_histogram_2d",
-    "q_reservoir_aes",
-    "q_seasonal_index_dow",
-    "q_poisson_fit_lines",
-    "q_invoice_reconciliation",
-    "q_interval_merge",
-    "q_mutual_information",
-    "q_char_entropy",
-    "q_span_corruption",
-    "q_fim_transform",
-    "q_length_batching",
-    "q_source_card",
-    "q_source_overlap",
-    "q_histogram_equiwidth",
-    "q_anomaly_zscore",
-    "q_transpose",
-    "q_top_p_nucleus",
-    "q_user_features",
-    "q_entropy_sources",
-    "q_outlier_iqr",
-    "q_mad",
-    "q_collocation_pmi",
-    "q_partial_corr",
-    "q_winsorize",
-    "q_activity_bitmap",
-    "q_diff_snapshots",
-    "q_stickiness",
-    "q_lsh_cap_recall_eval",
-    "q_minhash_eval",
-    "q_embedding_outliers",
-    "q_agg_stats",
-    "q_corr_moments",
-    "q_durbin_watson",
-    "q_corr_matrix",
-    "q_outlier_mahalanobis",
-    "q_ridge_regression",
-    "q_vocab_coverage",
-    "q_zipf_fit",
-    "q_lexical_diversity",
-    "q_doc_repetition",
-    "q_dataset_card",
-    "q_token_histogram_log2",
-    "q_logsumexp_sources",
-    "q_tokenizer_fertility",
-    "q_char_ngram_profile",
-    "q_window_ntile",
-    "q_window_ignore_nulls",
-    "q_window_nth",
-    "q_window_trailing_7d",
-    "q_join_interval_overlap",
-    "q_join_asof_forward",
-    "q_gaps_islands",
-    "q_transition_matrix",
-    "q_multiband_singlescan",
-    "q_percent_of_total",
-    "q_rollup_rank",
-    "q_yoy_growth",
-    "q_top_movers_wow",
-    "q_market_share_shift",
-    "q_audience_overlap",
-    "q_seasonal_heatmap",
-    "q_retention_curve_fit",
-    "q_random_projection",
-    "q_embed_pca_power",
-    "q_embed_mmd",
-    "q_embed_covariance",
-    "q_dbscan_core",
-    "q_coreset_kcenter",
-    "q_skipgram_cooc",
-    "s_sliding_agg",
-    "s_watermark_late",
-    "s_stream_dedup",
-    "s_stream_static_join",
-    "s_stream_kl_monitor",
-    "s_stateful_profile",
-    "s_window_topk",
-    "s_tumbling_approx_uniques",
-    "s_rate_alert",
-    "s_session_flags",
-    "q_lsh_intake_recall_eval",
-    "q_graph_resource_alloc",
-    "q_kn_bigram_lm",
-    "s_quarantine_ingest",
-    "s_ingest_flatten",
-    "q_spearman_corr",
-    "q_layout_partitioned_prune",
-    "q_partition_size_audit",
-    "q_dq_audit",
-    "q_cluster_zorder",
-    "q_compaction_bins",
-    "q_catalog_freshness",
-    "q_null_rate_matrix",
-    "q_dup_key_audit",
-    "q_conditional_funcs",
-    "q_map_higher_order",
-    "q_xml_parse",
-    "q_regex_extract_all",
-    "q_multimodal_cols",
-    "q_hard_negatives",
-    "q_dedup_bow",
-    "q_dedup_prefix",
-    "q_dedup_keep_best",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_fuzzy_name",
-    "q_fingerprint",
-    "q_fingerprint_rolling",
-    "q_sim_search_pandas",
-    "q_dsir_importance",
-    "q_stratified_sample",
-    "q_sample_per_group",
-    "q_mixture_weights",
-    "q_curation_pipeline",
-    "q_instruction_format",
-    "q_safety_lexicon",
-    "q_pit_training_set",
-    "q_context_length_plan",
-    "q_shard_plan",
-    "s_dedup_state_audit",
-    "q_join_asof_pandas",
-    "s_stream_stream_semi_join",
-    "s_stream_stream_full_join",
-    "s_stream_stream_left_join",
-    "s_stream_stream_join",
-    "s_tumbling_uniques",
-    "q_association_rules",
-    "q_shingle_size_sensitivity",
-    "q_graph_assortativity",
-    "q_graph_common_neighbors",
-    "q_funnel",
-    "q_funnel_rates",
-    "q_funnel_paths",
-    "q_funnel_cohort",
-    "q_attribution_first_touch",
-    "q_attribution_last_touch",
-    "q_shapley_attribution",
-    "q_markov_attribution",
-    "q_cart_abandonment",
-    "q_retention_cohort",
-    "q_user_lifecycle",
-    "q_cohort_ltv",
-    "q_pipe_syntax",
-    "q_lateral_topk",
-    "q_sql_scripting",
-    "q_execute_immediate",
-    "q_collation_group",
-    "q_recursive_date_spine",
-    "q_grouping_sets_distinct",
-    "q_string_agg",
-    "q_posexplode_tokens",
-    "q_array_hof",
-    "q_bit_funcs",
-    "q_hash_funcs",
-    "q_try_funcs",
-    "q_variant_parse",
-    "q_variant_nested",
-    "q_variant_invalid",
-    "q_url_funcs",
-    "q_eventstore_canonical",
-    "q_eventstore_user_filter",
-    "q_ngram_novelty",
-    "q_psi_drift",
-    "q_agg_bool",
-    "s_window_state_audit",
-    "s_session_state_audit",
-    "q_acf_multi",
-    "q_autocorr_lag1",
-    "q_anomaly_seasonal",
-    "q_holt_winters",
-    "q_holt_linear",
-    "q_seasonal_decompose",
-    "q_cusum_changepoint",
-    "q_interpolate_linear",
-    "q_theil_sen",
-    "q_cross_correlation",
-    "q_ewma",
-    "q_timeseries_resample",
-    "q_cep_pattern",
-    "q_udf_python",
-    "q_udf_pandas_norm",
-    "q_udf_arrow",
-    "q_udaf_apply_in_pandas",
-    "q_sql_udf",
-    "q_cogroup_enrich",
+    # ---- oldest green row: round 7 ----
     "q_udtf_first_seen",
-    "q_udtf_polymorphic",
-    "q_source_csv_roundtrip",
-    "q_source_json_roundtrip",
-    "q_source_orc_roundtrip",
-    "q_source_binaryfile",
-    "q_source_schema_evolution",
-    "q_source_corrupt_tolerant",
-    "q_sink_pydatasource_roundtrip",
-    "q_source_pushgen",
-    "s_source_pushgen_stream",
-    "s_foreachbatch_mv",
-    "q_string_funcs",
-    "q_date_funcs",
-    "q_math_funcs",
-    "q_array_funcs",
-    "q_map_funcs",
-    "q_json_funcs",
-    "q_source_pydatasource_pushdown",
-    "q_multimodal_media",
-    "q_multimodal_frames",
-    "q_multimodal_audio",
-    "q_embed_norm",
-    "q_embed_centroid",
-    "q_embed_quantize",
-    "q_embed_pq",
-    "q_group_kfold",
-    "q_temporal_split_embargo",
-    "q_sample_weighted",
-    "q_curriculum_interleave",
-    "s_upsert_latest",
-    "q_ann_recall",
-    "q_calibration_bins",
-    "q_confusion_matrix",
-    "q_mrr_eval",
-    "q_silhouette",
-    "q_cohen_kappa",
-    "q_ab_cuped",
-    "q_ab_sequential",
-    "q_ab_test_proportions",
-    "q_ab_heterogeneity",
-    "q_anova_oneway",
-    "q_benjamini_hochberg",
-    "q_benford",
-    "q_bootstrap_ci",
-    "q_chi_square",
-    "q_cramers_v",
-    "q_cronbach_alpha",
-    "q_effect_size",
-    "q_kendall_tau",
-    "q_mannwhitney",
-    "q_mann_kendall",
-    "q_permutation_test",
-    "q_runs_test",
-    "q_welch_ttest",
-    "q_kl_divergence",
-    "q_js_divergence",
-    "s_join_state_audit",
-    "q_agg_corr",
-    "q_agg_linreg",
-    "q_agg_mode",
-    "q_agg_skew_kurtosis",
-    "q_argmax",
-    "q_decontaminate",
-    "q_g_test",
-    "q_hill_tail_index",
-    "q_calibration_ece",
-    "q_label_noise_rate",
-    "q_rank_biased_overlap",
-    "q_join_asof_tolerance",
-    "q_block_bootstrap_ci",
-    "q_attribution_position_based",
-    "q_lsh_band_occupancy",
-    "q_ann_ivf_nprobe_sweep",
-    "q_dp_mean_laplace",
-    "q_twap_daily",
-    "q_neyman_allocation",
-    "q_zone_map_skip_eval",
-    "q_bpe_pair_stats",
-    "q_bpe_encode",
-    "q_dedup_simhash",
-    "q_dedup_segments",
-    "q_dedup_containment",
-    "q_dedup_semantic",
-    "q_dedup_exact",
-    "q_dedup_embed_cosine",
-    "q_sim_search",
-    "q_sim_search_ivf",
-    "q_sim_search_lsh",
-    "q_pii_scrub",
-    "q_quality_gopher",
-    "q_chunk_documents",
-    "q_train_test_split",
-    "q_text_stats",
-    "q_token_count",
-    "q_quality_score",
-    "q_lang_id",
-    "q_tfidf",
-    "q_tpch_q1",
-    "q_tpch_q2",
-    "q_tpch_q4",
-    "q_tpch_q5",
-    "q_tpch_q6",
-    "q_tpch_q7",
-    "q_tpch_q8",
-    "q_tpch_q9",
-    "q_tpch_q10",
-    "q_tpch_q11",
-    "q_tpch_q12",
-    "q_tpch_q13",
-    "q_tpch_q14",
-    "q_tpch_q15",
-    "q_tpch_q16",
-    "q_tpch_q17",
-    "q_tpch_q19",
-    "q_tpch_q20",
-    "q_tpch_q21",
-    "q_tpch_q22",
-    "q_join_bloom_prefilter",
-    "q_join_range_binned",
-    "q_cdc_apply",
-    "q_incremental_agg",
-    "q_skew_diagnosis",
-    "q_profile_table",
-    "q_graph_triangles",
-    "q_graph_degree_dist",
-    "q_sketch_hll",
-    "q_sketch_quantiles",
-    "q_sketch_cms",
-    "q_approx_topk",
-    "q_heavy_hitters",
-    "q_hll_merge_eval",
-    "q_k_anonymity",
-    "q_l_diversity",
-    "q_t_closeness",
-    "q_dp_count_laplace",
-    "q_pseudonymize",
-    "q_churn_hazard_weekly",
-    "q_classifier_prf1",
-    "q_ndcg_eval",
-    "q_sessionize",
-    "q_pivot",
-    "q_gini",
-    "q_pack_sequences",
-    "q_skyline",
-    "q_session_metrics",
-    "q_growth_accounting",
-    "q_log_loss_brier",
-    "q_agg_approx_distinct",
-    "q_markov_stationary",
-    "q_quantile_sketch_eval",
-    "q_join_asof_nearest",
-    "q_systematic_sample",
-    "q_window_count_if",
-    "q_session_depth_hist",
-    "q_order_gap_outliers",
-    "q_first_last_touch_compare",
-    "q_active_streak_top",
-    "q_schema_drift_audit",
-    "q_rolling_median",
-    "q_ema_crossover",
-    "q_keyword_extraction",
-    "q_token_cooccurrence_pmi",
-    "q_embedding_bucket_stats",
-    "q_cohort_matrix_triangle",
-    "q_supplier_balance_abc",
-    "q_robust_scaler",
-    "q_changepoint_cusum",
-    "q_dedup_threshold_sweep",
-    "q_mixture_temperature_sweep",
-    "q_embed_dim_variance",
 ]
 
 
 def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
-    queries: dict[str, QueryFn] = {}
-    oracle: dict[str, str] = {}
     for modname in _MODULES:
-        try:
-            mod = importlib.import_module(modname)
-        except Exception as exc:  # degrade, don't die
-            import sys
-
-            print(f"[registry] skipping {modname}: {exc}", file=sys.stderr)
-            continue
-        for name, fn in getattr(mod, "QUERIES", {}).items():
-            if name in queries:
-                raise ValueError(f"duplicate query name {name} in {modname}")
-            queries[name] = fn
-        oracle.update(getattr(mod, "ORACLE", {}))
-    ordered: dict[str, QueryFn] = {}
-    for name in _PRIORITY:
-        if name in queries:
-            ordered[name] = queries[name]
-    for name, fn in queries.items():
-        if name not in ordered:
-            ordered[name] = fn
-    return ordered, oracle
+        importlib.import_module(modname)
+    rank = {modname: i for i, modname in enumerate(_MODULES)}
+    rest = [name for name in _QUERIES if name not in _PRIORITY]
+    # stable sort: definition order survives within each module, however
+    # the modules happened to import each other
+    rest.sort(key=lambda name: rank[_QUERIES[name].__module__])
+    ordered = {name: _QUERIES[name] for name in _PRIORITY + rest}
+    return ordered, {name: _ORACLE[name] for name in ordered}

@@ -23,21 +23,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from keycloak_event_stream_spark.catalog import load_table
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
+from keycloak_event_stream_spark.registry import register as _q
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 def write_ndjson(df: DataFrame, path: str, compress: bool = True) -> None:

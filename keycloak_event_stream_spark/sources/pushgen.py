@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from keycloak_event_stream_spark.registry import register as _q
+
 try:  # Spark >= 4: Python DataSource API
     from pyspark.sql.datasource import (
         DataSource,
@@ -37,19 +39,6 @@ except ImportError:  # pragma: no cover - older Spark
     DataSourceReader = object  # type: ignore[assignment,misc]
     InputPartition = object  # type: ignore[assignment,misc]
     _HAVE_DATASOURCE = False
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 _TYPES = ["LOGIN", "LOGOUT", "REGISTER", "CODE_TO_TOKEN"]

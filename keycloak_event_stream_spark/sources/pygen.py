@@ -41,6 +41,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from keycloak_event_stream_spark.registry import register as _q
+
 try:  # Spark >= 4.1: Python DataSource API with filter pushdown
     from pyspark.sql.datasource import (
         DataSource,
@@ -61,19 +63,6 @@ except ImportError:  # pragma: no cover - older Spark
     DataSourceReader = object  # type: ignore[assignment,misc]
     InputPartition = object  # type: ignore[assignment,misc]
     _HAVE_PUSHDOWN = False
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # deterministic row recipe, replayed verbatim in the DuckDB oracle:

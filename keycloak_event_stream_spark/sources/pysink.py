@@ -30,6 +30,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from keycloak_event_stream_spark.registry import register as _q
+
 try:  # Spark >= 4: Python DataSource API
     from pyspark.sql.datasource import (
         DataSource,
@@ -43,19 +45,6 @@ except ImportError:  # pragma: no cover - older Spark
     DataSourceWriter = object  # type: ignore[assignment,misc]
     WriterCommitMessage = object  # type: ignore[assignment,misc]
     _HAVE_DATASOURCE = False
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 if _HAVE_DATASOURCE:

@@ -40,21 +40,9 @@ from pyspark.sql import functions as F
 
 from keycloak_event_stream_spark.catalog import table_path
 from keycloak_event_stream_spark.operators._exact import DEC, sql_dsum
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
+from keycloak_event_stream_spark.registry import register as _q
 
 _COUNTER = [0]
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 def read_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -155,12 +155,12 @@ def test_range_binned_join_avoids_bnlj(spark):
 
 
 def test_weighted_sample_is_deterministic_and_length_biased(spark):
-    from keycloak_event_stream_spark.llm.sampling import QUERIES
+    from keycloak_event_stream_spark.llm.sampling import q_sample_weighted
 
     from conftest import SF_DIR
 
-    a = {r.doc_id for r in QUERIES["q_sample_weighted"](spark, SF_DIR).collect()}
-    b = {r.doc_id for r in QUERIES["q_sample_weighted"](spark, SF_DIR).collect()}
+    a = {r.doc_id for r in q_sample_weighted(spark, SF_DIR).collect()}
+    b = {r.doc_id for r in q_sample_weighted(spark, SF_DIR).collect()}
     assert a == b and a  # pure function of the key
     from pyspark.sql import functions as F
 

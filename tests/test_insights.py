@@ -146,13 +146,13 @@ def test_dq_audit_clean_fixture(spark):
 
 
 def test_udf_arrow_matches_jvm_expressions(spark):
-    from keycloak_event_stream_spark.functions.udfs import QUERIES
+    from keycloak_event_stream_spark.functions import udfs
 
-    if "q_udf_arrow" not in QUERIES:  # older Spark without arrow_udf
+    if not hasattr(udfs, "q_udf_arrow"):  # older Spark without arrow_udf
         import pytest
 
         pytest.skip("arrow_udf unavailable")
-    got = QUERIES["q_udf_arrow"](spark, SF_DIR)
+    got = udfs.q_udf_arrow(spark, SF_DIR)
     d = load_table(spark, SF_DIR, "documents")
     want = d.select(
         "doc_id",
@@ -366,9 +366,9 @@ def test_percent_of_total_sums_to_one(spark):
 
 
 def test_dataset_card_facts(spark):
-    from keycloak_event_stream_spark.llm.textstats import QUERIES
+    from keycloak_event_stream_spark.llm.textstats import q_dataset_card
 
-    r = QUERIES["q_dataset_card"](spark, SF_DIR).collect()[0]
+    r = q_dataset_card(spark, SF_DIR).collect()[0]
     d = load_table(spark, SF_DIR, "documents")
     assert r.n_docs == d.count()
     assert 0 < r.n_unique_texts <= r.n_docs

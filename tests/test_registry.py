@@ -3,6 +3,7 @@ helpers."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from keycloak_event_stream_spark.operators._exact import davg, dsum
@@ -17,12 +18,24 @@ from keycloak_event_stream_spark.registry import collect
 ROWS_ONLY: set[str] = set()
 
 
-def test_registry_collects_without_errors(capsys):
+def test_registry_collects_without_errors():
     queries, oracle = collect()
-    err = capsys.readouterr().err
-    assert "skipping" not in err, f"broken module: {err}"
     assert len(queries) >= 50
     assert set(oracle) <= set(queries)
+
+
+def test_collect_fails_loudly_on_a_broken_module(monkeypatch):
+    """A module that cannot be imported fails collect() instead of
+    quietly shrinking the registry."""
+    from keycloak_event_stream_spark import registry
+
+    monkeypatch.setattr(
+        registry,
+        "_MODULES",
+        registry._MODULES + ["keycloak_event_stream_spark.no_such_module"],
+    )
+    with pytest.raises(ModuleNotFoundError):
+        collect()
 
 
 def test_every_query_is_oracle_checked_or_declared():
@@ -69,26 +82,18 @@ def test_priority_queries_register_first():
 
     queries, _ = collect()
     names = list(queries)
-    assert names[: len(_PRIORITY)] == _PRIORITY
+    assert len(_PRIORITY) == 50
+    assert names[:50] == _PRIORITY
     assert not set(_PRIORITY) - set(queries)
 
 
-def test_no_duplicate_query_names_within_a_module():
-    """registry.collect() raises on cross-module duplicates, but a
-    name registered twice in the SAME module silently overwrites the
-    first (dict assignment) — which is how a round-2 addition once
-    clobbered an existing operator. Scan the decorator sites."""
-    import glob
-    import os
-    import re
-    from collections import Counter
+def test_register_rejects_a_duplicate_name():
+    """A second registration of one name raises at import, whichever
+    module it comes from, and leaves the first entry in place."""
+    from keycloak_event_stream_spark.registry import register
 
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "keycloak_event_stream_spark",
-    )
-    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
-        src = open(path).read()
-        names = re.findall(r'@_q\(\s*\n?\s*"([^"]+)"', src)
-        dups = [n for n, c in Counter(names).items() if c > 1]
-        assert not dups, f"{path}: duplicate @_q registrations {dups}"
+    queries, oracle = collect()
+    name = next(iter(queries))
+    with pytest.raises(ValueError, match=f"duplicate query name {name}"):
+        register(name, "SELECT 1")(lambda spark, sf_dir: None)
+    assert collect() == (queries, oracle)

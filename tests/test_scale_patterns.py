@@ -6,7 +6,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from keycloak_event_stream_spark.catalog import load_table
-from keycloak_event_stream_spark.operators.scale_patterns import QUERIES
+from keycloak_event_stream_spark.operators.scale_patterns import (
+    q_cdc_apply,
+    q_incremental_agg,
+    q_join_bloom_prefilter,
+    q_join_salted_skew,
+    q_profile_table,
+)
 from tests.conftest import SF_DIR
 
 
@@ -17,7 +23,7 @@ def _plan(df) -> str:
 
 
 def test_bloom_prefilter_matches_plain_semi_join(spark):
-    got = QUERIES["q_join_bloom_prefilter"](spark, SF_DIR)
+    got = q_join_bloom_prefilter(spark, SF_DIR)
     c = load_table(spark, SF_DIR, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -29,14 +35,14 @@ def test_bloom_prefilter_matches_plain_semi_join(spark):
 
 
 def test_bloom_prefilter_digest_is_broadcast(spark):
-    plan = _plan(QUERIES["q_join_bloom_prefilter"](spark, SF_DIR))
+    plan = _plan(q_join_bloom_prefilter(spark, SF_DIR))
     # the coarse digest phase must be a broadcast, never a nested loop
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_salted_join_matches_plain(spark):
-    got = QUERIES["q_join_salted_skew"](spark, SF_DIR).collect()
+    got = q_join_salted_skew(spark, SF_DIR).collect()
     l = load_table(spark, SF_DIR, "lineitem")
     s = load_table(spark, SF_DIR, "supplier")
     want = (
@@ -57,7 +63,7 @@ def test_salted_join_matches_plain(spark):
 def test_profiler_reads_table_once(spark):
     import re
 
-    plan = _plan(QUERIES["q_profile_table"](spark, SF_DIR))
+    plan = _plan(q_profile_table(spark, SF_DIR))
     # formatted explain lists each operator in the tree AND in the
     # numbered details; count the unique detail headers
     scans = re.findall(r"\(\d+\) Scan parquet", plan)
@@ -69,7 +75,7 @@ def test_incremental_agg_empty_delta(spark):
     o = load_table(spark, SF_DIR, "orders")
     # fixture horizon ends 2001-08-01, so a 2002+ delta is empty: the
     # registered query's merged state must equal the direct rollup
-    got = QUERIES["q_incremental_agg"](spark, SF_DIR).collect()
+    got = q_incremental_agg(spark, SF_DIR).collect()
     want = (
         o.groupBy("o_custkey")
         .agg(
@@ -86,7 +92,7 @@ def test_incremental_agg_empty_delta(spark):
 
 def test_cdc_apply_tombstones_drop_keys(spark):
     """A user whose latest event is an error must be absent."""
-    out = QUERIES["q_cdc_apply"](spark, SF_DIR)
+    out = q_cdc_apply(spark, SF_DIR)
     ev = load_table(spark, SF_DIR, "events")
     from pyspark.sql.window import Window as W
 

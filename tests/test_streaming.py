@@ -774,7 +774,7 @@ def test_join_state_audit_matches_live_state_rows(spark, tmp_path):
     ops = q.lastProgress["stateOperators"]
     assert ops and ops[0]["operatorName"] == "symmetricHashJoin"
     live_rows = ops[0]["numRowsTotal"]
-    audit = SQ.QUERIES["s_join_state_audit"](spark, SF_DIR).collect()
+    audit = SQ.s_join_state_audit(spark, SF_DIR).collect()
     assert live_rows == sum(r.rows_held for r in audit)
     assert live_rows > 0  # non-vacuous: some state survives the replay
 
@@ -807,7 +807,7 @@ def test_window_state_audit_matches_live_state_rows(spark, tmp_path):
     ops = q.lastProgress["stateOperators"]
     assert ops and ops[0]["operatorName"] == "stateStoreSave"
     live_rows = ops[0]["numRowsTotal"]
-    audit = SQ.QUERIES["s_window_state_audit"](spark, SF_DIR).collect()
+    audit = SQ.s_window_state_audit(spark, SF_DIR).collect()
     assert live_rows == sum(r.groups_held for r in audit)
     assert live_rows > 0  # non-vacuous: some state survives the replay
 
@@ -840,7 +840,7 @@ def test_session_state_audit_matches_live_state_rows(spark, tmp_path):
     ops = q.lastProgress["stateOperators"]
     assert ops and ops[0]["operatorName"] == "sessionWindowStateStoreSaveExec"
     live_rows = ops[0]["numRowsTotal"]
-    audit = SQ.QUERIES["s_session_state_audit"](spark, SF_DIR).collect()
+    audit = SQ.s_session_state_audit(spark, SF_DIR).collect()
     assert live_rows == sum(r.sessions_held for r in audit)
     assert live_rows > 0  # non-vacuous: some state survives the replay
 
@@ -871,7 +871,7 @@ def test_dedup_state_audit_matches_live_state_rows(spark, tmp_path):
     ops = q.lastProgress["stateOperators"]
     assert ops and ops[0]["operatorName"] == "dedupe"
     live_rows = ops[0]["numRowsTotal"]
-    audit = SQ.QUERIES["s_dedup_state_audit"](spark, SF_DIR).collect()
+    audit = SQ.s_dedup_state_audit(spark, SF_DIR).collect()
     assert live_rows == sum(r.keys_held for r in audit)
     assert live_rows > 0  # non-vacuous: the fixture has repeated keys
 
@@ -968,7 +968,7 @@ def test_replay_scope_derives_width_and_restores_conf(spark):
     was = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     try:
-        out = sq.QUERIES["s_stream_dedup"](spark, SF_DIR)
+        out = sq.s_stream_dedup(spark, SF_DIR)
         got = {(r.user_id, r.event_type) for r in out.collect()}
         # conf restored to the caller's width the moment the run ends
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"

@@ -12,13 +12,10 @@ import re
 
 import pytest
 
-from keycloak_event_stream_spark.operators.relational_ext import (
-    QUERIES as EXT_QUERIES,
-)
-from keycloak_event_stream_spark.operators.tpch import QUERIES as TPCH_QUERIES
+from keycloak_event_stream_spark.registry import collect
 from tests.conftest import SF_DIR
 
-QUERIES = {**EXT_QUERIES, **TPCH_QUERIES}
+QUERIES = collect()[0]
 
 
 def _plan(df) -> str:

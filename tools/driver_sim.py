@@ -1,6 +1,6 @@
 """Naive driver simulation: ONE default-config session, no GC, no cache
 clearing between queries — the driver's own evaluation shape. Runs the
-first 50 _PRIORITY names against the DuckDB oracle.
+the 50 _PRIORITY names (the driver window) against the DuckDB oracle.
 
 Run it FROM /tmp (cd /tmp && python3 /root/repo/tools/driver_sim.py):
 local-mode Python workers inherit the driver cwd, so a repo-root run
@@ -23,7 +23,7 @@ for t in TABLE_NAMES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(SF, t)}')")
 
 queries, oracle = collect()
-names = _PRIORITY[:50]
+names = _PRIORITY
 
 def norm(v):
     if v is None: return ("N",)
