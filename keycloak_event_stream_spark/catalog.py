@@ -13,7 +13,9 @@ nothing in this module's callers would change.
 
 from __future__ import annotations
 
+import gc
 import os
+import threading
 from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -278,6 +280,138 @@ def conf_token_set(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, saved)
 
     return _restore
+
+
+class _Pins(threading.local):
+    """One thread's pins: ``query`` holds what its registered queries
+    pinned lazily (released at the thread's next outermost registered
+    call), ``scopes`` the open :func:`pin_scope` lists, innermost
+    last, and ``depth`` the registered-call nesting depth."""
+
+    def __init__(self) -> None:
+        self.query: list[DataFrame] = []
+        self.scopes: list[list[DataFrame]] = []
+        self.depth = 0
+
+
+_pins = _Pins()
+
+
+def pin(df: DataFrame, level=None) -> DataFrame:
+    """Persist ``df`` for the query that builds it and return it.
+
+    The pin belongs to the innermost open :func:`pin_scope`, which
+    releases it on exit; with no scope open it belongs to the calling
+    thread's current query and is released when that thread next
+    enters a registered query (``registry.register``) — after the
+    lazily returned result had its chance to execute."""
+    df = df.persist() if level is None else df.persist(level)
+    (_pins.scopes[-1] if _pins.scopes else _pins.query).append(df)
+    return df
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # the owning session may already be stopped
+
+
+@_contextmanager
+def pin_scope():
+    """Release every pin made inside the block on exit, including pins
+    made by nested registered calls. For eager queries: everything
+    the pins feed must be materialized before the block ends."""
+    scope: list[DataFrame] = []
+    _pins.scopes.append(scope)
+    try:
+        yield
+    finally:
+        _pins.scopes.pop()
+        for df in scope:
+            _unpersist(df)
+
+
+@_contextmanager
+def query_pins():
+    """Registered-call boundary (``registry.register``). The thread's
+    outermost call first releases the pins its earlier queries left,
+    except those still 'pending': a lazily returned plan that has not
+    executed yet may rely on its pin — a two-phase window re-sampling
+    its range layout on recompute returns wrong row numbers — so an
+    unfilled pin carries over to the next release. Nested calls
+    release nothing.
+
+    The outermost call also runs a full Python collection. py4j
+    handles sit in reference cycles, so a finished query's Dataset
+    handles — and through their executed plans its broadcast
+    relations, several MB each — stay live in the JVM until Python's
+    cyclic GC runs, which may be never between queries. Collecting
+    here frees the earlier queries' JVM objects at the next query."""
+    if _pins.depth == 0:
+        gc.collect()
+        held = []
+        for df in _pins.query:
+            if _persist_state(df) == "pending":
+                held.append(df)
+            else:
+                _unpersist(df)
+        _pins.query = held
+    _pins.depth += 1
+    try:
+        yield
+    finally:
+        _pins.depth -= 1
+
+
+_probe_failure_warned = False
+
+
+def _persist_state(df: DataFrame) -> str:
+    """'loaded' | 'pending' | 'gone' | 'unknown' for a pinned frame.
+
+    Two distinct failure modes both map to 'unknown' (releasable), but
+    only one is silent by design: a DEAD session means unpersist is a
+    no-op and releasing cannot break a live plan — quiet is correct; a
+    probe failure on a LIVE session means the py4j internals this
+    function reads (cacheManager / isCachedColumnBuffersLoaded) moved
+    in a newer Spark and release has degraded to ignoring whether the
+    consumer executed — the unexecuted-persist hazard the probe exists
+    to prevent — so that case emits a one-time RuntimeWarning instead
+    of passing as dead."""
+    global _probe_failure_warned
+    try:
+        # session-validity gate: reaching the shared state proves the
+        # JVM-side session is alive and reachable
+        cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    except Exception:
+        return "unknown"  # dead session: unpersist is a no-op there
+    try:
+        cd = cm.lookupCachedData(df._jdf)
+        if not cd.isDefined():
+            return "gone"
+        loaded = (
+            cd.get().cachedRepresentation().cacheBuilder()
+            .isCachedColumnBuffersLoaded()
+        )
+        return "loaded" if loaded else "pending"
+    except Exception as exc:
+        if not _probe_failure_warned:
+            import warnings
+
+            _probe_failure_warned = True
+            warnings.warn(
+                "pin materialization probe failed on a LIVE session "
+                f"({type(exc).__name__}) — the CacheManager internals "
+                "this Spark version exposes have likely moved. Pin "
+                "release no longer spares unexecuted plans: a two-phase "
+                "window executed after a later query may recompute "
+                "under a re-sampled range layout. Update _persist_state "
+                "for this Spark version.",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+        return "unknown"
 
 
 @_contextmanager

@@ -7,7 +7,9 @@ on an enabled flag defaulting to off (``isSupported``, :115-119).
 
 Same observable behavior here, minus the AWS client plumbing: a frozen
 dataclass, ``from_mapping`` with the warn-and-default numeric parsing,
-and a factory that returns ``None`` when the feature flag is off.
+and a factory that returns ``None`` when the feature flag is off. Only
+keys something reads are kept: the store is one root path (no stream
+or table names) and queries run synchronously (no poll budget).
 """
 
 from __future__ import annotations
@@ -22,15 +24,10 @@ log = logging.getLogger(__name__)
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """Typed analogue of the reference's 12 config keys."""
+    """Typed analogue of the reference's config keys that apply here."""
 
     enabled: bool = False  # isSupported gate; off by default (ref :115-119)
     store_root: str = "/tmp/keycloak-event-store"
-    user_events_name: str = "user-events"  # ref default stream/table names
-    admin_events_name: str = "admin-events"
-    query_timeout_s: float = 60.0  # poll 1000 ms x 60 attempts (ref :73-74)
-    lateness_hours: int = 1  # partition-pruning allowance (SURVEY Q4)
-    bucket_count: int = 16
     shuffle_partitions: int | None = None  # None -> session default
 
     @classmethod
@@ -48,8 +45,6 @@ class EngineConfig:
                     kwargs[f.name] = str(value).strip().lower() in (
                         "1", "true", "yes", "on",
                     )
-                elif f.type in ("float", float):
-                    kwargs[f.name] = float(value)
                 elif f.type.startswith("int") if isinstance(f.type, str) else f.type is int:
                     kwargs[f.name] = int(value)
                 else:

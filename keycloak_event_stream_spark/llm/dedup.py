@@ -34,6 +34,8 @@ from keycloak_event_stream_spark.catalog import (
     conf_token_set,
     footer_rows,
     load_table,
+    pin,
+    pin_scope,
     spread,
 )
 from keycloak_event_stream_spark.registry import register as _q
@@ -100,8 +102,7 @@ _LSH_BUCKET_CAP_DEFAULT = 512
 # the cap the disk-spillable pin turns 5-6 evaluations of the
 # scan->shingle chain into one (round-11 stage attribution), past it
 # the prior recompute-from-scan design applies unchanged.
-_SHINGLE_PIN_MAX_DOCS_CONF = "spark.kes.dedup.persistShinglesMaxDocs"
-_SHINGLE_PIN_MAX_DOCS_DEFAULT = 10_000_000
+_SHINGLE_PIN_MAX_DOCS = 10_000_000
 
 #: Audit DataFrame for the most recent q_dedup_near_minhash call: one
 #: row per (band, bkey, n) bucket the cap dropped. Derived from the
@@ -230,14 +231,6 @@ def band_keys(docs_df: DataFrame) -> DataFrame:
     )
 
 
-#: Frames the last `_clone_rep_pairs` call left persisted (clones and
-#: the rep band table). The two query consumers return LAZY plans over
-#: them, so they cannot release the pins themselves — but a caller
-#: that materializes its result inside the function (the intake eval)
-#: can and must, per the long-sweep heap-debris discipline.
-LAST_PREFIX_PINS: tuple[DataFrame, ...] = ()
-
-
 def _clone_rep_pairs(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -249,34 +242,20 @@ def _clone_rep_pairs(
     (doc_id, ckey) clone table, ``reps`` maps ckey -> rep_id (the
     group's min doc_id), and ``rep_pairs`` is the lazy
     (doc_a, doc_b, jaccard) pair table over representatives only.
-    The persisted frames (clones + the rep band table) are also posted
-    to :data:`LAST_PREFIX_PINS` so a caller that finishes its action
-    in-function can release them.
+    The persisted frames (clones, the rep band table and the shingle
+    table) are pins of the calling query (``catalog.pin``).
     ``q_dedup_near_minhash`` fans rep pairs out to the full member pair
     list (its output is genuinely quadratic in clone-group size);
     ``q_dedup_components`` instead runs label propagation on the rep
     graph and attaches members with one linear join — both consume
     this prefix unchanged, so the expensive candidate/verify plan is
     written once."""
-    # ADVICE r12: release the PREVIOUS call's pins before overwriting
-    # the handle — the two lazy consumers never release them, so
-    # without this each call orphans a persisted clone/band/shingle
-    # set in the CacheManager until clearCache or session end (the
-    # shingle table is text-sized, the largest pinned object here).
-    # At most one prefix's pins are ever live. The cost: when
+    # The pins outlive the lazy consumers' return and are released
+    # at the thread's next registered query. The cost: when
     # q_dedup_near_minhash and q_dedup_components run back to back,
     # the second no longer has its identical prefix subtree swapped
     # for the first one's filled cache by the CacheManager; it
-    # rebuilds the shingle/band prefix from the scan. Unpersist on a
-    # frame whose session has stopped raises; swallow — dead pins are
-    # gone.
-    global LAST_PREFIX_PINS
-    for pinned in LAST_PREFIX_PINS:
-        try:
-            pinned.unpersist()
-        except Exception:
-            pass
-    LAST_PREFIX_PINS = ()
+    # rebuilds the shingle/band prefix from the scan.
     d = spread(load_table(spark, sf_dir, "documents"))
     eligible = (
         d.withColumn("w", F.split("text", " "))
@@ -284,9 +263,7 @@ def _clone_rep_pairs(
         .select("doc_id", "text")
     )
     # clone table: doc -> distinct-text key; group representatives
-    clones = eligible.select(
-        "doc_id", F.md5("text").alias("ckey")
-    ).persist()
+    clones = pin(eligible.select("doc_id", F.md5("text").alias("ckey")))
     # n_members rides the SAME aggregate (zero extra shuffle): the
     # components fan-out needs group sizes, and computing them here
     # spares it a second full groupBy over the clone table.
@@ -310,20 +287,15 @@ def _clone_rep_pairs(
     # makes every consumer read one evaluation. The guard keeps the
     # 100 TB posture honest: shingle arrays are text-sized — caching
     # them corpus-wide would pin ~|corpus| bytes — so past
-    # spark.kes.dedup.persistShinglesMaxDocs (default 10M docs, i.e.
-    # tens of GB disk-backed) the pin drops away and the chain
-    # recomputes from the scan exactly as before (same plan, same
-    # results; the pin changes evaluation count only). Fixture and
-    # replica runs sit far under the cap.
+    # _SHINGLE_PIN_MAX_DOCS (10M docs, i.e. tens of GB disk-backed)
+    # the pin drops away and the chain recomputes from the scan
+    # exactly as before (same plan, same results; the pin changes
+    # evaluation count only). Fixture and replica runs sit far under
+    # the cap.
     from pyspark import StorageLevel
 
-    pin_shingles = footer_rows(sf_dir, "documents") <= int(
-        spark.conf.get(
-            _SHINGLE_PIN_MAX_DOCS_CONF, str(_SHINGLE_PIN_MAX_DOCS_DEFAULT)
-        )
-    )
-    if pin_shingles:
-        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
+    if footer_rows(sf_dir, "documents") <= _SHINGLE_PIN_MAX_DOCS:
+        docs = pin(docs, StorageLevel.MEMORY_AND_DISK)
     hashed = docs.select(
         "doc_id",
         *[F.expr(_spark_hash_arr(g)).alias(f"h{g}") for g in range(_N_GROUPS)],
@@ -341,7 +313,7 @@ def _clone_rep_pairs(
             "band", "bkey"
         ),
     )
-    bands = bands.persist()
+    bands = pin(bands)
     # bucket cap: drop over-occupied (band, bkey) buckets whole. The
     # oversized-bucket list is found by one groupBy over the persisted
     # band table and is tiny by construction (only buckets beyond the
@@ -386,9 +358,6 @@ def _clone_rep_pairs(
         .withColumn("jaccard", jaccard)
         .filter(F.col("jaccard") >= _JACCARD_MIN)
         .select("doc_a", "doc_b", "jaccard")
-    )
-    LAST_PREFIX_PINS = (
-        (clones, bands, docs) if pin_shingles else (clones, bands)
     )
     return clones, reps, rep_pairs
 
@@ -834,7 +803,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     off in the loop; see the inline note). DuckDB's recursive
     transitive closure is the oracle."""
     clones, reps, rep_pairs = _clone_rep_pairs(spark, sf_dir)
-    rp = rep_pairs.select("doc_a", "doc_b").persist()
+    rp = pin(rep_pairs.select("doc_a", "doc_b"))
     # materialize the expensive LSH subtree ONCE before it is referenced
     # twice below (edge union branch + node-derivation branch): two
     # concurrent stages over an unmaterialized persist RACE to fill the
@@ -934,7 +903,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             # count, not localCheckpoint: the checkpoint's
             # block-manager RDD blocks outlive clearCache() and
             # accumulate across a long sweep).
-            edges = edges.repartition(parts, "dst").persist()
+            edges = pin(edges.repartition(parts, "dst"))
             edges.count()
             labels = edges.filter(F.col("src") == F.col("dst")).select(
                 F.col("src").alias("id"), F.col("src").alias("component")
@@ -966,7 +935,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             # cache barrier still holds — each round reads its
             # predecessor exactly once thanks to the self-edges), and
             # the 1-row crossJoin is the usual scalar-broadcast shape.
-            labels = cur.persist()
+            labels = pin(cur)
             row = (
                 penult.agg(_sum.alias("s_prev"))
                 .crossJoin(labels.agg(_sum.alias("s_new")))
@@ -999,15 +968,8 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ckey", F.coalesce("component", "rep_id").alias("component")
         )
     )
-    out = clones.join(ckey_comp, "ckey").select("doc_id", "component")
-    # the loop-local cache entry is released; the returned lineage
-    # reads the still-cached clone and label tables, and can rebuild
-    # through the unpersisted subtrees if ever evicted
-    if bcast:
-        rp.unpersist()
-    else:
-        edges.unpersist()
-    return out
+    # the returned lineage reads the cached clone and label tables
+    return clones.join(ckey_comp, "ckey").select("doc_id", "component")
 
 
 _SEMDEDUP_TAU = 0.55
@@ -1139,21 +1101,19 @@ def q_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the _EVAL_CPU_* rationale), and the calibration scan is spread()
     # so the broadcast-nested-loop truth join streams from every core
     # regardless of shuffle width (~0.9 s warm). WHOLE body under the
-    # scope, eager checkpoint inside, docs persist released in the
-    # finally.
+    # scope, eager checkpoint inside, docs pin released on scope exit.
     n_cal = min(footer_rows(sf_dir, "documents"), 300)
     n_drive = n_cal * n_cal // 2 + n_cal * _EVAL_CPU_ROWS_PER_DOC
-    with bounded_eval_scope(spark, n_drive):
+    with bounded_eval_scope(spark, n_drive), pin_scope():
         d = spread(
             load_table(spark, sf_dir, "documents").filter(
                 F.col("doc_id") < 300
             )
         )
-        docs = (
+        docs = pin(
             d.withColumn("w", F.split("text", " "))
             .filter(F.size("w") >= _SHINGLE)
             .select("doc_id", F.expr(_SPARK_SHINGLES).alias("shingles"))
-            .persist()
         )
         a = docs.select(
             F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa")
@@ -1200,19 +1160,13 @@ def q_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         recall = F.when(F.col("n_true") == 0, F.lit(1.0)).otherwise(
             F.col("n_hit").cast("double") / F.col("n_true")
         )
-        # pin release in finally (r9 ADVICE: the success-path-only
-        # unpersist left the corpus-sized cache pinned after a failed
-        # or interrupted run — the q_lsh_cap_recall_eval pattern)
-        try:
-            return m.select(
-                "n_true",
-                "n_cand",
-                "n_hit",
-                precision.alias("precision"),
-                recall.alias("recall"),
-            ).localCheckpoint(eager=True)
-        finally:
-            docs.unpersist()
+        return m.select(
+            "n_true",
+            "n_cand",
+            "n_hit",
+            precision.alias("precision"),
+            recall.alias("recall"),
+        ).localCheckpoint(eager=True)
 
 
 @_q(
@@ -2013,27 +1967,22 @@ def q_lsh_cap_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus bounded per-pair aggregates. NOTE the eval intentionally runs
     UNCAPPED (it must see the pairs a cap would drop), so on a
     flooded 100 TB corpus it pays the quadratic bill the cap exists to
-    avoid — there, set spark.kes.dedup.recallEvalSampleMod = N to run
-    the identical measurement on the deterministic 1/N md5(text)
-    sample (default 1 = every doc, which is what the oracle replays;
-    recall is a ratio, so it is sample-stable)."""
+    avoid."""
     # Bounded-eval width (catalog.bounded_eval_scope, round 9; width
     # driver rewritten round 10): mixed class in the ABA probe
     # (17.0 s vanilla / 11.1 s at width 8, sf0.01) — the width half is
     # the band self-join + per-pair aggregates compiling at corpus
     # width; the rest is the UNCAPPED exact-jaccard verification this
-    # eval exists to pay (see the sample knob above). Driving width
+    # eval exists to pay. Driving width
     # off docs x bands landed at 1 at fixture scale and serialized
     # that verification onto one core (the r9 'CPU residual',
     # ~2.6 s warm); the driving count now measures the shingle-hash
     # volume (_EVAL_CPU_ROWS_PER_DOC rationale), putting the verify's
     # equi-joins at machine width (~1.3 s warm). WHOLE body under the
     # scope; the 4-row result materializes eagerly inside and the
-    # three persists release in the finally — previously they stayed
-    # pinned behind a lazily returned frame (the heap-debris class the
-    # round-8 q_lsh_intake_recall_eval fix removed elsewhere).
+    # three pins release on pin_scope exit.
     n_drive = footer_rows(sf_dir, "documents") * _EVAL_CPU_ROWS_PER_DOC
-    with bounded_eval_scope(spark, n_drive):
+    with bounded_eval_scope(spark, n_drive), pin_scope():
         return _lsh_cap_recall_eval_body(spark, sf_dir)
 
 
@@ -2054,20 +2003,10 @@ def _lsh_cap_recall_eval_body(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id", "text")
     )
-    sample_mod = int(
-        spark.conf.get("spark.kes.dedup.recallEvalSampleMod", "1")
-    )
-    if sample_mod > 1:
-        uniq = uniq.filter(
-            F.conv(F.substring(F.md5("text"), 1, 8), 16, 10)
-            .cast("bigint") % sample_mod
-            == 0
-        )
-    docs = (
+    docs = pin(
         uniq.withColumn("w", F.split("text", " "))
         .filter(F.size("w") >= _SHINGLE)
         .select("doc_id", F.expr(_SPARK_SHINGLES).alias("shingles"))
-        .persist()
     )
     hashed = docs.select(
         "doc_id",
@@ -2096,12 +2035,14 @@ def _lsh_cap_recall_eval_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bucket-level bill AND the per-pair min without re-joining
     from pyspark.sql import Window as _W
 
-    bands_n = bands.withColumn(
-        "n",
-        F.count(F.lit(1))
-        .over(_W.partitionBy("band", "bkey"))
-        .cast("bigint"),
-    ).persist()
+    bands_n = pin(
+        bands.withColumn(
+            "n",
+            F.count(F.lit(1))
+            .over(_W.partitionBy("band", "bkey"))
+            .cast("bigint"),
+        )
+    )
     bsz = bands_n.groupBy("band", "bkey").agg(F.min("n").alias("n"))
     a, b = bands_n.alias("a"), bands_n.alias("b")
     pair_min_bucket = (
@@ -2126,12 +2067,11 @@ def _lsh_cap_recall_eval_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     jaccard = F.size(F.array_intersect("sa", "sb")).cast("double") / F.size(
         F.array_union("sa", "sb")
     )
-    true_pairs = (
+    true_pairs = pin(
         pair_min_bucket.join(x, "doc_a")
         .join(y, "doc_b")
         .filter(jaccard >= _JACCARD_MIN)
         .select("doc_a", "doc_b", "min_bsz")
-        .persist()
     )
     caps = spark.createDataFrame(
         [(int(c),) for c in _EVAL_CAPS], "cap bigint"
@@ -2187,11 +2127,7 @@ def _lsh_cap_recall_eval_body(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cap")
     )
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        for cached in (docs, bands_n, true_pairs):
-            cached.unpersist()
+    return out.localCheckpoint(eager=True)
 
 
 def _lsh_intake_eval_oracle() -> str:
@@ -2280,7 +2216,6 @@ def q_lsh_intake_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     heap-debris class the one-JVM 500-query sweeps have OOMed on
     (round-8 fix; the returned DataFrame is a local 1-row frame, so
     downstream re-execution never recomputes the pipeline either)."""
-    global LAST_PREFIX_PINS
     # Bounded-eval width (catalog.bounded_eval_scope): the r8 ABA
     # probe (BASELINE.md "measured r9 perf queue") read this eval
     # at 9.6 s vanilla sf0.01 — 'mixed' class: the batch half (band
@@ -2292,26 +2227,25 @@ def q_lsh_intake_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already inside the function. Width drives off band rows
     # (_B bands per eligible doc).
     n_drive = footer_rows(sf_dir, "documents") * _B
-    with bounded_eval_scope(spark, n_drive):
+    with bounded_eval_scope(spark, n_drive), pin_scope():
         d = spread(load_table(spark, sf_dir, "documents"))
         eligible = (
             d.withColumn("w", F.split("text", " "))
             .filter(F.size("w") >= _SHINGLE)
             .select("doc_id", "text")
         )
-        bands = band_keys(eligible).persist()
+        bands = pin(band_keys(eligible))
         bucket_min = bands.groupBy("band", "bkey").agg(
             F.min("doc_id").alias("min_doc")
         )
-        dropped = (
+        dropped = pin(
             bands.join(bucket_min, ["band", "bkey"])
             .filter(F.col("doc_id") > F.col("min_doc"))
             .select("doc_id")
             .distinct()
-            .persist()
         )
         admitted = eligible.select("doc_id").join(dropped, "doc_id", "left_anti")
-        tp = q_dedup_near_minhash(spark, sf_dir).select("doc_a", "doc_b").persist()
+        tp = pin(q_dedup_near_minhash(spark, sf_dir).select("doc_a", "doc_b"))
         contaminated = (
             tp.join(admitted.withColumnRenamed("doc_id", "doc_a"), "doc_a", "semi")
             .join(admitted.withColumnRenamed("doc_id", "doc_b"), "doc_b", "semi")
@@ -2356,16 +2290,13 @@ def q_lsh_intake_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         )
-        # one action for all five scalars, then release the caches: the
-        # crossJoin-of-aggregates plan is a single job, and the 1-row
-        # collect is API-terminal by construction (this query IS a scalar
-        # report), not a distributed operator leaking to the driver. The
-        # release covers the three local pins AND the clone/band tables
-        # the nested q_dedup_near_minhash's shared prefix persisted
-        # (LAST_PREFIX_PINS) — nothing corpus-sized stays pinned behind
-        # the returned local 1-row frame.
+        # one action for all five scalars; pin_scope exit then releases
+        # the caches: the crossJoin-of-aggregates plan is a single job,
+        # and the 1-row collect is API-terminal by construction (this
+        # query IS a scalar report), not a distributed operator leaking
+        # to the driver. The release covers the three local pins AND the
+        # clone/band/shingle tables the nested q_dedup_near_minhash's
+        # shared prefix pinned — nothing corpus-sized stays pinned
+        # behind the returned local 1-row frame.
         rows = combined.collect()
-        for cached in (bands, dropped, tp, *LAST_PREFIX_PINS):
-            cached.unpersist()
-        LAST_PREFIX_PINS = ()
         return spark.createDataFrame(rows, combined.schema)

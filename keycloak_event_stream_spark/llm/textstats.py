@@ -20,6 +20,8 @@ from keycloak_event_stream_spark.catalog import (
     bounded_eval_scope,
     footer_rows,
     load_table,
+    pin,
+    pin_scope,
     spread,
 )
 from keycloak_event_stream_spark.operators._exact import davg, sql_davg
@@ -1513,7 +1515,7 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    cells = cells.persist()
+    cells = pin(cells)
     stot = cells.groupBy("source").agg(F.sum("c").cast("bigint").alias("t"))
     gw = cells.groupBy("w").agg(F.sum("c").cast("bigint").alias("gc"))
     gtot = gw.agg(F.sum("gc").cast("bigint").alias("g"))
@@ -2136,7 +2138,7 @@ def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = toks.groupBy("doc_id", "w").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
-    tf = tf.persist()
+    tf = pin(tf)
     df = tf.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     nd = tf.agg(F.countDistinct("doc_id").cast("bigint").alias("n"))
     wts = (
@@ -2153,7 +2155,7 @@ def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("wt"),
         )
     )
-    wts = wts.persist()
+    wts = pin(wts)
     norms = wts.groupBy("doc_id").agg(
         F.sqrt(
             F.sum(
@@ -2239,7 +2241,7 @@ def q_lang_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     lt = d.select(
         "lang", F.explode(F.split(F.col("text"), " ")).alias("w")
     ).distinct()
-    lt = lt.persist()
+    lt = pin(lt)
     sizes = lt.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("v")
     )
@@ -2511,7 +2513,7 @@ def q_shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # physical plan eagerly at call time, so pins created outside the
     # scope would keep corpus width forever.
     n_drive = footer_rows(sf_dir, "documents") * 3 * _EST_WORDS_PER_DOC
-    with bounded_eval_scope(spark, n_drive):
+    with bounded_eval_scope(spark, n_drive), pin_scope():
         d = spread(load_table(spark, sf_dir, "documents"))
         words = d.select("doc_id", F.split("text", " ").alias("w"))
         frames = []
@@ -2531,7 +2533,7 @@ def q_shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).distinct()
             frames.append(sh)
         shingles = frames[0].unionByName(frames[1]).unionByName(frames[2])
-        shingles = shingles.persist()
+        shingles = pin(shingles)
         a = shingles.select("k", F.col("doc_id").alias("doc_a"), "sh")
         b = shingles.select("k", F.col("doc_id").alias("doc_b"), "sh")
         cand = (
@@ -2540,7 +2542,7 @@ def q_shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("k", "doc_a", "doc_b")
             .distinct()
         )
-        cand = cand.persist()
+        cand = pin(cand)
         pair_stats = cand.groupBy("k").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_candidate_pairs")
         )
@@ -2569,12 +2571,7 @@ def q_shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("k")
         )
-        try:
-            out = table.localCheckpoint(eager=True)
-        finally:
-            shingles.unpersist()
-            cand.unpersist()
-    return out
+        return table.localCheckpoint(eager=True)
 
 
 @_q(

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from keycloak_event_stream_spark.catalog import load_table, spread
+from keycloak_event_stream_spark.catalog import load_table, pin, spread
 from keycloak_event_stream_spark.registry import register as _q
 
 # Private-use sentinels standing in for the merged symbol of each
@@ -142,7 +142,7 @@ def q_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    vocab = vocab.persist()
+    vocab = pin(vocab)
 
     t1 = _spark_top(_spark_pairs(vocab))
     # broadcast the 1-row winner; merge it atomically for iteration 2
@@ -244,7 +244,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = doc_words.groupBy("w").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    vocab = vocab.persist()
+    vocab = pin(vocab)
     t1 = _spark_top(_spark_pairs(vocab))
     v2 = vocab.crossJoin(
         F.broadcast(t1.select(F.concat("l", "r").alias("m1")))

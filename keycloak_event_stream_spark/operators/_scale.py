@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from keycloak_event_stream_spark.catalog import pin
+
 __all__ = [
     "two_phase_window",
     "with_totals",
@@ -41,147 +43,6 @@ __all__ = [
 ]
 
 _PID = "_tp_pid"
-
-# Bounded pool for the persisted range subtrees. Every
-# two_phase_window call persists its ranged layout (see the PIN
-# comment below); without a release, a long-lived session composing
-# many two-phase operators accumulates one CacheManager entry per
-# call. Each new call retires old entries beyond
-# spark.kes.twoPhase.cachePool (default 16).
-#
-# Retirement is MATERIALIZATION-AWARE (r5 ADVICE: blind FIFO could
-# unpersist a correctness-critical persist while its two-phase
-# DataFrame was still unexecuted — on later execution, with the cache
-# gone, the offs and main branches can read different re-sampled
-# spark_partition_id layouts unless ReuseExchange happens to hold,
-# silently duplicating/missing global row numbers). An entry is
-# retired only once the CacheManager reports its column buffers
-# LOADED (the consumer executed — the pin already did its job; a
-# recompute after that re-reads one materialization per execution
-# through ReuseExchange in the same plan) or the entry is GONE from
-# the CacheManager (clearCache etc. — nothing left to lose). Entries
-# still PENDING are skipped; if pending entries alone push the pool
-# past 4x the limit (many two-phase plans built and never executed —
-# no real flow does this), the oldest is force-retired with a
-# RuntimeWarning naming the hazard so a wrong-results scenario is
-# diagnosable.
-_CACHE_POOL_CONF = "spark.kes.twoPhase.cachePool"
-_CACHE_POOL_DEFAULT = 16
-_cache_pool: list[DataFrame] = []
-# The pool is process-global and may be touched from several threads
-# (e.g. two SparkSessions driven by concurrent user threads — the r6
-# verdict's last unguarded concurrency edge). All append/retire
-# mutations run under this lock; the per-entry CacheManager probes and
-# unpersist calls stay inside it too, so a retirement scan never races
-# an append into reading a half-updated list. The lock bounds only
-# driver-side bookkeeping (microseconds per call) — no executor work
-# happens under it.
-import threading as _threading
-
-_cache_pool_lock = _threading.Lock()
-
-
-_probe_failure_warned = False
-
-
-def _persist_state(df: DataFrame) -> str:
-    """'loaded' | 'pending' | 'gone' | 'unknown' for a pooled persist.
-
-    Two distinct failure modes both map to 'unknown' (retirable), but
-    only one is silent by design (r6 ADVICE): a DEAD session means
-    unpersist is a no-op and retiring cannot break a live plan — quiet
-    is correct; a probe failure on a LIVE session means the py4j
-    internals this function reads (cacheManager /
-    isCachedColumnBuffersLoaded) moved in a newer Spark and retirement
-    has degraded to blind FIFO — the exact unexecuted-persist hazard
-    the materialization-aware pool exists to prevent — so that case
-    emits a one-time RuntimeWarning instead of passing as dead."""
-    global _probe_failure_warned
-    try:
-        # session-validity gate: reaching the shared state proves the
-        # JVM-side session is alive and reachable
-        cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
-    except Exception:
-        return "unknown"  # dead session: unpersist is a no-op there
-    try:
-        cd = cm.lookupCachedData(df._jdf)
-        if not cd.isDefined():
-            return "gone"
-        loaded = (
-            cd.get().cachedRepresentation().cacheBuilder()
-            .isCachedColumnBuffersLoaded()
-        )
-        return "loaded" if loaded else "pending"
-    except Exception as exc:
-        if not _probe_failure_warned:
-            import warnings
-
-            _probe_failure_warned = True
-            warnings.warn(
-                "two_phase cache-pool materialization probe failed on a "
-                f"LIVE session ({type(exc).__name__}) — the CacheManager "
-                "internals this Spark version exposes have likely moved. "
-                "Pool retirement degrades to blind FIFO: an unexecuted "
-                "two-phase persist may be retired early and recompute "
-                "under a re-sampled range layout. Update _persist_state "
-                "for this Spark version.",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-        return "unknown"
-
-
-def _pool_persist(ranged: DataFrame) -> DataFrame:
-    import warnings
-
-    ranged = ranged.persist()
-    try:
-        limit = int(
-            ranged.sparkSession.conf.get(
-                _CACHE_POOL_CONF, str(_CACHE_POOL_DEFAULT)
-            )
-        )
-    except ValueError:
-        limit = _CACHE_POOL_DEFAULT
-    limit = max(limit, 1)
-    with _cache_pool_lock:
-        return _pool_admit_locked(ranged, limit, warnings)
-
-
-def _pool_admit_locked(ranged: DataFrame, limit: int, warnings) -> DataFrame:
-    _cache_pool.append(ranged)
-    while len(_cache_pool) > limit:
-        victim = None
-        forced = False
-        for i, old in enumerate(_cache_pool[:-1]):  # never the new entry
-            state = _persist_state(old)
-            if state in ("loaded", "gone", "unknown"):
-                # unknown = dead/changed session: unpersist is a no-op
-                # there, retiring cannot break a live plan
-                victim = i
-                break
-        if victim is None:
-            if len(_cache_pool) <= limit * 4:
-                break  # hold pending entries rather than risk results
-            victim, forced = 0, True
-        old = _cache_pool.pop(victim)
-        if forced:
-            warnings.warn(
-                "two_phase cache pool exceeded 4x "
-                f"{_CACHE_POOL_CONF}={limit} with only UNEXECUTED "
-                "entries; force-retiring the oldest. If that "
-                "DataFrame is executed later, its global row numbers "
-                "rely on ReuseExchange materializing the range "
-                "shuffle once — raise the pool conf if you hold many "
-                "unexecuted two-phase plans.",
-                RuntimeWarning,
-                stacklevel=4,
-            )
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # session of the old entry may already be gone
-    return ranged
 
 
 def _num_partitions(df: DataFrame, k: int | None) -> int:
@@ -276,9 +137,9 @@ def two_phase_window(
     # layout (observed: duplicated/missing global row numbers in
     # q_systematic_sample). persist() makes both branches read one
     # materialization; the footprint is the same data the shuffle
-    # already wrote, spill-backed. The persist is pooled: old entries
-    # retire FIFO once the pool exceeds its bound (see _pool_persist).
-    ranged = _pool_persist(
+    # already wrote, spill-backed. The pin lives until the calling
+    # thread's next registered query finds it filled (catalog.pin).
+    ranged = pin(
         df.repartitionByRange(k, *range_cols).withColumn(
             _PID, F.spark_partition_id()
         )

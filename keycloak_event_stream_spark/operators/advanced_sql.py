@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from keycloak_event_stream_spark.catalog import load_table
+from keycloak_event_stream_spark.catalog import conf_token_set, load_table
 from keycloak_event_stream_spark.registry import register as _q
 
 
@@ -342,27 +342,34 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     same power spine — the scripted and set-based programs must agree
     exactly. At 100 TB each iteration's count would run over the same
     pre-aggregated extract, not the raw fact table.
+
+    The script runs eagerly inside ``spark.sql`` and returns a local
+    relation, so scripting is enabled only for that call and the
+    session conf is restored before the query returns.
     """
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "_script_orders"
     )
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE thr BIGINT DEFAULT 1;
-          DECLARE n_above BIGINT DEFAULT 0;
-          SET n_above = (SELECT count(*) FROM _script_orders
-                         WHERE o_totalprice > thr);
-          WHILE n_above >= 100 DO
-            SET thr = thr * 2;
-            SET n_above = (SELECT count(*) FROM _script_orders
-                           WHERE o_totalprice > thr);
-          END WHILE;
-          SELECT thr AS threshold, n_above;
-        END
-        """
-    )
+    restore = conf_token_set(spark, "spark.sql.scripting.enabled", "true")
+    try:
+        return spark.sql(
+            """
+            BEGIN
+              DECLARE thr BIGINT DEFAULT 1;
+              DECLARE n_above BIGINT DEFAULT 0;
+              SET n_above = (SELECT count(*) FROM _script_orders
+                             WHERE o_totalprice > thr);
+              WHILE n_above >= 100 DO
+                SET thr = thr * 2;
+                SET n_above = (SELECT count(*) FROM _script_orders
+                               WHERE o_totalprice > thr);
+              END WHILE;
+              SELECT thr AS threshold, n_above;
+            END
+            """
+        )
+    finally:
+        restore()
 
 
 @_q(

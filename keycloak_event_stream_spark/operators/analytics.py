@@ -23,6 +23,8 @@ from keycloak_event_stream_spark.catalog import (
     bounded_eval_scope,
     footer_rows,
     load_table,
+    pin,
+    pin_scope,
     spread,
 )
 from keycloak_event_stream_spark.operators._scale import (
@@ -561,7 +563,7 @@ def q_ts_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.01 for a 20-row result, ~2.5 s at input-derived width
     # (ABA probe; BASELINE.md "Round 9 - width scope, third wave").
     # WHOLE body under the scope, eager localCheckpoint inside.
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "events")):
+    with bounded_eval_scope(spark, footer_rows(sf_dir, "events")), pin_scope():
         ev = spread(load_table(spark, sf_dir, "events"))
         day = F.date_trunc("day", F.col("ts"))
         daily = ev.groupBy("user_id", day.alias("day")).agg(
@@ -572,12 +574,7 @@ def q_ts_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # one materialization of the cell matrix feeds bounds, the user
         # top-k and the dense grid: the raw table is scanned exactly once
-        daily = daily.persist()
-        daily_pin = daily  # rebound below; release in finally (r9 ADVICE)
-        # ADVICE r12: ALL plan construction runs inside the try so a
-        # failure anywhere after the persist still releases the pin
-        # for the session.
-        #
+        daily = pin(daily)
         # Round-12 (closes the r11 verdict's posture question): the
         # round-11 pin-materializing daily.count() is REVERTED on
         # measurement. The at-scale claim was that AQE's concurrent
@@ -590,70 +587,67 @@ def q_ts_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pass: interleaved A/B at 10x read 3.16 s min WITH the count
         # vs 2.87 s WITHOUT (runMs 78.4k vs 66.3k). The dedup prefix
         # keeps its count — its race was observed; this one never was.
-        try:
-            bounds = daily.agg(
-                F.min("day").alias("lo"),
-                F.max("day").alias("hi"),
+        bounds = daily.agg(
+            F.min("day").alias("lo"),
+            F.max("day").alias("hi"),
+        )
+        spine = bounds.select(
+            F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("day")
+        )
+        # candidate selection before the quadratic stage: the 300 most
+        # active users (deterministic tiebreak) — the same pruning a
+        # production similarity search does with a coarse cluster/recency
+        # key so the pairwise cost is bounded regardless of corpus size
+        users = (
+            daily.groupBy("user_id")
+            .agg(F.sum("n_cell").alias("n_ev"))
+            .orderBy(F.col("n_ev").desc(), "user_id")
+            .limit(300)
+            .select("user_id")
+        )
+        daily = daily.drop("n_cell")
+        dense = (
+            users.crossJoin(F.broadcast(spine))
+            .join(daily, ["user_id", "day"], "left")
+            .withColumn(
+                "v", F.coalesce(F.col("v"), F.lit(0).cast("decimal(18,2)"))
             )
-            spine = bounds.select(
-                F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("day")
+        )
+        mom = dense.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("v").cast("double").alias("s1"),
+            F.sum(F.col("v") * F.col("v")).cast("double").alias("s2"),
+        )
+        n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
+        var = (s2 - s1 * s1 / n) / n
+        z = (
+            dense.join(mom, "user_id")
+            .filter((s2 - s1 * s1 / n) > 0)
+            .withColumn(
+                "z", (F.col("v").cast("double") - s1 / n) / F.sqrt(var)
             )
-            # candidate selection before the quadratic stage: the 300 most
-            # active users (deterministic tiebreak) — the same pruning a
-            # production similarity search does with a coarse cluster/recency
-            # key so the pairwise cost is bounded regardless of corpus size
-            users = (
-                daily.groupBy("user_id")
-                .agg(F.sum("n_cell").alias("n_ev"))
-                .orderBy(F.col("n_ev").desc(), "user_id")
-                .limit(300)
-                .select("user_id")
+            .groupBy("user_id")
+            .agg(
+                F.transform(
+                    F.sort_array(
+                        F.collect_list(F.struct(F.col("day"), F.col("z")))
+                    ),
+                    lambda s: s.z,
+                ).alias("zs")
             )
-            daily = daily.drop("n_cell")
-            dense = (
-                users.crossJoin(F.broadcast(spine))
-                .join(daily, ["user_id", "day"], "left")
-                .withColumn(
-                    "v", F.coalesce(F.col("v"), F.lit(0).cast("decimal(18,2)"))
-                )
-            )
-            mom = dense.groupBy("user_id").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("v").cast("double").alias("s1"),
-                F.sum(F.col("v") * F.col("v")).cast("double").alias("s2"),
-            )
-            n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
-            var = (s2 - s1 * s1 / n) / n
-            z = (
-                dense.join(mom, "user_id")
-                .filter((s2 - s1 * s1 / n) > 0)
-                .withColumn(
-                    "z", (F.col("v").cast("double") - s1 / n) / F.sqrt(var)
-                )
-                .groupBy("user_id")
-                .agg(
-                    F.transform(
-                        F.sort_array(
-                            F.collect_list(F.struct(F.col("day"), F.col("z")))
-                        ),
-                        lambda s: s.z,
-                    ).alias("zs")
-                )
-            )
-            a = z.select(F.col("user_id").alias("user_a"), F.col("zs").alias("a_zs"))
-            b = z.select(F.col("user_id").alias("user_b"), F.col("zs").alias("b_zs"))
-            dist = F.expr(
-                "sqrt(aggregate(zip_with(a_zs, b_zs, (x, y) -> (x - y) * (x - y)), "
-                "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
-            )
-            return (
-                a.join(b, F.col("user_a") < F.col("user_b"))
-                .select("user_a", "user_b", dist.alias("zdist"))
-                .orderBy("zdist", "user_a", "user_b")
-                .limit(20)
-            ).localCheckpoint(eager=True)
-        finally:
-            daily_pin.unpersist()
+        )
+        a = z.select(F.col("user_id").alias("user_a"), F.col("zs").alias("a_zs"))
+        b = z.select(F.col("user_id").alias("user_b"), F.col("zs").alias("b_zs"))
+        dist = F.expr(
+            "sqrt(aggregate(zip_with(a_zs, b_zs, (x, y) -> (x - y) * (x - y)), "
+            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
+        )
+        return (
+            a.join(b, F.col("user_a") < F.col("user_b"))
+            .select("user_a", "user_b", dist.alias("zdist"))
+            .orderBy("zdist", "user_a", "user_b")
+            .limit(20)
+        ).localCheckpoint(eager=True)
 
 
 @_q(
@@ -1446,12 +1440,12 @@ def q_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.01 for a 30-row result, ~1.1 s at input-derived width
     # (ABA probe; BASELINE.md "Round 9 - width scope, third wave").
     # WHOLE body under the scope, eager localCheckpoint inside.
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "events")):
+    with bounded_eval_scope(spark, footer_rows(sf_dir, "events")), pin_scope():
         ev = load_table(spark, sf_dir, "events")
         ud = ev.select(
             "user_id", F.date_trunc("day", F.col("ts")).cast("date").alias("day")
         ).distinct()
-        ud = ud.persist()
+        ud = pin(ud)
         bounds = ud.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
         spine = bounds.select(
             F.explode(
@@ -1472,21 +1466,18 @@ def q_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("day")
             .agg(F.countDistinct("user_id").cast("bigint").alias("mau"))
         )
-        try:
-            return (
-                mau.join(dau, "day", "left")
-                .select(
-                    "day",
-                    F.coalesce("dau", F.lit(0)).cast("bigint").alias("dau"),
-                    "mau",
-                    (
-                        F.coalesce("dau", F.lit(0)).cast("double") / F.col("mau")
-                    ).alias("stickiness"),
-                )
-                .orderBy("day")
-            ).localCheckpoint(eager=True)
-        finally:
-            ud.unpersist()  # pin release (r9 ADVICE); output is eager
+        return (
+            mau.join(dau, "day", "left")
+            .select(
+                "day",
+                F.coalesce("dau", F.lit(0)).cast("bigint").alias("dau"),
+                "mau",
+                (
+                    F.coalesce("dau", F.lit(0)).cast("double") / F.col("mau")
+                ).alias("stickiness"),
+            )
+            .orderBy("day")
+        ).localCheckpoint(eager=True)
 
 
 @_q(
@@ -1865,7 +1856,7 @@ def q_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
     ).distinct()
-    ud = ud.persist()
+    ud = pin(ud)
     first_day = ud.groupBy("user_id").agg(F.min("day").alias("f"))
     j = ud.join(first_day, "user_id")
     return (
@@ -2017,7 +2008,7 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("week"),
     ).distinct()
-    uw = uw.persist()
+    uw = pin(uw)
     firsts = uw.groupBy("user_id").agg(F.min("week").alias("f"))
     prev = uw.select(
         "user_id", (F.col("week") + 1).alias("week"), F.lit(1).alias("wp")
@@ -2435,7 +2426,7 @@ def q_order_gap_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("g").isNotNull())
     )
-    gaps = gaps.persist()
+    gaps = pin(gaps)
     m = gaps.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("g").cast("bigint").alias("s1"),
@@ -2588,7 +2579,7 @@ def q_first_last_touch_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min_by("event_type", "ord_key").alias("first_touch"),
         F.max_by("event_type", "ord_key").alias("last_touch"),
     )
-    credits = credits.persist()
+    credits = pin(credits)
     f = credits.groupBy(F.col("first_touch").alias("channel")).agg(
         F.count(F.lit(1)).cast("bigint").alias("first_credits")
     )
@@ -2714,7 +2705,7 @@ def q_cohort_matrix_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("week"),
     ).distinct()
-    uw = uw.persist()
+    uw = pin(uw)
     cohorts = uw.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
     matrix = (
         uw.join(cohorts, "user_id")
@@ -2893,7 +2884,7 @@ def q_market_share_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum(cents).cast("bigint").alias("cents"))
     )
-    rev = rev.persist()
+    rev = pin(rev)
     tot = rev.groupBy("yr").agg(F.sum("cents").cast("bigint").alias("yr_cents"))
     shares = rev.join(F.broadcast(tot), "yr").select(
         "nation",
@@ -3422,14 +3413,14 @@ def q_retention_curve_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("week"),
     ).distinct()
-    uw = uw.persist()
+    uw = pin(uw)
     cohorts = uw.groupBy("user_id").agg(F.min("week").alias("cw"))
     cells = (
         uw.join(cohorts, "user_id")
         .groupBy((F.col("week") - F.col("cw")).alias("age"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("active"))
     )
-    cells = cells.persist()
+    cells = pin(cells)
     base = cells.filter(F.col("age") == 0).select(
         F.col("active").alias("a0")
     )
@@ -3528,7 +3519,7 @@ def q_churn_hazard_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("week"),
     ).distinct()
-    uw = uw.persist()
+    uw = pin(uw)
     spans = uw.groupBy("user_id").agg(
         F.min("week").alias("first_w"), F.max("week").alias("last_w")
     )

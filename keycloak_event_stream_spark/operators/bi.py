@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from keycloak_event_stream_spark.catalog import load_table, spread
+from keycloak_event_stream_spark.catalog import load_table, pin, spread
 from keycloak_event_stream_spark.operators._scale import (
     exact_ntile,
     two_phase_window,
@@ -982,7 +982,7 @@ def q_catalog_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey",
         F.date_trunc("month", "o_orderdate").cast("date").alias("month"),
     )
-    base = base.persist()
+    base = pin(base)
     first_seen = base.groupBy("l_partkey").agg(F.min("month").alias("fm"))
     monthly = (
         base.join(first_seen, "l_partkey")

@@ -4,8 +4,10 @@ Complements the connected-components label propagation in
 :mod:`..llm.dedup` with PageRank — the canonical fixed-point iteration.
 The reference computes nothing iterative (SURVEY.md §2.2); this is
 north-star engine surface demonstrating the Spark idiom for iterative
-algorithms: a driver ``for`` loop over joins with per-iteration
-``localCheckpoint`` lineage truncation, edges/degrees persisted once.
+algorithms: a driver ``for`` loop over joins with edges/degrees
+persisted once. HITS, k-core and BFS run eagerly and truncate lineage
+with a ``localCheckpoint`` every round; PageRank checkpoints only its
+seed and returns one lazy plan over its five rounds.
 
 Exactness across engines (the whole point of the oracle check): each
 iteration's per-edge contribution ``r/deg`` is rounded to 6 decimals,
@@ -27,6 +29,8 @@ from keycloak_event_stream_spark.catalog import (
     conf_token_set,
     footer_rows,
     load_table,
+    pin,
+    pin_scope,
     spread,
 )
 from keycloak_event_stream_spark.operators._exact import DEC
@@ -177,10 +181,11 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer<->supplier trade graph derived from orders x lineitem;
     top-50 nodes. The Spark iterative idiom: edges+degrees computed
     once and persisted, the driver loop re-joins only the rank vector
-    (|nodes| rows — the small, shrinking state), and localCheckpoint
-    truncates lineage so the plan stays O(1) deep instead of growing
-    5 joins tall. Symmetric edges mean no dangling-mass correction is
-    needed and every node receives inbound mass each step. The rank
+    (|nodes| rows — the small, shrinking state). Only the seed rank
+    vector is localCheckpoint'ed: the loop builds one lazy plan five
+    rank joins tall, which the caller executes. Symmetric edges mean
+    no dangling-mass correction is needed and every node receives
+    inbound mass each step. The rank
     vector broadcasts into the edge join while |nodes| is at or under
     spark.kes.graph.broadcastMaxNodes (size-guarded — see _use_broadcast);
     above the limit the hint drops away and the per-iteration join
@@ -193,7 +198,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey", "l_suppkey")
         .distinct()
     )
-    pairs = pairs.persist()
+    pairs = pin(pairs)
     c_node = F.concat(F.lit("c"), F.col("o_custkey"))
     s_node = F.concat(F.lit("s"), F.col("l_suppkey"))
     edges = (
@@ -209,15 +214,13 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the edge table no longer carries a deg column at all: the
     # per-src contribution is computed on the |V|-row side each round
     # (see the loop), so the cached edge list is exactly (src, dst).
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
+    deg = pin(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     n_nodes = deg.count()
     if n_nodes == 0:
         # Empty graph (a zero-match input slice is routine at scale —
         # a pruned partition, a new tenant): degrade to an empty
         # result with the output schema instead of dividing the 1/|V|
         # seed by zero on the driver.
-        pairs.unpersist()
-        deg.unpersist()
         return spark.createDataFrame([], "node string, pagerank double")
     bcast = _use_broadcast(spark, n_nodes)
     # hash-partition the cached edge table ONCE on the loop's hot key:
@@ -226,7 +229,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle mode (the per-iteration contrib join clusters on src;
     # each iteration then exchanges only the |V|-row contrib vector).
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    loop_edges = edges.repartition(n_shuffle, "dst" if bcast else "src").persist()
+    loop_edges = pin(edges.repartition(n_shuffle, "dst" if bcast else "src"))
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
     ).localCheckpoint()
@@ -316,7 +319,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     a, b = li.alias("a"), li.alias("b")
-    pairs = (
+    pairs = pin(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -329,7 +332,6 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= 2)
         .select("u", "v")
-        .persist()
     )
     n_edges = pairs.count()
     e1, e2, e3 = pairs.alias("e1"), pairs.alias("e2"), pairs.alias("e3")
@@ -458,7 +460,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the session width. The returned frame materializes eagerly
     # inside the scope (localCheckpoint) so no exchange compiles at
     # the restored width.
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")):
+    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
         o = spread(load_table(spark, sf_dir, "orders"))
         l = spread(load_table(spark, sf_dir, "lineitem"))
         # LONG node keys (round 11): the graph is directed c->s, so a
@@ -467,25 +469,22 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (BEFORE its orderBy, so the string tiebreak is unchanged).
         # Raw integer keys shrink the persisted edge list ~3x and make
         # every half-step join/groupBy hash longs instead of strings.
-        edges = (
+        edges = pin(
             o.join(l, o.o_orderkey == l.l_orderkey)
             .select(
                 F.col("o_custkey").cast("long").alias("src"),
                 F.col("l_suppkey").cast("long").alias("dst"),
             )
             .distinct()
-            .persist()
         )
         n_hubs = edges.select("src").distinct().count()
         if n_hubs == 0:
             # empty graph: no 1/|V| seed to build — return the empty
             # output shape instead of a driver-side ZeroDivisionError
-            edges.unpersist()
             return spark.createDataFrame(
                 [], "kind string, node string, score double"
             )
         bcast = _use_broadcast(spark, n_hubs)
-        pins = [edges]  # released in the finally below (r9 ADVICE)
         if bcast:
             edges_by = {"src": edges, "dst": edges}
         else:
@@ -498,90 +497,85 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.get("spark.sql.shuffle.partitions", "32")
             )
             edges_by = {
-                "src": edges.repartition(n_shuffle, "src").persist(),
-                "dst": edges.repartition(n_shuffle, "dst").persist(),
+                "src": pin(edges.repartition(n_shuffle, "src")),
+                "dst": pin(edges.repartition(n_shuffle, "dst")),
             }
-            pins += [edges_by["src"], edges_by["dst"]]
         # loop conf scope (see docstring and _node_loop_scope): the 8 eager
-        # half-step actions move only |V|-row score tables. Pin release
-        # in finally (r9 ADVICE): every score the output reads is
-        # localCheckpoint'ed, so the edge caches are dead weight after
-        # the eager materialization — and stayed pinned on failure too.
-        try:
-            with _node_loop_scope(spark, n_hubs):
-                h = (
-                    edges.select("src")
-                    .distinct()
-                    .select(F.col("src").alias("node"), F.lit(1.0 / n_hubs).alias("r"))
+        # half-step actions move only |V|-row score tables. Every score
+        # the output reads is localCheckpoint'ed, so the edge pins are
+        # dead weight after the eager materialization; pin_scope drops
+        # them, on failure too.
+        with _node_loop_scope(spark, n_hubs):
+            h = (
+                edges.select("src")
+                .distinct()
+                .select(F.col("src").alias("node"), F.lit(1.0 / n_hubs).alias("r"))
+                .localCheckpoint()
+            )
+
+            def _half(score: DataFrame, out_key: str, in_key: str) -> DataFrame:
+                # Round 11 (the 100x probe read 28.4x): two fixes
+                # with bitwise-identical results —
+                # 1) the 6-dp contribution converts to LONG
+                #    micro-units on the |V|-row score side (the
+                #    q_graph_pagerank discipline: round(x,6)*1e6
+                #    re-rounded to kill the float ulp), so the
+                #    |E|-row reduction is a codegen long sum, not a
+                #    DECIMAL(27,6) sum, and the rounding runs |V|
+                #    times, not |E| times;
+                # 2) the per-node sums CHECKPOINT BEFORE the
+                #    normalization total is taken: `tot` previously
+                #    re-executed the whole |E| join as the
+                #    broadcast subplan, doubling every half-step's
+                #    edge pass (16 |E| scans for 4 iterations; now
+                #    8). sum_k/1e6 is the correctly-rounded double
+                #    of the exact integer-scaled sum — exactly the
+                #    oracle's CAST(sum(DECIMAL) AS DOUBLE) — and
+                #    the total over per-node 6-dp values is the
+                #    integer sum of the same micro-units, so the
+                #    normalization divides the identical doubles.
+                sm = score.select(
+                    "node",
+                    F.round(F.round(F.col("r"), 6) * 1e6)
+                    .cast("long")
+                    .alias("k"),
+                )
+                raw = (
+                    edges_by[in_key].join(
+                        _state(sm, bcast), F.col(in_key) == F.col("node")
+                    )
+                    .groupBy(out_key)
+                    .agg(F.sum("k").alias("k"))
+                    .withColumnRenamed(out_key, "node")
                     .localCheckpoint()
                 )
-
-                def _half(score: DataFrame, out_key: str, in_key: str) -> DataFrame:
-                    # Round 11 (the 100x probe read 28.4x): two fixes
-                    # with bitwise-identical results —
-                    # 1) the 6-dp contribution converts to LONG
-                    #    micro-units on the |V|-row score side (the
-                    #    q_graph_pagerank discipline: round(x,6)*1e6
-                    #    re-rounded to kill the float ulp), so the
-                    #    |E|-row reduction is a codegen long sum, not a
-                    #    DECIMAL(27,6) sum, and the rounding runs |V|
-                    #    times, not |E| times;
-                    # 2) the per-node sums CHECKPOINT BEFORE the
-                    #    normalization total is taken: `tot` previously
-                    #    re-executed the whole |E| join as the
-                    #    broadcast subplan, doubling every half-step's
-                    #    edge pass (16 |E| scans for 4 iterations; now
-                    #    8). sum_k/1e6 is the correctly-rounded double
-                    #    of the exact integer-scaled sum — exactly the
-                    #    oracle's CAST(sum(DECIMAL) AS DOUBLE) — and
-                    #    the total over per-node 6-dp values is the
-                    #    integer sum of the same micro-units, so the
-                    #    normalization divides the identical doubles.
-                    sm = score.select(
-                        "node",
-                        F.round(F.round(F.col("r"), 6) * 1e6)
-                        .cast("long")
-                        .alias("k"),
-                    )
-                    raw = (
-                        edges_by[in_key].join(
-                            _state(sm, bcast), F.col(in_key) == F.col("node")
-                        )
-                        .groupBy(out_key)
-                        .agg(F.sum("k").alias("k"))
-                        .withColumnRenamed(out_key, "node")
-                        .localCheckpoint()
-                    )
-                    tot = raw.agg(F.sum("k").alias("tk"))
-                    return raw.crossJoin(F.broadcast(tot)).select(
-                        "node",
-                        (
-                            (F.col("k") / F.lit(1e6))
-                            / (F.col("tk") / F.lit(1e6))
-                        ).alias("r"),
-                    )
-
-                a = None
-                for _ in range(_HITS_ITERS):
-                    a = _half(h, "dst", "src")
-                    h = _half(a, "src", "dst")
-            top = lambda df, kind, prefix: (
-                df.select(
-                    F.lit(kind).alias("kind"),
-                    F.concat(F.lit(prefix), F.col("node")).alias("node"),
-                    F.col("r").alias("score"),
+                tot = raw.agg(F.sum("k").alias("tk"))
+                return raw.crossJoin(F.broadcast(tot)).select(
+                    "node",
+                    (
+                        (F.col("k") / F.lit(1e6))
+                        / (F.col("tk") / F.lit(1e6))
+                    ).alias("r"),
                 )
-                .orderBy(F.col("score").desc(), "node")
-                .limit(25)
+
+            a = None
+            for _ in range(_HITS_ITERS):
+                a = _half(h, "dst", "src")
+                h = _half(a, "src", "dst")
+        top = lambda df, kind, prefix: (
+            df.select(
+                F.lit(kind).alias("kind"),
+                F.concat(F.lit(prefix), F.col("node")).alias("node"),
+                F.col("r").alias("score"),
             )
-            return (
-                top(a, "authority", "s")
-                .unionAll(top(h, "hub", "c"))
-                .orderBy("kind", F.col("score").desc(), "node")
-            ).localCheckpoint(eager=True)
-        finally:
-            for p in pins:
-                p.unpersist()
+            .orderBy(F.col("score").desc(), "node")
+            .limit(25)
+        )
+        return (
+            top(a, "authority", "s")
+            .unionAll(top(h, "hub", "c"))
+            .orderBy("kind", F.col("score").desc(), "node")
+        ).localCheckpoint(eager=True)
 
 
 _LP_HUB_CAP = 50  # drop hub customers above this degree before pairing
@@ -638,7 +632,7 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~1 s. The WHOLE body runs under the scope: persist() compiles
     # the cached subtree's physical plan eagerly at call time, so a
     # pin created outside the scope would keep corpus width forever.
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")):
+    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
         o = spread(load_table(spark, sf_dir, "orders"))
         l = spread(load_table(spark, sf_dir, "lineitem"))
         pairs = (
@@ -647,10 +641,9 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         cdeg = pairs.groupBy("c").agg(F.count(F.lit(1)).alias("cd"))
-        kept = (
+        kept = pin(
             pairs.join(cdeg.filter(F.col("cd") <= _LP_HUB_CAP), "c")
             .select("c", "s")
-            .persist()
         )
         sdeg = kept.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("sd"))
         a, b = kept.alias("a"), kept.alias("b")
@@ -686,11 +679,7 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .limit(25)
         )
-        try:
-            out = ranked.localCheckpoint(eager=True)
-        finally:
-            kept.unpersist()
-    return out
+        return ranked.localCheckpoint(eager=True)
 
 
 @_q(
@@ -874,19 +863,17 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (c, s) LONG-keyed pair list: half the rows, ~3x smaller rows,
     # and bitwise-identical stats (the output is scalar counts; node
     # ids never surface). 100x: OOM -> completes (see BASELINE.md).
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")):
+    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
         o = load_table(spark, sf_dir, "orders")
         l = load_table(spark, sf_dir, "lineitem")
-        pairs = (
+        pairs = pin(
             o.join(l, o.o_orderkey == l.l_orderkey)
             .select(
                 F.col("o_custkey").cast("long").alias("c"),
                 F.col("l_suppkey").cast("long").alias("s"),
             )
             .distinct()
-            .persist()
         )
-        pair_pin = pairs  # `pairs` is rebound each peel; release in finally
         # |V| is bounded by the first round's degree-table sizes; count
         # once so the keep-set joins are size-guarded like the other
         # iterative state vectors (keep ⊆ nodes, shrinking every round)
@@ -896,81 +883,72 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         bcast = _use_broadcast(spark, n_nodes)
         gen_pins: list[DataFrame] = []
-        try:
-            with _node_loop_scope(spark, n_nodes):
-                for _ in range(3):
-                    # the surviving-node lists are |nodes|-sized (and
-                    # shrink every round) — broadcast both endpoint
-                    # filters while they fit so each peel is two
-                    # broadcast-hash semi joins over the previous
-                    # round's materialized pairs; above the guard the
-                    # hints drop and the |V|-row keep sets exchange
-                    # instead (never the reverse)
-                    ckeep = (
-                        pairs.groupBy("c")
-                        .agg(F.count(F.lit(1)).alias("deg"))
-                        .filter(F.col("deg") >= 3)
-                        .select("c")
-                    )
-                    skeep = (
-                        pairs.groupBy("s")
-                        .agg(F.count(F.lit(1)).alias("deg"))
-                        .filter(F.col("deg") >= 3)
-                        .select("s")
-                    )
-                    # generation storage: columnar persist + eager
-                    # count, NOT localCheckpoint — checkpoint blocks
-                    # are raw row storage and effectively unevictable
-                    # (they ARE the lineage), so three |E|-sized
-                    # generations pinned at once still OOM'd the 100x
-                    # leg after the long-key slimming; the columnar
-                    # cache compresses (long, long) pairs ~10x and the
-                    # PREVIOUS generation is released as soon as the
-                    # next one is materialized, so at most two
-                    # generations are ever live (a recompute after
-                    # release just re-derives from the build cache —
-                    # correctness unaffected)
-                    pairs = (
-                        pairs.join(_state(ckeep, bcast), "c")
-                        .join(_state(skeep, bcast), "s")
-                        .select("c", "s")
-                        .persist()
-                    )
-                    pairs.count()
-                    if gen_pins:
-                        gen_pins.pop().unpersist()
-                    gen_pins.append(pairs)
-            # survivor degree envelope over BOTH sides (the doubled
-            # graph's per-node degrees are exactly the two one-sided
-            # degree tables)
-            survivors = (
-                pairs.groupBy("c")
+        with _node_loop_scope(spark, n_nodes):
+            for _ in range(3):
+                # the surviving-node lists are |nodes|-sized (and
+                # shrink every round) — broadcast both endpoint
+                # filters while they fit so each peel is two
+                # broadcast-hash semi joins over the previous
+                # round's materialized pairs; above the guard the
+                # hints drop and the |V|-row keep sets exchange
+                # instead (never the reverse)
+                ckeep = (
+                    pairs.groupBy("c")
+                    .agg(F.count(F.lit(1)).alias("deg"))
+                    .filter(F.col("deg") >= 3)
+                    .select("c")
+                )
+                skeep = (
+                    pairs.groupBy("s")
+                    .agg(F.count(F.lit(1)).alias("deg"))
+                    .filter(F.col("deg") >= 3)
+                    .select("s")
+                )
+                # generation storage: columnar persist + eager
+                # count, NOT localCheckpoint — checkpoint blocks
+                # are raw row storage and effectively unevictable
+                # (they ARE the lineage), so three |E|-sized
+                # generations pinned at once still OOM'd the 100x
+                # leg after the long-key slimming; the columnar
+                # cache compresses (long, long) pairs ~10x and the
+                # PREVIOUS generation is released as soon as the
+                # next one is materialized, so at most two
+                # generations are ever live (a recompute after
+                # release just re-derives from the build cache —
+                # correctness unaffected)
+                pairs = pin(
+                    pairs.join(_state(ckeep, bcast), "c")
+                    .join(_state(skeep, bcast), "s")
+                    .select("c", "s")
+                )
+                pairs.count()
+                if gen_pins:
+                    gen_pins.pop().unpersist()
+                gen_pins.append(pairs)
+        # survivor degree envelope over BOTH sides (the doubled
+        # graph's per-node degrees are exactly the two one-sided
+        # degree tables)
+        survivors = (
+            pairs.groupBy("c")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
+            .select("deg")
+            .unionByName(
+                pairs.groupBy("s")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
                 .select("deg")
-                .unionByName(
-                    pairs.groupBy("s")
-                    .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-                    .select("deg")
-                )
             )
-            stats = survivors.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
-                F.max("deg").cast("bigint").alias("max_deg"),
-                F.min("deg").cast("bigint").alias("min_deg"),
-            )
-            ec = pairs.agg(
-                (F.count(F.lit(1)) * 2).cast("bigint").alias("n_half_edges")
-            )
-            return stats.crossJoin(F.broadcast(ec)).select(
-                "n_nodes", "n_half_edges", "max_deg", "min_deg"
-            ).localCheckpoint(eager=True)
-        finally:
-            # pin release (r9 ADVICE): the output is eager, so the build
-            # cache and the final generation are dead weight past this
-            # point — and they release on failure too
-            pair_pin.unpersist()
-            for g in gen_pins:
-                g.unpersist()
+        )
+        stats = survivors.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
+            F.max("deg").cast("bigint").alias("max_deg"),
+            F.min("deg").cast("bigint").alias("min_deg"),
+        )
+        ec = pairs.agg(
+            (F.count(F.lit(1)) * 2).cast("bigint").alias("n_half_edges")
+        )
+        return stats.crossJoin(F.broadcast(ec)).select(
+            "n_nodes", "n_half_edges", "max_deg", "min_deg"
+        ).localCheckpoint(eager=True)
 
 
 @_q(
@@ -1061,17 +1039,16 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # s-node). Only the SEED selection ever compares node ids across
     # sides: its tiebreak decorates the ids back to the 'c…'/'s…'
     # strings so the max-degree tie resolves exactly as before.
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")):
+    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
         o = load_table(spark, sf_dir, "orders")
         l = load_table(spark, sf_dir, "lineitem")
-        pairs = (
+        pairs = pin(
             o.join(l, o.o_orderkey == l.l_orderkey)
             .select(
                 F.col("o_custkey").cast("long").alias("c"),
                 F.col("l_suppkey").cast("long").alias("s"),
             )
             .distinct()
-            .persist()
         )
         cdeg = pairs.groupBy("c").agg(F.count(F.lit(1)).alias("deg"))
         sdeg = pairs.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
@@ -1079,72 +1056,67 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # broadcast hints off one node count, like the other state vectors
         n_nodes = cdeg.count() + sdeg.count()
         bcast = _use_broadcast(spark, n_nodes)
-        try:
-            with _node_loop_scope(spark, n_nodes):
-                cand = cdeg.select(
-                    F.col("c").alias("id"), F.lit("c").alias("side"), "deg"
-                ).unionByName(
-                    sdeg.select(
-                        F.col("s").alias("id"), F.lit("s").alias("side"), "deg"
-                    )
+        with _node_loop_scope(spark, n_nodes):
+            cand = cdeg.select(
+                F.col("c").alias("id"), F.lit("c").alias("side"), "deg"
+            ).unionByName(
+                sdeg.select(
+                    F.col("s").alias("id"), F.lit("s").alias("side"), "deg"
                 )
-                seed_rows = (
-                    cand.orderBy(
-                        F.desc("deg"),
-                        F.concat(F.col("side"), F.col("id")),
-                    )
-                    .limit(1)
-                    .collect()
+            )
+            seed_rows = (
+                cand.orderBy(
+                    F.desc("deg"),
+                    F.concat(F.col("side"), F.col("id")),
                 )
-                if not seed_rows:
-                    # empty graph: no seed node exists — empty output
-                    # shape instead of IndexError on the collected seed
-                    return spark.createDataFrame(
-                        [], "level int, n_nodes long"
+                .limit(1)
+                .collect()
+            )
+            if not seed_rows:
+                # empty graph: no seed node exists — empty output
+                # shape instead of IndexError on the collected seed
+                return spark.createDataFrame(
+                    [], "level int, n_nodes long"
+                )
+            seed_row = seed_rows[0]
+            side = seed_row["side"]
+            frontier = spark.createDataFrame(
+                [(int(seed_row["id"]),)], "node long"
+            ).localCheckpoint()
+            # per-side visited sets (ids are side-local)
+            visited = {"c": None, "s": None}
+            visited[side] = frontier
+            counts = [(0, 1)]
+            for lvl in (1, 2, 3):
+                other = "s" if side == "c" else "c"
+                nxt = (
+                    pairs.join(
+                        _state(frontier, bcast),
+                        F.col(side) == F.col("node"),
                     )
-                seed_row = seed_rows[0]
-                side = seed_row["side"]
-                frontier = spark.createDataFrame(
-                    [(int(seed_row["id"]),)], "node long"
-                ).localCheckpoint()
-                # per-side visited sets (ids are side-local)
-                visited = {"c": None, "s": None}
-                visited[side] = frontier
-                counts = [(0, 1)]
-                for lvl in (1, 2, 3):
-                    other = "s" if side == "c" else "c"
-                    nxt = (
-                        pairs.join(
-                            _state(frontier, bcast),
-                            F.col(side) == F.col("node"),
-                        )
-                        .select(F.col(other).alias("node"))
-                        .distinct()
+                    .select(F.col(other).alias("node"))
+                    .distinct()
+                )
+                if visited[other] is not None:
+                    # visited is |nodes|-sized — broadcast the anti
+                    # join too while it fits; above the guard both
+                    # hints drop and the |V|-row sets exchange
+                    nxt = nxt.join(
+                        _state(visited[other], bcast), "node", "left_anti"
                     )
-                    if visited[other] is not None:
-                        # visited is |nodes|-sized — broadcast the anti
-                        # join too while it fits; above the guard both
-                        # hints drop and the |V|-row sets exchange
-                        nxt = nxt.join(
-                            _state(visited[other], bcast), "node", "left_anti"
-                        )
-                    nxt = nxt.localCheckpoint()
-                    counts.append((lvl, nxt.count()))
-                    visited[other] = (
-                        nxt
-                        if visited[other] is None
-                        else visited[other].unionByName(nxt).localCheckpoint()
-                    )
-                    frontier = nxt
-                    side = other
-            return (
-                spark.createDataFrame(counts, "level int, n_nodes long")
-                .orderBy("level")
-            ).localCheckpoint(eager=True)
-        finally:
-            # pin release (r9 ADVICE): every frontier is checkpointed
-            # and the output is eager — the pair cache is dead weight
-            pairs.unpersist()
+                nxt = nxt.localCheckpoint()
+                counts.append((lvl, nxt.count()))
+                visited[other] = (
+                    nxt
+                    if visited[other] is None
+                    else visited[other].unionByName(nxt).localCheckpoint()
+                )
+                frontier = nxt
+                side = other
+        return (
+            spark.createDataFrame(counts, "level int, n_nodes long")
+            .orderBy("level")
+        ).localCheckpoint(eager=True)
 
 
 @_q(
@@ -1210,7 +1182,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~1 s. The WHOLE body runs under the scope: persist() compiles
     # the cached subtree's physical plan eagerly at call time, so a
     # pin created outside the scope would keep corpus width forever.
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")):
+    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
         o = load_table(spark, sf_dir, "orders")
         l = load_table(spark, sf_dir, "lineitem")
         pairs = (
@@ -1223,7 +1195,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges = pairs.select(c_node.alias("src"), s_node.alias("dst")).unionByName(
             pairs.select(s_node.alias("src"), c_node.alias("dst"))
         )
-        edges = edges.persist()
+        edges = pin(edges)
         deg = edges.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).cast("bigint").alias("d")
         )
@@ -1278,15 +1250,10 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.col("sy").cast("decimal(38,0)") * F.col("sy")
             ).cast("double")
         )
-        res = m.select(
+        return m.select(
             F.col("n").alias("n_half_edges"),
             (num / den).alias("assortativity"),
-        )
-        try:
-            out = res.localCheckpoint(eager=True)
-        finally:
-            edges.unpersist()
-    return out
+        ).localCheckpoint(eager=True)
 
 
 @_q(
@@ -1342,7 +1309,7 @@ def q_graph_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "measured r9 perf queue"), ~1.4 s at input-derived width. WHOLE
     # body under the scope (the persist compiles its physical plan
     # eagerly at call time).
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")):
+    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
         o = spread(load_table(spark, sf_dir, "orders"))
         l = spread(load_table(spark, sf_dir, "lineitem"))
         pairs = (
@@ -1351,10 +1318,9 @@ def q_graph_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         cdeg = pairs.groupBy("c").agg(F.count(F.lit(1)).alias("cd"))
-        kept = (
+        kept = pin(
             pairs.join(cdeg.filter(F.col("cd") <= _LP_HUB_CAP), "c")
             .select("c", "s", "cd")
-            .persist()
         )
         a, b = kept.alias("a"), kept.alias("b")
         scored = (
@@ -1381,8 +1347,4 @@ def q_graph_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.col("ra_micro").desc(), F.col("cn").desc(), "s1", "s2")
             .limit(25)
         )
-        try:
-            out = ranked.localCheckpoint(eager=True)
-        finally:
-            kept.unpersist()
-    return out
+        return ranked.localCheckpoint(eager=True)

@@ -38,6 +38,8 @@ from keycloak_event_stream_spark.catalog import (
     bounded_eval_scope,
     footer_rows,
     load_table,
+    pin,
+    pin_scope,
     spread,
 )
 from keycloak_event_stream_spark.operators._scale import (
@@ -125,11 +127,6 @@ def q_recursive_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q_recursive_hierarchy's persisted loop-body column (round 12); at
-# most one live pin — released at the top of the next call.
-_RH_PIN = None
-
-
 @_q(
     "q_recursive_hierarchy",
     oracle="""
@@ -170,20 +167,9 @@ def q_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     first reads the (spill-backed) key cache instead of parquet, and
     the loop carries one long per row. The recursion itself — seed,
     step join, aggregate — is unchanged, so the declared result is
-    identical. A/B at sf0.1: 5/5 wins, best 0.83 -> 0.72 s. The pin
-    from the previous call is released before re-pinning (one live
-    pin max, the dedup-module discipline).
+    identical. A/B at sf0.1: 5/5 wins, best 0.83 -> 0.72 s.
     """
-    global _RH_PIN
-    if _RH_PIN is not None:
-        try:
-            _RH_PIN.unpersist()
-        except Exception:
-            pass  # the owning session may already be stopped
-    cust = (
-        load_table(spark, sf_dir, "customer").select("c_custkey").persist()
-    )
-    _RH_PIN = cust
+    cust = pin(load_table(spark, sf_dir, "customer").select("c_custkey"))
     cust.createOrReplaceTempView("_rh_customer")
     return spark.sql(
         """
@@ -825,7 +811,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rollup paid corpus width — 6-8.5 s vanilla sf0.01 for a 55-row
     # result, ~3 s at input-derived width (ABA probe; BASELINE.md
     # "Round 9 - width scope, third wave"). WHOLE body under the
-    # scope (the pooled range pins compile eagerly), eager
+    # scope (the two-phase range pins compile eagerly), eager
     # localCheckpoint inside.
     with bounded_eval_scope(spark, footer_rows(sf_dir, "orders")):
         orders = load_table(spark, sf_dir, "orders")
@@ -2941,10 +2927,9 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~1 s. The WHOLE body runs under the scope: persist() compiles the
     # cached subtree's physical plan eagerly at call time, so a pin
     # created outside the scope would keep corpus width forever.
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")):
+    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
         li = load_table(spark, sf_dir, "lineitem")
-        items = li.select("l_orderkey", "l_partkey").distinct()
-        items = items.persist()
+        items = pin(li.select("l_orderkey", "l_partkey").distinct())
         n_orders = items.agg(
             F.countDistinct("l_orderkey").cast("bigint").alias("n")
         )
@@ -2996,11 +2981,7 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy(F.col("n_ab").desc(), "antecedent", "consequent")
         )
-        try:
-            out = rules.localCheckpoint(eager=True)
-        finally:
-            items.unpersist()
-    return out
+        return rules.localCheckpoint(eager=True)
 
 
 @_q(

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from keycloak_event_stream_spark.catalog import load_table
+from keycloak_event_stream_spark.catalog import load_table, pin
 from keycloak_event_stream_spark.operators._scale import two_phase_window
 from keycloak_event_stream_spark.registry import register as _q
 
@@ -442,7 +442,8 @@ def q_zone_map_skip_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "((eday - d0) * 65535 div greatest(d1 - d0, 1))",
         )
         + f", {_CELL_SHIFT}) AS f_zo",
-    ).persist()
+    )
+    tagged = pin(tagged)
 
     def stats(key: str) -> DataFrame:
         return tagged.groupBy(F.col(key).alias("f")).agg(

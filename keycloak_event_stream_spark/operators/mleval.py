@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from keycloak_event_stream_spark.catalog import load_table, spread
+from keycloak_event_stream_spark.catalog import load_table, pin, spread
 from keycloak_event_stream_spark.operators._scale import (
     two_phase_window,
 )
@@ -667,7 +667,7 @@ def q_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("actual", "predicted")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    cells = cells.persist()
+    cells = pin(cells)
     tot = cells.agg(
         F.sum("c").cast("bigint").alias("n"),
         F.sum(
@@ -1020,7 +1020,7 @@ def q_robust_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
             "score"
         ),
     )
-    scored = scored.persist()
+    scored = pin(scored)
     ranked = two_phase_window(
         scored,
         [F.col("score"), F.col("vec_id")],

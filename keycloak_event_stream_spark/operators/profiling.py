@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from keycloak_event_stream_spark.catalog import load_table, spread
+from keycloak_event_stream_spark.catalog import load_table, pin, spread
 from keycloak_event_stream_spark.registry import register as _q
 
 
@@ -312,7 +312,7 @@ def q_join_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan = l.groupBy(F.col("l_orderkey").alias("k")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    fan = fan.persist()
+    fan = pin(fan)
     hist = fan.groupBy("c").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_keys")
     )

@@ -90,19 +90,12 @@ _SALT_BUCKETS = 8
 # the table grows instead of always 8, while sf0.1 stays at the same
 # width the bench has always timed (600 K rows // 65536 = 9 ≈ 8).
 # Exactness is unaffected — partials are per-(key, salt) DECIMAL/COUNT
-# sums whose merge is order- and width-independent. Conf override for
-# cluster tuning: spark.kes.skew.saltBuckets.
+# sums whose merge is order- and width-independent.
 _SALT_ROWS_PER_BUCKET = 65536
 _SALT_BUCKETS_CAP = 64
 
 
-def _salt_buckets(spark: SparkSession, sf_dir: str) -> int:
-    conf = spark.conf.get("spark.kes.skew.saltBuckets", None)
-    if conf:
-        try:
-            return max(1, int(conf))
-        except ValueError:
-            pass
+def _salt_buckets(sf_dir: str) -> int:
     rows = footer_rows(sf_dir, "lineitem")
     return max(
         _SALT_BUCKETS, min(_SALT_BUCKETS_CAP, rows // _SALT_ROWS_PER_BUCKET)
@@ -146,7 +139,7 @@ def q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independently, so the result is bitwise the same."""
     l = spread(load_table(spark, sf_dir, "lineitem"))
     s = load_table(spark, sf_dir, "supplier")
-    n_salt = _salt_buckets(spark, sf_dir)
+    n_salt = _salt_buckets(sf_dir)
     salt = F.pmod(
         F.xxhash64(F.col("l_orderkey"), F.col("l_linenumber")),
         F.lit(n_salt),

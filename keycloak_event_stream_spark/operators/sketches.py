@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from keycloak_event_stream_spark.catalog import load_table, spread
+from keycloak_event_stream_spark.catalog import load_table, pin, spread
 from keycloak_event_stream_spark.operators._scale import two_phase_window
 from keycloak_event_stream_spark.registry import register as _q
 
@@ -458,7 +458,7 @@ def q_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         F.explode(F.split(F.col("text"), " ")).alias("w")
     ).distinct()
-    toks = toks.persist()
+    toks = pin(toks)
     pos = toks.select(
         "w",
         F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("i"),
@@ -607,7 +607,7 @@ def q_quantile_sketch_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = spread(load_table(spark, sf_dir, "orders"))
     cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
     base = o.select(cents.alias("cents"), "o_orderkey")
-    base = base.persist()
+    base = pin(base)
     acc = 10000
     approx = base.agg(
         F.percentile_approx(
@@ -712,7 +712,7 @@ def q_hll_merge_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("hll_sketch_agg(user_id, 12)").alias("sketch"),
         F.countDistinct("user_id").cast("bigint").alias("exact_users"),
     )
-    per_type = per_type.persist()
+    per_type = pin(per_type)
     leveled = per_type.select(
         "event_type",
         "exact_users",

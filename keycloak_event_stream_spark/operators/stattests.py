@@ -35,6 +35,8 @@ from keycloak_event_stream_spark.catalog import (
     bounded_eval_scope,
     footer_rows,
     load_table,
+    pin,
+    pin_scope,
     spread,
 )
 from keycloak_event_stream_spark.operators._exact import dbig, sql_dbig
@@ -2239,7 +2241,7 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("x"),
         F.floor(F.col("value") / 25).cast("bigint").alias("y"),
     ).agg(F.count(F.lit(1)).cast("bigint").alias("nxy"))
-    cells = cells.persist()
+    cells = pin(cells)
     n = cells.agg(F.sum("nxy").cast("bigint").alias("n"))
     mx = cells.groupBy("x").agg(F.sum("nxy").cast("bigint").alias("nx"))
     my = cells.groupBy("y").agg(F.sum("nxy").cast("bigint").alias("ny"))
@@ -3858,12 +3860,13 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured 10.0 s vanilla sf0.01 for a 1-row result (r8 ABA probe,
     # BASELINE.md "measured r9 perf queue"); input-derived width reads
     # ~1.7 s. The WHOLE body runs under the scope: the per_order
-    # persist and the pooled two-phase range pins compile their
-    # physical plans eagerly at call time, so pins created outside the
-    # scope would keep corpus width forever. Driving count is lineitem
-    # (the join's large side); the moments materialize eagerly inside
-    # via localCheckpoint before the scope restores the conf.
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")):
+    # persist and the two-phase range pins compile their physical
+    # plans eagerly at call time, so pins created outside the scope
+    # would keep corpus width forever. Driving count is lineitem (the
+    # join's large side); the moments materialize eagerly inside via
+    # localCheckpoint before the scopes release the pins and restore
+    # the conf.
+    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
         o = spread(load_table(spark, sf_dir, "orders"))
         l = load_table(spark, sf_dir, "lineitem")
         per_order = (
@@ -3878,7 +3881,7 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_lines",
             )
         )
-        per_order = per_order.persist()
+        per_order = pin(per_order)
         rx = two_phase_window(
             per_order, [F.col("price_c"), F.col("o_orderkey")], row_number="rx"
         ).select("o_orderkey", "rx")
@@ -3914,13 +3917,9 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.col("sy").cast("decimal(38,0)") * F.col("sy")
             ).cast("double")
         )
-        try:
-            out = m.select("n", (num / den).alias("spearman_rho")).localCheckpoint(
-                eager=True
-            )
-        finally:
-            per_order.unpersist()
-    return out
+        return m.select("n", (num / den).alias("spearman_rho")).localCheckpoint(
+            eager=True
+        )
 
 
 @_q(

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from keycloak_event_stream_spark.catalog import load_table
+from keycloak_event_stream_spark.catalog import load_table, pin
 from keycloak_event_stream_spark.operators._exact import dbig, sql_dbig
 from keycloak_event_stream_spark.registry import register as _q
 
@@ -939,7 +939,7 @@ def q_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one materialization of the bounded daily series feeds bounds,
     # the index join and both lag sides: the raw table is scanned once
-    daily = daily.persist()
+    daily = pin(daily)
     bounds = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     spine = bounds.select(
         F.explode(
@@ -1914,7 +1914,7 @@ def q_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    daily = daily.persist()
+    daily = pin(daily)
     m = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("c").cast("bigint").alias("s1"),

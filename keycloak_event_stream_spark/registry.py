@@ -2,17 +2,22 @@
 
 Every query enters through ``register(name, oracle)``: a decorator that
 records the ``(spark, sf_dir) -> DataFrame`` function and its DuckDB SQL
-twin, and raises on a name registered twice. ``collect()`` imports every
+twin, and raises on a name registered twice. The registered function
+is a ``functools.wraps`` wrapper that marks the query boundary for pin
+lifetimes (``catalog.query_pins``). ``collect()`` imports every
 module in ``_MODULES`` and returns both maps in driver order. A module
 that fails to import fails ``collect()``: coverage never shrinks quietly.
 """
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from keycloak_event_stream_spark.catalog import query_pins
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -30,9 +35,15 @@ def register(name: str, oracle: str):
                 f"duplicate query name {name}: {fn.__module__}.{fn.__qualname__}"
                 f" and {prior.__module__}.{prior.__qualname__}"
             )
-        _QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def query(*args, **kwargs):
+            with query_pins():
+                return fn(*args, **kwargs)
+
+        _QUERIES[name] = query
         _ORACLE[name] = oracle
-        return fn
+        return query
 
     return deco
 

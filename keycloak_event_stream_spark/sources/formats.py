@@ -22,7 +22,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from keycloak_event_stream_spark.catalog import load_table
+from keycloak_event_stream_spark.catalog import load_table, pin
 from keycloak_event_stream_spark.registry import register as _q
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -261,12 +261,11 @@ def q_source_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("_corrupt_record", T.StringType()),
         ]
     )
-    raw = (
+    raw = pin(
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(out)
-        .cache()
     )
     good = raw.filter(F.col("_corrupt_record").isNull()).agg(
         F.lit("good").alias("kind"),

@@ -8,6 +8,7 @@ from keycloak_event_stream_spark.operators.advanced_sql import (
     q_lateral_topk,
     q_posexplode_tokens,
     q_skyline,
+    q_sql_scripting,
     q_window_distinct_running,
 )
 
@@ -81,3 +82,26 @@ def test_skyline_sweep_equals_bruteforce(spark):
     ]
     want = sorted((p, s, pts.count((p, s))) for (p, s) in brute)
     assert got == want
+
+
+def test_sql_scripting_restores_the_session_conf(spark):
+    """The script runs inside spark.sql(), so scripting is enabled for
+    that call only: the session conf reads the same before and after,
+    and the result still collects with the conf unset."""
+    import duckdb
+
+    from keycloak_event_stream_spark.catalog import table_path
+    from keycloak_event_stream_spark.registry import collect
+
+    key = "spark.sql.scripting.enabled"
+    before = spark.conf.get(key, None)
+    df = q_sql_scripting(spark, SF_DIR)
+    assert spark.conf.get(key, None) == before
+    got = [tuple(r) for r in df.collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW orders AS SELECT * FROM "
+        f"read_parquet('{table_path(SF_DIR, 'orders')}')"
+    )
+    want = con.execute(collect()[1]["q_sql_scripting"]).fetchall()
+    assert got == want and len(got) == 1

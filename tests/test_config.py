@@ -10,15 +10,15 @@ from keycloak_event_stream_spark.sources.keycloak import KeycloakEventStore
 def test_defaults_match_reference_posture():
     c = EngineConfig()
     assert c.enabled is False  # off by default (isSupported gate)
-    assert c.query_timeout_s == 60.0  # 1000 ms poll x 60 attempts
+    assert c.shuffle_partitions is None  # session default
 
 
 def test_invalid_numeric_falls_back_with_default(caplog):
-    c = EngineConfig.from_mapping(
-        {"query_timeout_s": "not-a-number", "lateness_hours": "2"}
-    )
-    assert c.query_timeout_s == 60.0  # fallback (ref :131-142)
-    assert c.lateness_hours == 2
+    c = EngineConfig.from_mapping({"shuffle_partitions": "not-a-number"})
+    assert c.shuffle_partitions is None  # fallback (ref :131-142)
+    assert "invalid value" in caplog.text
+    c = EngineConfig.from_mapping({"shuffle_partitions": "8"})
+    assert c.shuffle_partitions == 8
 
 
 def test_bool_parsing():

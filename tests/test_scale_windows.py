@@ -487,193 +487,3 @@ def test_two_phase_rownumber_exact_under_filter_consumer(spark):
             f"got {len(rns)} rows, dupes="
             f"{len(rns) - len(set(rns))}"
         )
-
-
-def test_two_phase_cache_pool_bounded(spark):
-    """Each two_phase_window call persists its ranged subtree; the FIFO
-    pool must retire old entries so a long-lived session composing many
-    two-phase operators does not grow the CacheManager without bound
-    (round-4 verdict #6). Results of immediately-executed calls stay
-    correct throughout."""
-    from keycloak_event_stream_spark.operators import _scale
-
-    cm = spark._jsparkSession.sharedState().cacheManager()
-
-    def n_cached():
-        return cm.cachedData().size()
-
-    spark.catalog.clearCache()
-    _scale._cache_pool.clear()
-    base = n_cached()
-    spark.conf.set("spark.kes.twoPhase.cachePool", "4")
-    try:
-        for i in range(10):
-            df = spark.range(200).select(
-                (F.col("id") * 37 % 211).alias("v"), F.col("id")
-            )
-            out = two_phase_window(
-                df, [F.col("v"), F.col("id")], row_number="rn", k=5
-            )
-            got = sorted(r.rn for r in out.collect())
-            assert got == list(range(1, 201))
-            assert n_cached() - base <= 4
-    finally:
-        spark.conf.unset("spark.kes.twoPhase.cachePool")
-        _scale._cache_pool.clear()
-        spark.catalog.clearCache()
-
-
-def test_two_phase_cache_pool_spares_unexecuted_entries(spark):
-    """r5 ADVICE (medium): blind FIFO retirement could unpersist the
-    correctness-critical ranged persist of a two-phase DataFrame that
-    had NOT been executed yet — on execution, cache gone, the offset
-    and main branches could read different re-sampled partition-id
-    layouts. Retirement is now materialization-aware: a plan held
-    across many intervening calls keeps its pending persist, and its
-    eventual execution still yields exact global row numbers."""
-    from keycloak_event_stream_spark.operators import _scale
-
-    spark.catalog.clearCache()
-    _scale._cache_pool.clear()
-    spark.conf.set("spark.kes.twoPhase.cachePool", "2")
-    try:
-        df0 = spark.range(1000).select(
-            (F.col("id") * 37 % 997).alias("v"), F.col("id")
-        )
-        held = two_phase_window(
-            df0, [F.col("v"), F.col("id")], row_number="rn", k=7
-        )
-        # intervening executed calls — more than the pool limit, so the
-        # old FIFO would have retired held's pending persist long ago
-        for i in range(6):
-            df = spark.range(100).select(
-                (F.col("id") * 13 % 101).alias("v"), F.col("id")
-            )
-            out = two_phase_window(
-                df, [F.col("v"), F.col("id")], row_number="rn", k=3
-            )
-            assert sorted(r.rn for r in out.collect()) == list(range(1, 101))
-        # held's ranged persist is still pending in the pool
-        states = [_scale._persist_state(e) for e in _scale._cache_pool]
-        assert "pending" in states, states
-        got = sorted(r.rn for r in held.collect())
-        assert got == list(range(1, 1001))
-        # once executed it is 'loaded' and retirable again
-        assert "loaded" in [
-            _scale._persist_state(e) for e in _scale._cache_pool
-        ]
-    finally:
-        spark.conf.unset("spark.kes.twoPhase.cachePool")
-        _scale._cache_pool.clear()
-        spark.catalog.clearCache()
-
-
-def test_persist_state_probe_failure_warns_once_on_live_session(
-    spark, monkeypatch
-):
-    """A probe failure on a LIVE session (CacheManager internals moved)
-    must emit the one-time RuntimeWarning — silent degradation to
-    blind-FIFO retirement was the r6-flagged hazard — while a dead
-    session stays quiet by design. Both map to 'unknown' (retirable)."""
-    import warnings
-
-    from keycloak_event_stream_spark.operators import _scale
-
-    df = spark.range(3).persist()
-    try:
-        # break the probe BELOW the session-validity gate: _jdf raises,
-        # but sparkSession/sharedState/cacheManager still resolve
-        monkeypatch.setattr(_scale, "_probe_failure_warned", False)
-
-        class _Boom:
-            def __getattr__(self, name):
-                raise RuntimeError("internals moved")
-
-        broken = _Boom()
-        orig = _scale.DataFrame  # sanity: module imports DataFrame
-        assert orig is not None
-
-        class _FakeDF:
-            sparkSession = df.sparkSession
-
-            @property
-            def _jdf(self):
-                raise AttributeError("cachedRepresentation moved")
-
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            s1 = _scale._persist_state(_FakeDF())
-            s2 = _scale._persist_state(_FakeDF())
-        assert s1 == s2 == "unknown"
-        runtime = [
-            w for w in caught if issubclass(w.category, RuntimeWarning)
-        ]
-        assert len(runtime) == 1  # one-time, not per-probe
-        assert "LIVE session" in str(runtime[0].message)
-
-        # dead-session path: no sparkSession at all -> quiet 'unknown'
-        monkeypatch.setattr(_scale, "_probe_failure_warned", False)
-
-        class _DeadDF:
-            @property
-            def sparkSession(self):
-                raise RuntimeError("session stopped")
-
-        with warnings.catch_warnings(record=True) as caught2:
-            warnings.simplefilter("always")
-            assert _scale._persist_state(_DeadDF()) == "unknown"
-        assert not [
-            w for w in caught2 if issubclass(w.category, RuntimeWarning)
-        ]
-    finally:
-        df.unpersist()
-
-
-def test_two_phase_cache_pool_thread_safe(spark):
-    """Concurrent sessions/threads admitting persists must not corrupt
-    the pool or leak entries past the bound (the r6-flagged last
-    unguarded concurrency edge): 8 threads x 8 executed persists under
-    limit 4 must end with a bounded pool and zero exceptions."""
-    import threading
-
-    from keycloak_event_stream_spark.operators import _scale
-
-    with _scale._cache_pool_lock:
-        old_pool = _scale._cache_pool[:]
-        _scale._cache_pool.clear()
-    spark.conf.set(_scale._CACHE_POOL_CONF, "4")
-    errors = []
-
-    def work(k):
-        try:
-            for i in range(8):
-                df = spark.range(k * 100 + i, k * 100 + i + 3)
-                _scale._pool_persist(df).count()  # executed -> loaded
-        except Exception as exc:  # pragma: no cover - failure path
-            errors.append(exc)
-
-    threads = [threading.Thread(target=work, args=(k,)) for k in range(8)]
-    try:
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        assert not errors
-        # retirement only runs on admit, so entries that were still
-        # pending when the last concurrent admit scanned may linger —
-        # but never past the pending-hold bound
-        assert len(_scale._cache_pool) <= 4 * 4
-        # one quiet admit (everything now loaded) drains to the limit:
-        # proves no entry was lost or double-popped under contention
-        _scale._pool_persist(spark.range(3)).count()
-        assert len(_scale._cache_pool) <= 4
-    finally:
-        spark.conf.unset(_scale._CACHE_POOL_CONF)
-        with _scale._cache_pool_lock:
-            for e in _scale._cache_pool:
-                try:
-                    e.unpersist()
-                except Exception:
-                    pass
-            _scale._cache_pool.clear()
-            _scale._cache_pool.extend(old_pool)

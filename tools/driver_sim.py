@@ -65,6 +65,7 @@ for i, name in enumerate(names):
 try:
     rt = spark._jvm.java.lang.Runtime.getRuntime()
     used = (rt.totalMemory()-rt.freeMemory())//(1024*1024)
-    print(f"JVM heap used: {used} MB", flush=True)
+    cached = spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+    print(f"JVM heap used: {used} MB, CacheManager entries: {cached}", flush=True)
 except Exception: pass
 print(f"DONE: {ok} ok, {fail} fail, {time.time()-t_all:.0f}s total", flush=True)
