@@ -235,12 +235,16 @@ def footer_ts_range(sf_dir: str, name: str, column: str = "ts"):
 
 
 # Target rows per shuffle partition for a bounded analytic eval — the
-# same constant family as graph.py::_LOOP_ROWS_PER_PART (65536, |V|-row
-# loop state) and streaming's _REPLAY_ROWS_PER_PART (8192, state-store
-# rows); 8192 here because these evals expand their input (pair
-# self-joins, shingle explosion), so the driving-table count
-# understates the shuffled volume.
+# same constant family as streaming's _REPLAY_ROWS_PER_PART (8192,
+# state-store rows); 8192 here because these evals expand their input
+# (pair self-joins, shingle explosion), so the driving-table count
+# understates the shuffled volume. Iteration loops pass
+# _LOOP_ROWS_PER_PART instead: their state and edge rows are narrow
+# (long, long|double) pairs that never expand, so one loop partition
+# carries 65536 of them before another task is worth its launch.
 _EVAL_ROWS_PER_PART = 8192
+_LOOP_ROWS_PER_PART = 65536
+_FLOOR_PARTS = 4
 
 
 def conf_token_set(spark: SparkSession, key: str, value: str):
@@ -415,12 +419,16 @@ def _persist_state(df: DataFrame) -> str:
 
 
 @_contextmanager
-def bounded_eval_scope(spark: SparkSession, n_rows: int):
-    """Input-derived shuffle width around an EAGER bounded-eval
-    computation; always restored in ``finally``. Yields the width.
+def bounded_eval_scope(
+    spark: SparkSession, n_rows: int, rows_per_part: int = _EVAL_ROWS_PER_PART
+):
+    """The eager-evaluation regime: input-derived shuffle width, plus
+    AQE off when that width sits at its floor, around an EAGER bounded
+    computation; both confs always restored in ``finally``. Yields the
+    width.
 
-    Why: a multi-shuffle analytic eval over a bounded input pays the
-    session's corpus width at every exchange AND inside every
+    Why the width: a multi-shuffle analytic eval over a bounded input
+    pays the session's corpus width at every exchange AND inside every
     persisted intermediate — an InMemoryRelation keeps its build
     width; AQE coalesces shuffle *reads*, not cache partitioning — so
     under a vanilla 200-partition session the eval launches hundreds
@@ -428,21 +436,31 @@ def bounded_eval_scope(spark: SparkSession, n_rows: int):
     q_association_rules / q_shingle_size_sensitivity /
     q_graph_assortativity / q_graph_common_neighbors (13-28 s -> ~1 s
     at sf0.01; BASELINE.md "Round 8 — bounded-eval width scope").
-    Width derives from the driving table's footer rows — max(4,
-    min(cap, rows // 8192 + 1)), cap = session width floored at 32 —
+    Width derives from the driving row count — max(4, min(cap,
+    n_rows // rows_per_part + 1)), cap = session width floored at 32 —
     never a pinned constant, so a genuinely large input keeps corpus
-    width and the 100 TB posture is unchanged.
+    width and the 100 TB posture is unchanged. Iteration loops nest a
+    second scope over their measured |V| or edge count with
+    ``rows_per_part=_LOOP_ROWS_PER_PART``.
+
+    Why AQE goes off at the floor, and only there: at width 4 AQE has
+    nothing to coalesce and no skew to split, yet every query stage
+    still costs its own job, a re-optimisation and a re-rendered plan.
+    At sf0.001 a cold q_ts_similarity call ran 35 jobs and
+    q_graph_pagerank 28; with AQE off they run 4 and 11
+    (tests/test_bounded_eval.py bounds both). Above the floor AQE
+    still earns its keep: with AQE off at sf0.1 (width 13),
+    q_ts_similarity plans its capped pairwise stage (at most 300 rows
+    per side) as a CartesianProduct of two 13-partition sides, 169
+    tasks, where AQE's runtime broadcast makes it one nested-loop
+    join. So above the floor AQE keeps the session's value.
 
     Callers MUST materialize inside the scope (these evals end in at
     most a few dozen rows — ``localCheckpoint(eager=True)`` them): a
     lazily returned DataFrame executes after ``finally`` restores the
-    conf and sees none of this (the graph-BFS lesson at
-    operators/graph.py::_node_loop_scope). AQE stays untouched —
-    single-pass plans benefit from it and the measured wins were taken
-    with AQE on; only iterative loop boundaries need it off (the
-    _node_loop_scope sibling). Conf is session-global for the scope's
-    duration — same single-threaded-driver regime as the siblings,
-    concurrent-query correctness pinned by
+    confs and sees none of this. Conf is session-global for the
+    scope's duration — the single-threaded-driver regime;
+    concurrent-query correctness is pinned by
     tests/test_dedup.py::test_lp_conf_scope_concurrent_query_correct.
     """
     parts_was = spark.conf.get("spark.sql.shuffle.partitions", "200")
@@ -450,18 +468,22 @@ def bounded_eval_scope(spark: SparkSession, n_rows: int):
         cap = max(int(parts_was), 32)
     except ValueError:
         cap = 32
-    parts = max(4, min(cap, n_rows // _EVAL_ROWS_PER_PART + 1))
-    # Token restore (r8 ADVICE warning upgraded per r9 ADVICE): a
-    # concurrent interleaved scope now keeps its value instead of
-    # being clobbered with this scope's stale save point — the warn
-    # stays, the stomp goes (see conf_token_set).
-    restore = conf_token_set(
-        spark, "spark.sql.shuffle.partitions", str(parts)
-    )
+    parts = max(_FLOOR_PARTS, min(cap, n_rows // rows_per_part + 1))
+    # Token restores (conf_token_set): a concurrent interleaved scope
+    # keeps its value instead of being clobbered with this scope's
+    # stale save point — the warn stays, the stomp goes.
+    restores = [
+        conf_token_set(spark, "spark.sql.shuffle.partitions", str(parts))
+    ]
+    if parts == _FLOOR_PARTS:
+        restores.append(
+            conf_token_set(spark, "spark.sql.adaptive.enabled", "false")
+        )
     try:
         yield parts
     finally:
-        restore()
+        for restore in reversed(restores):
+            restore()
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:

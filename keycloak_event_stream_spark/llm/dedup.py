@@ -30,8 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from keycloak_event_stream_spark.catalog import (
+    _LOOP_ROWS_PER_PART,
     bounded_eval_scope,
-    conf_token_set,
     footer_rows,
     load_table,
     pin,
@@ -700,16 +700,6 @@ def q_dedup_fuzzy_name(spark: SparkSession, sf_dir: str) -> DataFrame:
 # one action either way. Deep chain-shaped graphs ramp up to 4-round
 # batches; the schedule sums to the original 20-round diameter bound.
 _LP_SCHEDULE = (2, 2, 4, 4, 4, 4)
-# Exchange width for the loop's node-sized label shuffles: the label
-# table is tiny relative to the corpus (only docs in near-dup
-# clusters), so a session-wide shuffle.partitions sized for corpus
-# scans would pay pure task-scheduling latency here. The actual width
-# is derived from the measured edge count (see q_dedup_components):
-# floor 4, cap max(session width, _LP_PARTS); _LP_ROWS_PER_PART says
-# how many (long, long) edge rows one loop partition should carry
-# before another task is worth its launch overhead.
-_LP_PARTS = 32
-_LP_ROWS_PER_PART = 65536
 # Edge-table broadcast guard for the LP loop. The broadcast table is
 # the symmetrized edges PLUS one self-edge per node, and every node
 # has >=1 outgoing symmetrized edge, so its row count is bounded by
@@ -799,8 +789,9 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist); past it, the edges are pre-partitioned by dst and each
     round shuffles the label table only (nodes, not documents). The
     loop's exchange width is likewise sized from the measured edge
-    count — the AQE coalescing decision, made once (AQE itself stays
-    off in the loop; see the inline note). DuckDB's recursive
+    count — the AQE coalescing decision, made once (AQE itself goes
+    off while that width sits at its floor; see the inline note).
+    DuckDB's recursive
     transitive closure is the oracle."""
     clones, reps, rep_pairs = _clone_rep_pairs(spark, sf_dir)
     rp = pin(rep_pairs.select("doc_a", "doc_b"))
@@ -827,29 +818,23 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE's per-boundary re-planning + broadcast-join rebuilds add
     # ~2x wall time here (measured: 2.3s -> 1.1s per 4-round batch at
     # sf0.1) while offering nothing — there is no skew or size surprise
-    # in (node, label) rows. Disable it for the loop only, restore on
-    # exit; the big scans above it keep AQE. With AQE off the loop must
-    # ALSO pin the shuffle width: a corpus-sized session default (200+
-    # under the driver's vanilla session) would otherwise pay 200-400
-    # near-empty tasks per round with no AQE coalescing to rescue it
-    # (measured 27.6s vs 11s at sf0.01 before this pin). The width is
-    # sized from the MEASURED edge count (the sym.count() above is
-    # already paid as the cache pin): this is exactly the coalescing
-    # decision AQE would make per boundary, made once for the whole
-    # loop. Floor 4 keeps local runs at a handful of tasks per stage
-    # (sf0.1's ~500-row label table spent more on 32-task launch
-    # overhead than on data); the cap is the session's own width so a
-    # cluster session with thousands of partitions configured still
-    # gets them when the pair graph is billions of edges.
+    # in (node, label) rows — and a corpus-sized session width (200+
+    # under the driver's vanilla session) pays 200-400 near-empty tasks
+    # per round (measured 27.6s vs 11s at sf0.01). The loop therefore
+    # runs in catalog.bounded_eval_scope over the MEASURED edge count
+    # (the sym.count() above is already paid as the cache pin): floor
+    # 4, where AQE also goes off, cap the session's own width so a
+    # cluster session keeps its thousands of partitions when the pair
+    # graph is billions of edges. The big scans above it keep the
+    # session's regime.
     #
     # NOTE (conf-scoping decision, recorded round 8 per the r7 verdict
-    # #6): these two confs are session-global for the duration of the
-    # loop — a concurrent query on the same SparkSession runs with AQE
-    # off and the loop's shuffle width, and a caller re-executing the
-    # returned labels after cache eviction recomputes under the
-    # restored session confs. Both are CORRECT either way; only the
-    # wall-clock regime differs — pinned by
-    # tests/test_dedup.py::test_lp_conf_scope_concurrent_query_correct,
+    # #6): the scope's confs are session-global for the duration of the
+    # loop — a concurrent query on the same SparkSession runs in the
+    # loop's regime, and a caller re-executing the returned labels
+    # after cache eviction recomputes under the restored session confs.
+    # Both are CORRECT either way; only the wall-clock regime differs —
+    # pinned by tests/test_dedup.py::test_lp_conf_scope_concurrent_query_correct,
     # which runs a probe query repeatedly on the same session WHILE the
     # loop holds the confs and asserts identical results. The
     # spark.newSession() isolation alternative was evaluated and
@@ -861,22 +846,10 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # worse than a bounded, restored, test-pinned conf scope. The
     # driver contract evaluates queries sequentially on one session,
     # which is the regime this scoping is tuned for.
-    parts_was = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    try:
-        _cap = max(int(parts_was), _LP_PARTS)
-    except ValueError:
-        _cap = _LP_PARTS
-    parts = max(4, min(_cap, n_sym // _LP_ROWS_PER_PART + 1))
-    # token restores (catalog.conf_token_set, r9 ADVICE): a concurrent
-    # interleaved scope keeps its value instead of being clobbered
-    _restores = [
-        conf_token_set(spark, "spark.sql.adaptive.enabled", "false"),
-        conf_token_set(spark, "spark.sql.shuffle.partitions", str(parts)),
-    ]
     # sym + one self-edge per node; nodes <= n_sym in a symmetrized
     # graph, so 2*n_sym bounds what the broadcast actually carries.
     bcast = 2 * n_sym <= _LP_BROADCAST_EDGE_ROWS
-    try:
+    with bounded_eval_scope(spark, n_sym, _LOOP_ROWS_PER_PART) as parts:
         nodes = sym.select(F.col("src").alias("id")).distinct()
         # self-edges make every node its own neighbor: one join+min per
         # round replaces neighbor-min + left-join, and no node can drop
@@ -946,9 +919,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             prev_cache = labels
             if row["s_prev"] == row["s_new"]:
                 break
-    finally:
-        for _r in reversed(_restores):
-            _r()
     # member fan-out (LINEAR, runs under the restored session confs):
     # a clone group's members belong to exactly the component of their
     # representative, so one ckey equi-join attaches them — no member

@@ -5,9 +5,11 @@ Complements the connected-components label propagation in
 The reference computes nothing iterative (SURVEY.md §2.2); this is
 north-star engine surface demonstrating the Spark idiom for iterative
 algorithms: a driver ``for`` loop over joins with edges/degrees
-persisted once. HITS, k-core and BFS run eagerly and truncate lineage
-with a ``localCheckpoint`` every round; PageRank checkpoints only its
-seed and returns one lazy plan over its five rounds.
+persisted once. Every loop runs eagerly inside
+``catalog.bounded_eval_scope`` (the exchange-regime comment below) and
+returns a ``localCheckpoint(eager=True)`` result. HITS, k-core and BFS
+materialize every round; PageRank checkpoints its seed and composes
+its five rounds into the one plan that its result checkpoint executes.
 
 Exactness across engines (the whole point of the oracle check): each
 iteration's per-edge contribution ``r/deg`` is rounded to 6 decimals,
@@ -19,14 +21,12 @@ replay of the same recurrence.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from keycloak_event_stream_spark.catalog import (
+    _LOOP_ROWS_PER_PART,
     bounded_eval_scope,
-    conf_token_set,
     footer_rows,
     load_table,
     pin,
@@ -91,48 +91,19 @@ def _state(df: DataFrame, bcast: bool) -> DataFrame:
 
 
 # Exchange regime for EAGER iteration loops (round 8; the dedup-LP
-# lesson generalized): a loop whose per-round actions move |V|-row
-# state tables pays the session's AQE re-planning and corpus-scale
-# shuffle width as pure scheduling overhead — measured 37->8 s (BFS),
-# 64->14 s (k-core), 8.3->5.7 s (HITS, sf0.1) under the driver's
-# vanilla 200-partition session, and still faster under a tuned
-# 32-width session (no regression; BASELINE.md "Round 8"). The width
-# derives from the MEASURED node count the broadcast guard already
-# paid for: floor 4 (local runs shouldn't pay 32-200 task launches per
-# tiny stage), cap = the session's own width (a cluster session with
-# thousands of partitions keeps them when |V| is huge). Only works for
-# loops that EXECUTE inside the scope (localCheckpoint per round) —
-# a lazy loop's plan executes at the caller's action, after restore.
-_LOOP_ROWS_PER_PART = 65536
-
-
-@contextmanager
-def _node_loop_scope(spark: SparkSession, n_nodes: int):
-    """AQE-off + node-count-derived shuffle width around an eager
-    |V|-row iteration loop; always restored. Session-global for the
-    loop's duration — same single-threaded-driver regime as the dedup
-    LP loop, whose concurrent-query correctness test
-    (tests/test_dedup.py::test_lp_conf_scope_concurrent_query_correct)
-    pins that a concurrent query stays CORRECT, just re-regimed."""
-    parts_was = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    try:
-        cap = max(int(parts_was), 32)
-    except ValueError:
-        cap = 32
-    parts = max(4, min(cap, n_nodes // _LOOP_ROWS_PER_PART + 1))
-    # token restores (catalog.conf_token_set, r9 ADVICE): a concurrent
-    # interleaved scope keeps its value instead of being clobbered
-    restores = [
-        conf_token_set(spark, "spark.sql.adaptive.enabled", "false"),
-        conf_token_set(
-            spark, "spark.sql.shuffle.partitions", str(parts)
-        ),
-    ]
-    try:
-        yield parts
-    finally:
-        for r in reversed(restores):
-            r()
+# lesson generalized) — catalog.bounded_eval_scope owns it. Each loop
+# query's whole body runs under a width derived from lineitem footer
+# rows (the |E| edge build), and its rounds nest a second scope over
+# the MEASURED node count the broadcast guard already paid for, with
+# rows_per_part=_LOOP_ROWS_PER_PART: floor 4, where AQE goes off too
+# (|V| keeps every loop there at fixture sizes), cap = the session's
+# own width so a cluster session keeps its parallelism when |V| is
+# huge. Measured 37->8 s (BFS), 64->14 s (k-core), 8.3->5.7 s (HITS,
+# sf0.1) under the driver's vanilla 200-partition session, and still
+# faster under a tuned 32-width session (BASELINE.md "Round 8"). Only
+# works for loops that EXECUTE inside the scopes (a localCheckpoint or
+# count per round, and an eager result) — a lazy plan executes at the
+# caller's action, after restore.
 
 
 def _duck_pagerank() -> str:
@@ -181,103 +152,124 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer<->supplier trade graph derived from orders x lineitem;
     top-50 nodes. The Spark iterative idiom: edges+degrees computed
     once and persisted, the driver loop re-joins only the rank vector
-    (|nodes| rows — the small, shrinking state). Only the seed rank
-    vector is localCheckpoint'ed: the loop builds one lazy plan five
-    rank joins tall, which the caller executes. Symmetric edges mean
+    (|nodes| rows — the small, shrinking state). Symmetric edges mean
     no dangling-mass correction is needed and every node receives
     inbound mass each step. The rank
     vector broadcasts into the edge join while |nodes| is at or under
     spark.kes.graph.broadcastMaxNodes (size-guarded — see _use_broadcast);
     above the limit the hint drops away and the per-iteration join
     zippers the |V|-row rank exchange against the src-pre-partitioned
-    cached edge table instead of OOMing the executors."""
-    o = spread(load_table(spark, sf_dir, "orders"))
-    l = spread(load_table(spark, sf_dir, "lineitem"))
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    pairs = pin(pairs)
-    c_node = F.concat(F.lit("c"), F.col("o_custkey"))
-    s_node = F.concat(F.lit("s"), F.col("l_suppkey"))
-    edges = (
-        pairs.select(c_node.alias("src"), s_node.alias("dst"))
-        .unionByName(pairs.select(s_node.alias("src"), c_node.alias("dst")))
-    )
-    # out-degree as a map-side-combined groupBy over the PERSISTED pair
-    # table: only |V| partial rows cross the wire, where the previous
-    # count-window shape exchanged the full |E| edge list by src before
-    # the dst repartition exchanged it again — two |E| shuffles in the
-    # cold build. The deg groupBy also replaces the old nodes-distinct
-    # shuffle (deg IS the distinct src set), saving a third exchange,
-    # and the edge table no longer carries a deg column at all: the
-    # per-src contribution is computed on the |V|-row side each round
-    # (see the loop), so the cached edge list is exactly (src, dst).
-    deg = pin(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
-    n_nodes = deg.count()
-    if n_nodes == 0:
-        # Empty graph (a zero-match input slice is routine at scale —
-        # a pruned partition, a new tenant): degrade to an empty
-        # result with the output schema instead of dividing the 1/|V|
-        # seed by zero on the driver.
-        return spark.createDataFrame([], "node string, pagerank double")
-    bcast = _use_broadcast(spark, n_nodes)
-    # hash-partition the cached edge table ONCE on the loop's hot key:
-    # dst under broadcast (every iteration's groupBy(dst) is satisfied
-    # by the cached layout — 5 shuffles of |edges| become 0), src in
-    # shuffle mode (the per-iteration contrib join clusters on src;
-    # each iteration then exchanges only the |V|-row contrib vector).
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    loop_edges = pin(edges.repartition(n_shuffle, "dst" if bcast else "src"))
-    ranks = deg.select(
-        F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
-    ).localCheckpoint()
-    for _ in range(_ITERS):
-        # Per-round work is split so the |E|-row side does NOTHING but
-        # a hash probe and a long sum (r10 verdict #7 — the iterations,
-        # not the build, dominated the 10x cold row at 3.5 s/round):
-        # 1) contribs: r/deg rounded to 6 dp on the |V|-row side — the
-        #    divisions and roundings run |V| times, not |E| times as
-        #    the previous deg-column-on-edges shape did;
-        # 2) the 6-dp contribution is carried as LONG micro-units
-        #    (round(x,6)*1e6 re-rounded to kill the float ulp), so the
-        #    per-dst reduction is a codegen long sum instead of a
-        #    DECIMAL(27,6) sum. sum_micro/1e6 is bitwise the oracle's
-        #    CAST(sum(DECIMAL) AS DOUBLE): both are the correctly-
-        #    rounded double of the exact integer-scaled sum. Overflow
-        #    is impossible at any scale — the GLOBAL rank mass is 1,
-        #    so all micro-contributions ever summed total ~1e6.
-        # Measured at the 10x replica: 5 rounds 17.7 -> 10.0 s, cold
-        # 10x row 14.96 -> 7.35 s (ratio 6.2x -> 3.2x), 100x leg
-        # 159 -> 63 s (49.5x -> 22.8x); sf0.1 steady-state 1.86 s,
-        # inside the prior 1.60 s row's noise band.
-        contribs = (
-            ranks.join(deg, ranks.node == deg.src)
-            .select(
-                "node",
-                F.round(F.round(F.col("r") / F.col("deg"), 6) * 1e6)
-                .cast("long")
-                .alias("cm"),
-            )
+    cached edge table instead of OOMing the executors.
+
+    Eager and scoped like HITS, k-core and BFS (the exchange-regime
+    comment above _duck_pagerank): the build runs at the
+    lineitem-derived width, the five rounds and the top-50
+    ``localCheckpoint(eager=True)`` under the node-derived loop width.
+    Each round reads the previous rank vector once (HITS's
+    normalization reads its sums twice and cannot), so the rounds
+    still compose into one plan; it executes inside the scopes, with
+    AQE off at the floor width, not at the caller's action."""
+    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
+        o = spread(load_table(spark, sf_dir, "orders"))
+        l = spread(load_table(spark, sf_dir, "lineitem"))
+        pairs = (
+            o.join(l, o.o_orderkey == l.l_orderkey)
+            .select("o_custkey", "l_suppkey")
+            .distinct()
         )
-        # size-guarded broadcast, same guard as before: |V| contrib
-        # rows broadcast while they fit, degrading to the shuffle join
-        # against the src-partitioned cached edge layout above it.
-        ranks = (
-            loop_edges.join(_state(contribs, bcast), loop_edges.src == contribs.node)
-            .groupBy("dst")
-            .agg(
-                (
-                    F.lit(0.15 / n_nodes)
-                    + _DAMP * (F.sum("cm") / F.lit(1e6))
-                ).alias("r")
-            )
-            .select(F.col("dst").alias("node"), "r")
+        pairs = pin(pairs)
+        c_node = F.concat(F.lit("c"), F.col("o_custkey"))
+        s_node = F.concat(F.lit("s"), F.col("l_suppkey"))
+        edges = (
+            pairs.select(c_node.alias("src"), s_node.alias("dst"))
+            .unionByName(pairs.select(s_node.alias("src"), c_node.alias("dst")))
         )
-    return ranks.select("node", F.col("r").alias("pagerank")).orderBy(
-        F.col("pagerank").desc(), "node"
-    ).limit(50)
+        # out-degree as a map-side-combined groupBy over the PERSISTED pair
+        # table: only |V| partial rows cross the wire, where the previous
+        # count-window shape exchanged the full |E| edge list by src before
+        # the dst repartition exchanged it again — two |E| shuffles in the
+        # cold build. The deg groupBy also replaces the old nodes-distinct
+        # shuffle (deg IS the distinct src set), saving a third exchange,
+        # and the edge table no longer carries a deg column at all: the
+        # per-src contribution is computed on the |V|-row side each round
+        # (see the loop), so the cached edge list is exactly (src, dst).
+        deg = pin(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+        n_nodes = deg.count()
+        if n_nodes == 0:
+            # Empty graph (a zero-match input slice is routine at scale —
+            # a pruned partition, a new tenant): degrade to an empty
+            # result with the output schema instead of dividing the 1/|V|
+            # seed by zero on the driver.
+            return spark.createDataFrame([], "node string, pagerank double")
+        bcast = _use_broadcast(spark, n_nodes)
+        # hash-partition the cached edge table ONCE on the loop's hot key:
+        # dst under broadcast (every iteration's groupBy(dst) is satisfied
+        # by the cached layout — 5 shuffles of |edges| become 0), src in
+        # shuffle mode (the per-iteration contrib join clusters on src;
+        # each iteration then exchanges only the |V|-row contrib vector).
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        loop_edges = pin(edges.repartition(n_shuffle, "dst" if bcast else "src"))
+        with bounded_eval_scope(spark, n_nodes, _LOOP_ROWS_PER_PART):
+            ranks = deg.select(
+                F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
+            ).localCheckpoint()
+            for _ in range(_ITERS):
+                # Per-round work is split so the |E|-row side does
+                # NOTHING but a hash probe and a long sum (r10 verdict
+                # #7 — the iterations, not the build, dominated the 10x
+                # cold row at 3.5 s/round):
+                # 1) contribs: r/deg rounded to 6 dp on the |V|-row
+                #    side — the divisions and roundings run |V| times,
+                #    not |E| times as the previous deg-column-on-edges
+                #    shape did;
+                # 2) the 6-dp contribution is carried as LONG
+                #    micro-units (round(x,6)*1e6 re-rounded to kill the
+                #    float ulp), so the per-dst reduction is a codegen
+                #    long sum instead of a DECIMAL(27,6) sum.
+                #    sum_micro/1e6 is bitwise the oracle's CAST(sum(
+                #    DECIMAL) AS DOUBLE): both are the correctly-rounded
+                #    double of the exact integer-scaled sum. Overflow is
+                #    impossible at any scale — the GLOBAL rank mass is
+                #    1, so all micro-contributions ever summed total
+                #    ~1e6.
+                # Measured at the 10x replica: 5 rounds 17.7 -> 10.0 s,
+                # cold 10x row 14.96 -> 7.35 s (ratio 6.2x -> 3.2x),
+                # 100x leg 159 -> 63 s (49.5x -> 22.8x); sf0.1
+                # steady-state 1.86 s, inside the prior 1.60 s row's
+                # noise band.
+                contribs = (
+                    ranks.join(deg, ranks.node == deg.src)
+                    .select(
+                        "node",
+                        F.round(F.round(F.col("r") / F.col("deg"), 6) * 1e6)
+                        .cast("long")
+                        .alias("cm"),
+                    )
+                )
+                # size-guarded broadcast, same guard as before: |V|
+                # contrib rows broadcast while they fit, degrading to the
+                # shuffle join against the src-partitioned cached edge
+                # layout above it.
+                ranks = (
+                    loop_edges.join(
+                        _state(contribs, bcast),
+                        loop_edges.src == contribs.node,
+                    )
+                    .groupBy("dst")
+                    .agg(
+                        (
+                            F.lit(0.15 / n_nodes)
+                            + _DAMP * (F.sum("cm") / F.lit(1e6))
+                        ).alias("r")
+                    )
+                    .select(F.col("dst").alias("node"), "r")
+                )
+            return (
+                ranks.select("node", F.col("r").alias("pagerank"))
+                .orderBy(F.col("pagerank").desc(), "node")
+                .limit(50)
+                .localCheckpoint(eager=True)
+            )
 
 
 @_q(
@@ -448,18 +440,10 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL (order-independent); normalization divides two identically
     derived doubles — the q_graph_pagerank discipline, so 4 iterations
     stay bitwise-equal to DuckDB's unrolled-CTE replay."""
-    # Build-phase width (catalog.bounded_eval_scope, round 9): the
-    # |E| edge build, its persist and the |V| guard count ran BEFORE
-    # the loop scope at the session's corpus width — under a vanilla
-    # 200-partition session that pre-loop phase dominated (BASELINE.md
-    # "Round 9 - graph build phase"). The WHOLE body (build + guard
-    # count + loop + final stats) now runs under an input-derived
-    # width driven by lineitem footer rows; _node_loop_scope nests
-    # inside for the iteration phase (AQE off, node-derived width)
-    # and restores to the build width, which the outer scope restores
-    # to the session width. The returned frame materializes eagerly
-    # inside the scope (localCheckpoint) so no exchange compiles at
-    # the restored width.
+    # Exchange regime (module comment above _duck_pagerank): the build
+    # runs at the lineitem-derived width, the rounds at the node-derived
+    # one, and the result materializes inside both (BASELINE.md
+    # "Round 9 - graph build phase").
     with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
         o = spread(load_table(spark, sf_dir, "orders"))
         l = spread(load_table(spark, sf_dir, "lineitem"))
@@ -500,12 +484,12 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "src": pin(edges.repartition(n_shuffle, "src")),
                 "dst": pin(edges.repartition(n_shuffle, "dst")),
             }
-        # loop conf scope (see docstring and _node_loop_scope): the 8 eager
+        # loop conf scope (see docstring): the 8 eager
         # half-step actions move only |V|-row score tables. Every score
         # the output reads is localCheckpoint'ed, so the edge pins are
         # dead weight after the eager materialization; pin_scope drops
         # them, on failure too.
-        with _node_loop_scope(spark, n_hubs):
+        with bounded_eval_scope(spark, n_hubs, _LOOP_ROWS_PER_PART):
             h = (
                 edges.select("src")
                 .distinct()
@@ -826,8 +810,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the survivor node lists shrink monotonically — later
     iterations broadcast.
 
-    Round 8: the peels run EAGERLY (localCheckpoint per round) inside
-    ``_node_loop_scope`` — the lazy one-action compose left every peel
+    Round 8: the peels run EAGERLY (a counted pin per round) inside
+    the loop-width scope — the lazy one-action compose left every peel
     exchange at the session's corpus-scale width with AQE re-planning
     each boundary, which under the driver's vanilla 200-partition
     session cost 64.4 s at sf0.01 vs **14.3 s** scoped (and 4.1 vs
@@ -838,18 +822,10 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     right-sized exchanges; round 9 moved the |E|-sized edge build
     under an input-derived width as well (the build-phase comment
     below)."""
-    # Build-phase width (catalog.bounded_eval_scope, round 9): the
-    # |E| edge build, its persist and the |V| guard count ran BEFORE
-    # the loop scope at the session's corpus width — under a vanilla
-    # 200-partition session that pre-loop phase dominated (BASELINE.md
-    # "Round 9 - graph build phase"). The WHOLE body (build + guard
-    # count + loop + final stats) now runs under an input-derived
-    # width driven by lineitem footer rows; _node_loop_scope nests
-    # inside for the iteration phase (AQE off, node-derived width)
-    # and restores to the build width, which the outer scope restores
-    # to the session width. The returned frame materializes eagerly
-    # inside the scope (localCheckpoint) so no exchange compiles at
-    # the restored width.
+    # Exchange regime (module comment above _duck_pagerank): the build
+    # runs at the lineitem-derived width, the rounds at the node-derived
+    # one, and the result materializes inside both (BASELINE.md
+    # "Round 9 - graph build phase").
     # Memory shape (round 11): the previous form peeled the DOUBLED
     # string-keyed edge list ("c123"/"s45" x both directions), so four
     # generations of 2|pairs| string rows sat checkpointed at once —
@@ -883,7 +859,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         bcast = _use_broadcast(spark, n_nodes)
         gen_pins: list[DataFrame] = []
-        with _node_loop_scope(spark, n_nodes):
+        with bounded_eval_scope(spark, n_nodes, _LOOP_ROWS_PER_PART):
             for _ in range(3):
                 # the surviving-node lists are |nodes|-sized (and
                 # shrink every round) — broadcast both endpoint
@@ -1008,7 +984,7 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolls the identical 3 hops.
 
     Round 8: hops run EAGERLY (localCheckpoint per frontier) inside
-    ``_node_loop_scope`` — the lazy compose left every hop's distinct
+    the loop-width scope — the lazy compose left every hop's distinct
     and anti-join at the session's corpus-scale width with AQE
     re-planning per boundary: 37.4 s at sf0.01 under the driver's
     vanilla 200-partition session vs **7.8 s** scoped (4.2 vs 3.5 s
@@ -1017,18 +993,10 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     |V|-bounded and checkpointed, so the visited union needs no
     persists; round 9 moved the |E|-sized edge build under an
     input-derived width as well (the build-phase comment below)."""
-    # Build-phase width (catalog.bounded_eval_scope, round 9): the
-    # |E| edge build, its persist and the |V| guard count ran BEFORE
-    # the loop scope at the session's corpus width — under a vanilla
-    # 200-partition session that pre-loop phase dominated (BASELINE.md
-    # "Round 9 - graph build phase"). The WHOLE body (build + guard
-    # count + loop + final stats) now runs under an input-derived
-    # width driven by lineitem footer rows; _node_loop_scope nests
-    # inside for the iteration phase (AQE off, node-derived width)
-    # and restores to the build width, which the outer scope restores
-    # to the session width. The returned frame materializes eagerly
-    # inside the scope (localCheckpoint) so no exchange compiles at
-    # the restored width.
+    # Exchange regime (module comment above _duck_pagerank): the build
+    # runs at the lineitem-derived width, the rounds at the node-derived
+    # one, and the result materializes inside both (BASELINE.md
+    # "Round 9 - graph build phase").
     # Memory/key shape (round 11, same probe finding as q_graph_kcore):
     # the doubled string-keyed edge list read 22.5x at the 100x leg.
     # The graph is bipartite and BFS frontiers ALTERNATE sides, so the
@@ -1056,7 +1024,7 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # broadcast hints off one node count, like the other state vectors
         n_nodes = cdeg.count() + sdeg.count()
         bcast = _use_broadcast(spark, n_nodes)
-        with _node_loop_scope(spark, n_nodes):
+        with bounded_eval_scope(spark, n_nodes, _LOOP_ROWS_PER_PART):
             cand = cdeg.select(
                 F.col("c").alias("id"), F.lit("c").alias("side"), "deg"
             ).unionByName(

@@ -92,6 +92,12 @@ _MODULES = [
 # green row is oldest. Every other name follows in _MODULES order, then
 # definition order within its module.
 _PRIORITY = [
+    # ---- plan changed at sf0.01: their bounded-eval scope sits at
+    # the floor width, where it now turns AQE off ----
+    "q_lsh_intake_recall_eval",
+    "q_stickiness",
+    "q_embedding_outliers",
+    "q_kn_bigram_lm",
     # ---- first driver rows in round 12 ----
     "q_geo_nearest",
     "q_late_data_quantify",
@@ -105,10 +111,6 @@ _PRIORITY = [
     "q_target_encoding",
     "q_woe_binning",
     "q_null_imputation",
-    "q_array_explode",
-    "q_array_agg",
-    "q_explode_outer",
-    "q_sql_table_fn",
     # ---- code changed in round 12 ----
     "q_bm25",
     "q_perplexity_unigram",

@@ -162,8 +162,8 @@ def _replay_width_scope(spark: SparkSession, rows: int | None):
     own session and are never re-regimed: ``rows=None`` leaves the
     conf untouched. AQE needs no override here — stateful streaming
     disables it itself. The conf is session-global for the run's
-    duration — the same single-threaded-driver regime as the graph
-    loops' ``_node_loop_scope`` (operators/graph.py:113); that a
+    duration — the same single-threaded-driver regime as
+    ``catalog.bounded_eval_scope``; that a
     concurrent query on the re-regimed session stays CORRECT (just
     re-widthed) is pinned by tests/test_dedup.py::
     test_lp_conf_scope_concurrent_query_correct. Shared by

@@ -1,6 +1,7 @@
-"""The bounded-eval width scope (catalog.bounded_eval_scope): width
-derivation, conf restore, and result identity of a rewritten eval
-under a corpus-sized session width — the mechanism behind the round-8
+"""The bounded-eval scope (catalog.bounded_eval_scope): width
+derivation, AQE off at the floor width, conf restore, job counts of
+floor-width evals, and result identity of a rewritten eval under a
+corpus-sized session width — the mechanism behind the round-8
 q_association_rules / q_shingle_size_sensitivity /
 q_graph_assortativity / q_graph_common_neighbors rewrites
 (BASELINE.md "Round 8 — bounded-eval width scope")."""
@@ -11,6 +12,7 @@ import pytest
 
 from keycloak_event_stream_spark.catalog import (
     _EVAL_ROWS_PER_PART,
+    _LOOP_ROWS_PER_PART,
     bounded_eval_scope,
     footer_rows,
     table_path,
@@ -38,49 +40,92 @@ def test_footer_rows_handles_directory_layout(spark, tmp_path):
     assert footer_rows(str(tmp_path), "events") == 1000
 
 
+AQE = "spark.sql.adaptive.enabled"
+
+
 @pytest.mark.parametrize(
-    "session_width,n_rows,expected",
+    "session_width,n_rows,rows_per_part,expected",
     [
         # tiny input under a corpus session -> floor 4
-        ("200", 10, 4),
+        pytest.param("200", 10, _EVAL_ROWS_PER_PART, 4, id="200-10-4"),
         # the measured sf0.01 regime: ~60k rows -> 8
-        ("200", 60_000, 8),
+        pytest.param("200", 60_000, _EVAL_ROWS_PER_PART, 8, id="200-60000-8"),
         # large input keeps the session's corpus width (cap)
-        ("200", 100_000_000, 200),
+        pytest.param(
+            "200", 100_000_000, _EVAL_ROWS_PER_PART, 200,
+            id="200-100000000-200",
+        ),
         # a narrow session is floored at 32 for the cap, so a large
-        # input may widen past the session width (the _node_loop_scope
-        # convention)
+        # input may widen past the session width
         # (a non-numeric session value is unreachable through a real
         # session — conf.set validates the int — so the scope's
         # ValueError fallback stays defensive-only, untested here)
-        ("4", 100_000_000, 32),
+        pytest.param(
+            "4", 100_000_000, _EVAL_ROWS_PER_PART, 32, id="4-100000000-32",
+        ),
+        # the iteration loops' rows-per-part (graph |V|, dedup LP
+        # edges): every fixture graph sits at the floor ...
+        pytest.param(
+            "200", 196_607, _LOOP_ROWS_PER_PART, 4, id="200-196607-65536-4",
+        ),
+        # ... one more row per 65536 widens by one
+        pytest.param(
+            "200", 262_144, _LOOP_ROWS_PER_PART, 5, id="200-262144-65536-5",
+        ),
+        pytest.param(
+            "4", 1_000_000, _LOOP_ROWS_PER_PART, 16, id="4-1000000-65536-16",
+        ),
+        pytest.param(
+            "4", 100_000_000, _LOOP_ROWS_PER_PART, 32,
+            id="4-100000000-65536-32",
+        ),
     ],
 )
-def test_scope_width_formula_and_restore(spark, session_width, n_rows, expected):
+def test_scope_width_formula_and_restore(
+    spark, session_width, n_rows, rows_per_part, expected
+):
     was = spark.conf.get("spark.sql.shuffle.partitions")
+    aqe_was = spark.conf.get(AQE)
     spark.conf.set("spark.sql.shuffle.partitions", session_width)
     try:
-        with bounded_eval_scope(spark, n_rows) as parts:
+        with bounded_eval_scope(spark, n_rows, rows_per_part) as parts:
             assert parts == expected
             assert spark.conf.get("spark.sql.shuffle.partitions") == str(
                 expected
             )
-        # restored verbatim, even a non-numeric caller value
+            # AQE off at the floor width, the session's value above it
+            assert spark.conf.get(AQE) == (
+                "false" if expected == 4 else aqe_was
+            )
+        # restored verbatim
         assert spark.conf.get("spark.sql.shuffle.partitions") == session_width
+        assert spark.conf.get(AQE) == aqe_was
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", was)
+        spark.conf.set(AQE, aqe_was)
 
 
 def test_scope_restores_on_error(spark):
     was = spark.conf.get("spark.sql.shuffle.partitions")
+    aqe_was = spark.conf.get(AQE)
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     try:
         with pytest.raises(RuntimeError, match="boom"):
             with bounded_eval_scope(spark, 10):
                 raise RuntimeError("boom")
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+        assert spark.conf.get(AQE) == aqe_was
+        # a session that never set AQE has it unset again afterwards
+        spark.conf.unset(AQE)
+        assert spark.conf.get(AQE, None) is None
+        with pytest.raises(RuntimeError, match="boom"):
+            with bounded_eval_scope(spark, 10):
+                assert spark.conf.get(AQE) == "false"
+                raise RuntimeError("boom")
+        assert spark.conf.get(AQE, None) is None
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", was)
+        spark.conf.set(AQE, aqe_was)
 
 
 def test_rewritten_eval_is_width_invariant(spark):
@@ -171,6 +216,8 @@ def test_footer_rows_memo_invalidates_on_nested_rewrite(spark, tmp_path):
         "q_lsh_cap_recall_eval",
         "q_minhash_eval",
         "q_embedding_outliers",
+        # pagerank: eager and scoped since its loop joined the family
+        "q_graph_pagerank",
     ],
 )
 def test_r9_scoped_eval_is_width_invariant(spark, name):
@@ -178,11 +225,14 @@ def test_r9_scoped_eval_is_width_invariant(spark, name):
 
     queries, _ = collect()
     was = spark.conf.get("spark.sql.shuffle.partitions")
+    aqe_was = spark.conf.get(AQE)
     try:
         ref = sorted(map(tuple, queries[name](spark, SF_DIR).collect()))
+        assert spark.conf.get(AQE) == aqe_was
         spark.conf.set("spark.sql.shuffle.partitions", "200")
         wide = sorted(map(tuple, queries[name](spark, SF_DIR).collect()))
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+        assert spark.conf.get(AQE) == aqe_was
         assert ref == wide
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", was)
@@ -207,23 +257,43 @@ def test_scope_warns_on_interleaved_mutation(spark):
     import warnings
 
     was = spark.conf.get("spark.sql.shuffle.partitions")
+    aqe_was = spark.conf.get(AQE)
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "200")
-        # nesting: clean, no warning
+        # nesting: clean, no warning — an outer floor scope around an
+        # inner one, and a wide outer scope around a floor inner one
         with warnings.catch_warnings():
             warnings.simplefilter("error")
             with bounded_eval_scope(spark, 10):
                 with bounded_eval_scope(spark, 10):
-                    pass
+                    assert spark.conf.get(AQE) == "false"
+                assert spark.conf.get(AQE) == "false"
+            assert spark.conf.get(AQE) == aqe_was
+            with bounded_eval_scope(spark, 60_000):
+                assert spark.conf.get(AQE) == aqe_was
+                with bounded_eval_scope(spark, 10, _LOOP_ROWS_PER_PART):
+                    assert spark.conf.get(AQE) == "false"
+                assert spark.conf.get(AQE) == aqe_was
+                assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+        assert spark.conf.get(AQE) == aqe_was
+        # a session that never set AQE has it unset again after nesting
+        spark.conf.unset(AQE)
+        with bounded_eval_scope(spark, 10):
+            with bounded_eval_scope(spark, 10):
+                pass
+        assert spark.conf.get(AQE, None) is None
         # simulated interleave: a foreign mutation inside the scope —
         # warn, and do NOT stomp the interloper's live value
+        spark.conf.set(AQE, aqe_was)
         with pytest.warns(RuntimeWarning, match="concurrent width scope"):
             with bounded_eval_scope(spark, 10):
                 spark.conf.set("spark.sql.shuffle.partitions", "77")
         assert spark.conf.get("spark.sql.shuffle.partitions") == "77"
+        assert spark.conf.get(AQE) == aqe_was
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", was)
+        spark.conf.set(AQE, aqe_was)
 
 
 def test_conf_token_set_restores_and_unsets(spark):
@@ -247,3 +317,35 @@ def test_conf_token_set_restores_and_unsets(spark):
         assert spark.conf.get(key, None) is None
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", was)
+
+
+@pytest.mark.parametrize(
+    "name,max_jobs",
+    [
+        # one eager checkpoint of a capped pairwise search: 35 jobs
+        # with AQE on at the floor width (a job per query stage)
+        ("q_ts_similarity", 6),
+        # the build's pins and counts, then one plan over five rounds:
+        # 28 jobs with AQE on
+        ("q_graph_pagerank", 14),
+    ],
+)
+def test_floor_width_eval_job_count(spark, name, max_jobs):
+    """A floor-width eval runs its stages inside a handful of jobs:
+    exact counters (no wall clock) for one cold call, build plus
+    collect, at sf0.001 where every scope of both queries sits at the
+    floor. Guards against AQE coming back on inside the scope."""
+    from keycloak_event_stream_spark.registry import collect
+
+    queries, _ = collect()
+    sc = spark.sparkContext
+    group = f"job-count-{name}"
+    spark.catalog.clearCache()
+    sc.setJobGroup(group, name)
+    try:
+        queries[name](spark, SF_DIR).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= max_jobs, (name, len(jobs))

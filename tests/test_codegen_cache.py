@@ -23,8 +23,22 @@ def _compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+def _clear_compiled_classes(spark) -> None:
+    """Empty Spark's JVM-wide generated-class cache. Plans that sit at
+    the bounded-eval floor width run without AQE, whose stage ids made
+    class names differ between runs, so without this the first round
+    would reuse every class that earlier tests in this JVM compiled."""
+    cls = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    field = cls.getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(cls.getField("MODULE$").get(None)).invalidateAll()
+
+
 def test_second_round_reuses_compiled_classes(spark):
     queries, _ = collect()
+    _clear_compiled_classes(spark)
     compiled = []
     for _ in range(2):
         before = _compiles(spark)

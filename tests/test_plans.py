@@ -23,6 +23,28 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _executed_plans(spark, run) -> str:
+    """Physical plans of every SQL execution ``run()`` started, read
+    from the session's SQL status store (it fills with the UI off). An
+    eager query returns a checkpoint, whose own plan no longer shows
+    the joins that built it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    n = store.executionsCount()
+    before = store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+    run()
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
+    plans = []
+    for i in range(execs.size() - 1, -1, -1):
+        e = execs.apply(i)
+        if e.executionId() <= before:
+            break
+        plans.append(e.physicalPlanDescription())
+    return "\n".join(plans)
+
+
 def test_filters_push_down_to_parquet_scan(spark, queries):
     plan = _plan(queries["q_filter_eq_conj"](spark, SF))
     assert "PushedFilters: [" in plan
@@ -364,7 +386,9 @@ class TestGraphBroadcastSizeGuard:
 
     def test_default_mode_broadcasts_state(self, spark, queries):
         spark.conf.unset(self.CONF)
-        plan = _plan(queries["q_graph_pagerank"](spark, SF))
+        plan = _executed_plans(
+            spark, lambda: queries["q_graph_pagerank"](spark, SF)
+        )
         assert "BroadcastHashJoin" in plan
 
     def test_forced_shuffle_mode_drops_broadcast_hint(self, spark, queries):
@@ -387,8 +411,9 @@ class TestGraphBroadcastSizeGuard:
         # plans cached before the simulated size estimate changed.
         spark.catalog.clearCache()
         try:
-            df = queries["q_graph_pagerank"](spark, SF)
-            plan = _plan(df)
+            plan = _executed_plans(
+                spark, lambda: queries["q_graph_pagerank"](spark, SF)
+            )
             assert "BroadcastHashJoin" not in plan
             assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         finally:

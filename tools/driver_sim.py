@@ -1,6 +1,8 @@
 """Naive driver simulation: ONE default-config session, no GC, no cache
 clearing between queries — the driver's own evaluation shape. Runs the
-the 50 _PRIORITY names (the driver window) against the DuckDB oracle.
+50 _PRIORITY names (the driver window) against the DuckDB oracle, and
+names every query after which spark.sql.adaptive.enabled or
+spark.sql.shuffle.partitions differs from its value before the run.
 
 Run it FROM /tmp (cd /tmp && python3 /root/repo/tools/driver_sim.py):
 local-mode Python workers inherit the driver cwd, so a repo-root run
@@ -34,6 +36,12 @@ def norm(v):
     if isinstance(v, int): return ("i", v)
     return ("s", str(v))
 
+# a query must leave the session conf as it found it (scoped queries
+# restore their width and AQE overrides on exit)
+WATCHED = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+conf0 = {k: spark.conf.get(k, None) for k in WATCHED}
+drifted = []
+
 ok=fail=0
 t_all=time.time()
 for i, name in enumerate(names):
@@ -61,6 +69,15 @@ for i, name in enumerate(names):
     except Exception as e:
         fail+=1
         print(f"[{i+1}/50] {name}: ERR {type(e).__name__}: {str(e)[:200]}", flush=True)
+    conf = {k: spark.conf.get(k, None) for k in WATCHED}
+    if conf != conf0:
+        drifted.append(name)
+        print(f"CONF DRIFT after {name}: {conf0} -> {conf}", flush=True)
+        for k, v in conf0.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 # heap check
 try:
     rt = spark._jvm.java.lang.Runtime.getRuntime()
@@ -68,4 +85,5 @@ try:
     cached = spark._jsparkSession.sharedState().cacheManager().cachedData().size()
     print(f"JVM heap used: {used} MB, CacheManager entries: {cached}", flush=True)
 except Exception: pass
+print(f"conf drift: {', '.join(drifted) or 'none'}", flush=True)
 print(f"DONE: {ok} ok, {fail} fail, {time.time()-t_all:.0f}s total", flush=True)
