@@ -48,6 +48,7 @@ sys.path.insert(0, REPO)
 
 from keycloak_event_stream_spark.registry import collect  # noqa: E402
 from keycloak_event_stream_spark.session import get_spark  # noqa: E402
+from tools.jvm_cpu import compile_ms  # noqa: E402
 
 # The headline set: one per operator family, the shapes that dominate a
 # 100 TB workload (scan-agg, star join, shuffle join, top-k, window,
@@ -302,8 +303,11 @@ def main() -> int:
     # classes each pass (canary included) had to compile: pass 1 fills
     # the codegen cache, later passes should find their classes there
     compiles_per_pass: list[int] = []
+    # HotSpot's compile time each pass (CompilationMXBean, driver JVM)
+    jit_ms_per_pass: list[int] = []
     for _ in range(PASSES):
         compiled = _compiles(spark)
+        jit_ms = compile_ms(spark)
         canary_passes.append(round(_run_cold(queries, CANARY, spark, sf_dir), 3))
         for name in HEADLINE:
             if name not in queries:
@@ -312,6 +316,7 @@ def main() -> int:
                 _run_cold(queries, name, spark, sf_dir)
             )
         compiles_per_pass.append(_compiles(spark) - compiled)
+        jit_ms_per_pass.append(compile_ms(spark) - jit_ms)
     times = {name: round(min(ts), 3) for name, ts in samples.items()}
 
     # Steady-state pagerank leg (r7 verdict #7b): the headline row
@@ -385,6 +390,7 @@ def main() -> int:
         "scale10x_full_stale": stale,
         "pagerank_steady_state_sec": pagerank_steady,
         "janino_compiles_per_pass": compiles_per_pass,
+        "hotspot_compile_ms_per_pass": jit_ms_per_pass,
     }
     try:
         with open(os.path.join(REPO, "BENCH_LOCAL.json"), "w") as fh:

@@ -16,6 +16,7 @@ from __future__ import annotations
 import gc
 import os
 import threading
+import weakref
 from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -289,11 +290,14 @@ def conf_token_set(spark: SparkSession, key: str, value: str):
 class _Pins(threading.local):
     """One thread's pins: ``query`` holds what its registered queries
     pinned lazily (released at the thread's next outermost registered
-    call), ``scopes`` the open :func:`pin_scope` lists, innermost
-    last, and ``depth`` the registered-call nesting depth."""
+    call), ``owners`` maps each of those pins (by ``id``) to a weak
+    reference to the frame its outermost registered call returned,
+    ``scopes`` the open :func:`pin_scope` lists, innermost last, and
+    ``depth`` the registered-call nesting depth."""
 
     def __init__(self) -> None:
         self.query: list[DataFrame] = []
+        self.owners: dict[int, weakref.ref] = {}
         self.scopes: list[list[DataFrame]] = []
         self.depth = 0
 
@@ -338,34 +342,73 @@ def pin_scope():
 
 @_contextmanager
 def query_pins():
-    """Registered-call boundary (``registry.register``). The thread's
-    outermost call first releases the pins its earlier queries left,
-    except those still 'pending': a lazily returned plan that has not
-    executed yet may rely on its pin — a two-phase window re-sampling
-    its range layout on recompute returns wrong row numbers — so an
-    unfilled pin carries over to the next release. Nested calls
-    release nothing.
+    """Registered-call boundary (``registry.register``), used as
+    ``with query_pins() as returned: return returned(fn(...))``.
+
+    The thread's outermost call first releases the pins its earlier
+    queries left, except those still 'pending' whose frame is alive: a
+    lazily returned plan that has not executed yet may rely on its pin
+    — a two-phase window re-sampling its range layout on recompute
+    returns wrong row numbers — so an unfilled pin carries over to the
+    next release. Once the frame its outermost call returned is gone,
+    the pin is released, filled or not, so a caller that keeps only a
+    frame derived from the returned one must execute it before the
+    thread's next registered call. An outermost call that raises
+    releases its pins on the way out. Nested calls release nothing;
+    their pins belong to the outermost call's frame.
 
     The outermost call also runs a full Python collection. py4j
     handles sit in reference cycles, so a finished query's Dataset
     handles — and through their executed plans its broadcast
     relations, several MB each — stay live in the JVM until Python's
     cyclic GC runs, which may be never between queries. Collecting
-    here frees the earlier queries' JVM objects at the next query."""
-    if _pins.depth == 0:
+    here frees the earlier queries' JVM objects, and the frames of
+    dropped plans, at the next query."""
+    outermost = _pins.depth == 0
+    if outermost:
         gc.collect()
         held = []
         for df in _pins.query:
-            if _persist_state(df) == "pending":
+            owner = _pins.owners.pop(id(df), None)
+            alive = owner is None or owner() is not None
+            if alive and _persist_state(df) == "pending":
                 held.append(df)
+                if owner is not None:
+                    _pins.owners[id(df)] = owner
             else:
                 _unpersist(df)
         _pins.query = held
+    made = len(_pins.query)
+    result: list = []
+
+    def returned(df):
+        result.append(df)
+        return df
+
     _pins.depth += 1
     try:
-        yield
+        yield returned
     finally:
         _pins.depth -= 1
+        if outermost:
+            _own(made, result[0] if result else None)
+
+
+def _own(start: int, frame) -> None:
+    """Tie the outermost call's pins, ``_pins.query[start:]``, to a weak
+    reference to ``frame``, the call's result; with no result (the call
+    raised) nothing can fill them, so release them now."""
+    pins = _pins.query
+    if frame is None:
+        for df in pins[start:]:
+            _unpersist(df)
+        del pins[start:]
+        return
+    ref = weakref.ref(frame)
+    for i in range(start, len(pins)):
+        if pins[i] is frame:  # the list must not keep the frame alive
+            pins[i] = type(frame)(frame._jdf, frame.sparkSession)
+        _pins.owners[id(pins[i])] = ref
 
 
 _probe_failure_warned = False

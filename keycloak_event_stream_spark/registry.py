@@ -4,9 +4,10 @@ Every query enters through ``register(name, oracle)``: a decorator that
 records the ``(spark, sf_dir) -> DataFrame`` function and its DuckDB SQL
 twin, and raises on a name registered twice. The registered function
 is a ``functools.wraps`` wrapper that marks the query boundary for pin
-lifetimes (``catalog.query_pins``). ``collect()`` imports every
-module in ``_MODULES`` and returns both maps in driver order. A module
-that fails to import fails ``collect()``: coverage never shrinks quietly.
+lifetimes (``catalog.query_pins``) and hands it the returned frame.
+``collect()`` imports every module in ``_MODULES`` and returns both maps
+in driver order. A module that fails to import fails ``collect()``:
+coverage never shrinks quietly.
 """
 
 from __future__ import annotations
@@ -38,8 +39,8 @@ def register(name: str, oracle: str):
 
         @functools.wraps(fn)
         def query(*args, **kwargs):
-            with query_pins():
-                return fn(*args, **kwargs)
+            with query_pins() as returned:
+                return returned(fn(*args, **kwargs))
 
         _QUERIES[name] = query
         _ORACLE[name] = oracle

@@ -1,6 +1,7 @@
 """Pin lifetimes (catalog.pin / pin_scope / query_pins): a query's pins
 are released by the same thread's next registered call once they are
-filled, or on pin_scope exit; an unexecuted plan keeps its pins."""
+filled, or on pin_scope exit; an unexecuted plan keeps its pins while
+its frame lives."""
 
 from __future__ import annotations
 
@@ -21,6 +22,7 @@ def _cache_size(spark) -> int:
 @pytest.fixture
 def register(monkeypatch):
     """Register throwaway queries without touching the real registry."""
+    registry.collect()  # import every module first: the copy holds them all
     monkeypatch.setattr(registry, "_QUERIES", dict(registry._QUERIES))
     monkeypatch.setattr(registry, "_ORACLE", dict(registry._ORACLE))
     return lambda name, fn: registry.register(name, oracle="SELECT 1")(fn)
@@ -65,6 +67,45 @@ def test_unexecuted_pin_survives_later_queries(spark, register):
         assert _rns(held) == list(range(1, 1001))
         q(spark, 50, 3)
         assert _cache_size(spark) == 1  # only the newest query's pin
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_dropped_frame_releases_its_pending_pin(spark, register):
+    """A query that returns its own pin: the pin stays while the frame
+    lives, unexecuted, and the call after the frame is dropped releases
+    it."""
+    q = register("t_self_pin", lambda spark, n: pin(spark.range(n).select(
+        (F.col("id") % 7).alias("v"))))
+    probe = register("t_probe", lambda spark, n: spark.range(n))
+    spark.catalog.clearCache()
+    try:
+        held = q(spark, 100)
+        probe(spark, 1)
+        assert _cache_size(spark) == 1
+        assert catalog._persist_state(held) == "pending"
+        del held
+        probe(spark, 1)
+        assert _cache_size(spark) == 0
+        assert not catalog._pins.query
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_raising_query_releases_its_pins(spark, register):
+    """A call that raises returns no frame to fill its pins, so it
+    releases them on the way out."""
+    def fails(spark, n):
+        pin(spark.range(n))
+        raise ValueError("after the pin")
+
+    q = register("t_raises", fails)
+    spark.catalog.clearCache()
+    try:
+        with pytest.raises(ValueError):
+            q(spark, 100)
+        assert _cache_size(spark) == 0
+        assert not catalog._pins.query
     finally:
         spark.catalog.clearCache()
 
@@ -239,3 +280,51 @@ def test_registry_pins_released(spark, register):
         if left:
             leaks[name] = len(left)
     assert not leaks, f"{len(leaks)} queries leave entries: {leaks}"
+
+
+# Pinning queries that build lazily: at sf0.001 each leaves its pins
+# 'pending' until its plan executes. The others (graph loops, LSH
+# evals, ...) fill or release their pins before they return.
+DROPPED_PLANS = [
+    "q_abc_xyz", "q_auc_roc", "q_bloom_probe", "q_bpe_encode",
+    "q_bpe_pair_stats", "q_catalog_freshness", "q_changepoint_cusum",
+    "q_churn_hazard_weekly", "q_cohen_kappa", "q_cohort_matrix_triangle",
+    "q_compaction_bins", "q_cross_correlation", "q_curriculum_interleave",
+    "q_dedup_cross_source", "q_dedup_near_minhash", "q_dedup_threshold_sweep",
+    "q_first_last_touch_compare", "q_gain_curve", "q_gini",
+    "q_growth_accounting", "q_hll_merge_eval", "q_join_skew_stats",
+    "q_js_divergence", "q_ks_test", "q_lang_vocab_overlap",
+    "q_late_data_quantify", "q_lead_time", "q_length_batching",
+    "q_levene_test", "q_lorenz_deciles", "q_mad", "q_mannwhitney",
+    "q_market_share_shift", "q_mutual_information", "q_new_vs_returning",
+    "q_order_gap_outliers", "q_outlier_iqr", "q_pack_sequences",
+    "q_pareto_abc", "q_peak_concurrency",
+]
+
+
+def test_dropped_plans_leave_no_pins(spark, register):
+    """A plan audit: 40 pinning queries built and dropped without
+    running. Nothing can fill their pins any more, so one more
+    registered call releases every one of them, 'pending' or not."""
+    from conftest import SF_DIR
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    ident = spark._jvm.System.identityHashCode
+
+    def entries() -> set[int]:
+        seq = cm.cachedData()
+        return {ident(seq.apply(i)) for i in range(seq.size())}
+
+    queries, _ = registry.collect()
+    probe = register("t_probe", lambda spark, sf_dir: spark.range(1))
+    probe(spark, SF_DIR)  # release what earlier calls on this thread left
+    before = entries()
+    for name in DROPPED_PLANS:
+        queries[name](spark, SF_DIR)  # built, never executed, dropped
+    made = entries() - before
+    pending = [catalog._persist_state(d) for d in catalog._pins.query].count("pending")
+    assert made and pending, (len(made), pending)
+
+    probe(spark, SF_DIR)
+    assert not made & entries()
+    assert "pending" not in [catalog._persist_state(d) for d in catalog._pins.query]
