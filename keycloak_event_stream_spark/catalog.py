@@ -94,9 +94,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     of the same table return the same analyzed DataFrame object —
     plan reuse, never data reuse (see _TABLE_MEMO)."""
     if name in _NANO_TS_COLS:
-        # runtime SQL conf — safe to set on a session we didn't build;
-        # re-set on every call (memo hit included) so execution always
-        # sees it even if a caller unset it between loads
+        # get_spark declares it; caller-supplied sessions need it here
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, name)
     app_id = spark.sparkContext.applicationId

@@ -89,12 +89,11 @@ _JACCARD_MIN = 0.2
 # oversized-bucket list, so the band table itself never shuffles for
 # the cap (measured +0.4-0.6 s at sf0.1 vs +3 s for a rank-window
 # formulation). Fixture max occupancy on unique texts is 12 (sf0.1),
-# so the default 512 never engages on the standard fixtures and the
+# so the cap of 512 never engages on the standard fixtures and the
 # oracle comparison is unaffected; the overflow is observable (never
 # silent) through the LAST_CAP_AUDIT DataFrame and through
 # q_lsh_band_occupancy's candidate-pair bill.
-_LSH_BUCKET_CAP_CONF = "spark.kes.dedup.lshBucketCap"
-_LSH_BUCKET_CAP_DEFAULT = 512
+_LSH_BUCKET_CAP = 512
 
 # Pin the representative shingle table while the corpus is at or under
 # this many documents (footer-rows metadata, no action). Shingles are
@@ -321,13 +320,10 @@ def _clone_rep_pairs(
     # never shuffles for the cap. The dropped buckets stay auditable
     # through LAST_CAP_AUDIT (a cache-side aggregate, not an extra
     # action), so an engaged cap is visible, never silent.
-    cap = int(
-        spark.conf.get(_LSH_BUCKET_CAP_CONF, str(_LSH_BUCKET_CAP_DEFAULT))
-    )
     big = (
         bands.groupBy("band", "bkey")
         .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > cap)
+        .filter(F.col("n") > _LSH_BUCKET_CAP)
     )
     global LAST_CAP_AUDIT
     LAST_CAP_AUDIT = big
@@ -394,8 +390,8 @@ def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     size — pays for the clones.
 
     Round-5 (r4 verdict #3 — near-identical boilerplate): any
-    (band, bkey) bucket beyond spark.kes.dedup.lshBucketCap members
-    (default 512; fixture max occupancy is 12, so the cap never
+    (band, bkey) bucket beyond _LSH_BUCKET_CAP members
+    (512; fixture max occupancy is 12, so the cap never
     engages on the standard fixtures and the oracle comparison is
     exact) is dropped WHOLE via a broadcast anti-join against the tiny
     oversized-bucket list — the band table never shuffles for the cap.
@@ -1929,7 +1925,7 @@ def q_lsh_cap_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair and every cap row is a cheap filtered aggregate over it.
 
     This is the tuning table a 100 TB dedup deployment reads before
-    setting spark.kes.dedup.lshBucketCap: candidate cost collapses
+    setting _LSH_BUCKET_CAP: candidate cost collapses
     quadratically as the cap tightens while recall (on non-flooded
     corpora) stays ~1.0 — and a recall cliff at small caps is the
     signal the corpus needs boilerplate stripping, not a bigger cap.

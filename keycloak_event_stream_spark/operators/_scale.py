@@ -33,16 +33,29 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from keycloak_event_stream_spark.catalog import pin
+from keycloak_event_stream_spark.catalog import footer_rows, pin
 
 __all__ = [
     "two_phase_window",
+    "use_two_phase",
     "with_totals",
     "exact_ntile",
     "grouped_value_counts",
 ]
 
 _PID = "_tp_pid"
+
+# Footer rows above which the skewed-window queries (a window partition
+# key with a handful of values) leave the naive window for
+# two_phase_window. Both forms give identical rows; under the threshold
+# the naive plan has no two-phase overhead.
+TWO_PHASE_MIN_ROWS = 2_000_000
+
+
+def use_two_phase(sf_dir: str, table: str) -> bool:
+    """True when ``table``'s parquet footers hold more than
+    TWO_PHASE_MIN_ROWS rows (metadata only, no job)."""
+    return footer_rows(sf_dir, table) > TWO_PHASE_MIN_ROWS
 
 
 def _num_partitions(df: DataFrame, k: int | None) -> int:

@@ -169,15 +169,12 @@ def q_window_distinct_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     # across partition boundaries; 100x leg 3.5 s, 3.3x vs 19.9x).
     # The first-occurrence flag window above stays naive at any scale:
     # it partitions by (type, user) — data-scaled cardinality.
-    from keycloak_event_stream_spark.catalog import footer_rows
     from keycloak_event_stream_spark.operators._scale import (
         two_phase_window,
+        use_two_phase,
     )
 
-    threshold = int(
-        spark.conf.get("spark.kes.window.twoPhaseMinRows", "2000000")
-    )
-    if footer_rows(sf_dir, "events") <= threshold:
+    if not use_two_phase(sf_dir, "events"):
         w_run = (
             Window.partitionBy("event_type")
             .orderBy("ts", "event_id")

@@ -29,6 +29,7 @@ from keycloak_event_stream_spark.catalog import (
 )
 from keycloak_event_stream_spark.operators._scale import (
     two_phase_window,
+    use_two_phase,
 )
 from keycloak_event_stream_spark.registry import register as _q
 
@@ -201,16 +202,8 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types| rows and broadcast back either way. At 100 TB the exact
     rank pass is the expensive-but-honest tier; the sketched tier is
     q_sketch_quantiles."""
-    from keycloak_event_stream_spark.catalog import footer_rows
-    from keycloak_event_stream_spark.operators._scale import (
-        two_phase_window,
-    )
-
     ev = spread(load_table(spark, sf_dir, "events"))
-    threshold = int(
-        spark.conf.get("spark.kes.window.twoPhaseMinRows", "2000000")
-    )
-    if footer_rows(sf_dir, "events") <= threshold:
+    if not use_two_phase(sf_dir, "events"):
         w = W.partitionBy("event_type").orderBy("value", "event_id")
         wn = W.partitionBy("event_type")
         ranked = ev.select(

@@ -48,42 +48,28 @@ _ITERS = 5
 # executor memory — but an unconditional F.broadcast() hint overrides
 # Spark's size threshold, so at a 100 TB graph (|V| in the billions) it
 # OOMs instead of degrading. The guard: broadcast only while the node
-# count is at or under spark.kes.graph.broadcastMaxNodes (default 10M
+# count is at or under _BCAST_MAX_NODES (10M
 # nodes ≈ low hundreds of MB of (id, double) state — comfortably inside
 # a production executor's broadcast budget); above it, drop the hint so
 # the planner falls back to a shuffle join whose state side is |V| rows
 # (cheap to exchange) while the edge table stays in its cached layout,
 # hash-partitioned on the per-iteration join key, and never crosses the
 # wire (EnsureRequirements sees the cached HashPartitioning and only
-# adds the |V|-sized exchange + per-partition sorts). Setting the conf
-# to 0 forces the shuffle path — how tests/test_plans.py pins both
-# plan shapes on the same fixture.
+# adds the |V|-sized exchange + per-partition sorts). A limit of 0
+# forces the shuffle path — how tests/test_plans.py pins both plan
+# shapes on the same fixture.
 
-_BCAST_MAX_NODES_CONF = "spark.kes.graph.broadcastMaxNodes"
-_BCAST_MAX_NODES_DEFAULT = 10_000_000
-
-
-def _bcast_limit(spark: SparkSession) -> int:
-    try:
-        return int(
-            spark.conf.get(
-                _BCAST_MAX_NODES_CONF, str(_BCAST_MAX_NODES_DEFAULT)
-            )
-        )
-    except ValueError:
-        return _BCAST_MAX_NODES_DEFAULT
+_BCAST_MAX_NODES = 10_000_000
 
 
-def _use_broadcast(spark: SparkSession, n_nodes: int | None) -> bool:
+def _use_broadcast(n_nodes: int | None) -> bool:
     """True when a |V|-sized state vector should carry a broadcast
     hint. ``n_nodes=None`` means the caller has no count handy (and no
-    action is worth spending to get one) — then only the conf gates it,
-    giving operators the same escape hatch without extra driver
-    round-trips."""
-    limit = _bcast_limit(spark)
-    if limit <= 0:
+    action is worth spending to get one) — then only a limit of 0
+    withholds the hint."""
+    if _BCAST_MAX_NODES <= 0:
         return False
-    return n_nodes is None or n_nodes <= limit
+    return n_nodes is None or n_nodes <= _BCAST_MAX_NODES
 
 
 def _state(df: DataFrame, bcast: bool) -> DataFrame:
@@ -156,7 +142,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     no dangling-mass correction is needed and every node receives
     inbound mass each step. The rank
     vector broadcasts into the edge join while |nodes| is at or under
-    spark.kes.graph.broadcastMaxNodes (size-guarded — see _use_broadcast);
+    _BCAST_MAX_NODES (size-guarded — see _use_broadcast);
     above the limit the hint drops away and the per-iteration join
     zippers the |V|-row rank exchange against the src-pre-partitioned
     cached edge table instead of OOMing the executors.
@@ -201,7 +187,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             # result with the output schema instead of dividing the 1/|V|
             # seed by zero on the driver.
             return spark.createDataFrame([], "node string, pagerank double")
-        bcast = _use_broadcast(spark, n_nodes)
+        bcast = _use_broadcast(n_nodes)
         # hash-partition the cached edge table ONCE on the loop's hot key:
         # dst under broadcast (every iteration's groupBy(dst) is satisfied
         # by the cached layout — 5 shuffles of |edges| become 0), src in
@@ -411,7 +397,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted; the driver loop re-joins only the score vectors
     (|nodes| rows, size-guarded broadcast into the edge join so edges
     never re-shuffle while |V| fits — above
-    spark.kes.graph.broadcastMaxNodes the hint drops and the scores
+    _BCAST_MAX_NODES the hint drops and the scores
     exchange against per-key cached edge layouts instead);
     localCheckpoint truncates lineage each half-step.
     Map-side partial aggregation bounds each half-step's shuffle at
@@ -468,7 +454,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             return spark.createDataFrame(
                 [], "kind string, node string, score double"
             )
-        bcast = _use_broadcast(spark, n_hubs)
+        bcast = _use_broadcast(n_hubs)
         if bcast:
             edges_by = {"src": edges, "dst": edges}
         else:
@@ -643,7 +629,7 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         d2 = sdeg.select(F.col("s").alias("s2"), F.col("sd").alias("deg2"))
         # degree tables are |V|-sized: same guard as the iterative state
         # vectors, via the conf-only path (no count action worth spending)
-        bcast = _use_broadcast(spark, None)
+        bcast = _use_broadcast(None)
         ranked = (
             common.join(_state(d1, bcast), "s1")
             .join(_state(d2, bcast), "s2")
@@ -857,7 +843,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.select("c").distinct().count()
             + pairs.select("s").distinct().count()
         )
-        bcast = _use_broadcast(spark, n_nodes)
+        bcast = _use_broadcast(n_nodes)
         gen_pins: list[DataFrame] = []
         with bounded_eval_scope(spark, n_nodes, _LOOP_ROWS_PER_PART):
             for _ in range(3):
@@ -1023,7 +1009,7 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # frontier and visited are both bounded by |V| — size-guard their
         # broadcast hints off one node count, like the other state vectors
         n_nodes = cdeg.count() + sdeg.count()
-        bcast = _use_broadcast(spark, n_nodes)
+        bcast = _use_broadcast(n_nodes)
         with bounded_eval_scope(spark, n_nodes, _LOOP_ROWS_PER_PART):
             cand = cdeg.select(
                 F.col("c").alias("id"), F.lit("c").alias("side"), "deg"
@@ -1168,7 +1154,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("d")
         )
         # |V|-sized degree table: size-guarded hint (conf-only path)
-        bcast = _use_broadcast(spark, None)
+        bcast = _use_broadcast(None)
         ed = (
             edges.join(
                 _state(

@@ -271,10 +271,9 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the pair exchange. The filter is a map-side size() predicate on the
 # already-aggregated basket row — no extra shuffle — and dropped
 # baskets surface through LAST_BASKET_CAP_AUDIT (never a silent cap).
-# TPC-H baskets have <= 7 lines, so the default never engages on the
+# TPC-H baskets have <= 7 lines, so the cap never engages on the
 # fixtures and the oracle comparison stays exact.
-_BASKET_CAP_CONF = "spark.kes.basket.maxItems"
-_BASKET_CAP_DEFAULT = 256
+_BASKET_CAP = 256
 
 #: Audit DataFrame for the most recent q_market_basket call: one row
 #: per (l_orderkey, n_items) basket the cap dropped. Lazy — inspecting
@@ -316,15 +315,14 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     row set is deterministic in both engines.
 
     Round-7 (r6 verdict #5): the per-basket fan-out is quadratic in
-    basket size, so baskets beyond ``spark.kes.basket.maxItems``
-    (default 256; TPC-H baskets are <=7 lines, so it never engages on
+    basket size, so baskets beyond ``_BASKET_CAP`` items
+    (256; TPC-H baskets are <=7 lines, so it never engages on
     the fixtures and the oracle stays exact) are dropped whole by a
     map-side size() filter on the aggregated row — same
     bounded-flood + audit design as the LSH bucket cap
     (``llm/dedup.py`` LAST_CAP_AUDIT): dropped baskets are observable
     through LAST_BASKET_CAP_AUDIT, never silent.
     """
-    cap = int(spark.conf.get(_BASKET_CAP_CONF, str(_BASKET_CAP_DEFAULT)))
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -354,8 +352,8 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     global LAST_BASKET_CAP_AUDIT
     LAST_BASKET_CAP_AUDIT = basket.select(
         "l_orderkey", F.size("items").alias("n_items")
-    ).filter(F.col("n_items") > cap)
-    basket = basket.filter(F.size("items") <= cap)
+    ).filter(F.col("n_items") > _BASKET_CAP)
+    basket = basket.filter(F.size("items") <= _BASKET_CAP)
     pairs = basket.select(
         F.explode(
             F.expr(

@@ -695,16 +695,13 @@ def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     range partitioning so tie groups never straddle a boundary —
     pinned by tests/test_scale_windows.py::test_dense_rank_matches_naive
     and the q_window_rank oracle row at both SFs)."""
-    from keycloak_event_stream_spark.catalog import footer_rows
     from keycloak_event_stream_spark.operators._scale import (
         two_phase_window,
+        use_two_phase,
     )
 
     orders = spread(load_table(spark, sf_dir, "orders"))
-    threshold = int(
-        spark.conf.get("spark.kes.window.twoPhaseMinRows", "2000000")
-    )
-    if footer_rows(sf_dir, "orders") <= threshold:
+    if not use_two_phase(sf_dir, "orders"):
         w = W.partitionBy("o_orderstatus").orderBy(
             F.col("o_totalprice").desc(), F.col("o_orderkey")
         )

@@ -908,13 +908,14 @@ def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     and cume_dist = rn/n, the same double divisions WindowExec
     performs (bitwise-equal; the branch test pins it), and ntile is
     reconstructed exactly from (rn, n) via exact_ntile."""
-    o = spread(load_table(spark, sf_dir, "orders"))
-    threshold = int(
-        spark.conf.get("spark.kes.window.twoPhaseMinRows", "2000000")
+    from keycloak_event_stream_spark.operators._scale import (
+        exact_ntile,
+        two_phase_window,
+        use_two_phase,
     )
-    from keycloak_event_stream_spark.catalog import footer_rows
 
-    if footer_rows(sf_dir, "orders") <= threshold:
+    o = spread(load_table(spark, sf_dir, "orders"))
+    if not use_two_phase(sf_dir, "orders"):
         w = W.partitionBy("o_orderpriority").orderBy(
             "o_totalprice", "o_orderkey"
         )
@@ -926,11 +927,6 @@ def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.percent_rank().over(w).alias("pct_rank"),
             F.cume_dist().over(w).alias("cume"),
         )
-    from keycloak_event_stream_spark.operators._scale import (
-        exact_ntile,
-        two_phase_window,
-    )
-
     ranked = two_phase_window(
         o.select(
             "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"

@@ -77,8 +77,14 @@ def get_spark(
         # accepts LTZ while several reject NTZ. Keeps one timestamp
         # type end-to-end regardless of how fixtures were written.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # events.parquet may store TIMESTAMP(NANOS), which Spark 4 only
+        # reads as int64; catalog.load_table converts the raw column
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # --- python boundary ----------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # filter pushdown into Python data sources (sources/pygen.py),
+        # read when a plan over such a source is built
+        .config("spark.sql.python.filterPushdown.enabled", "true")
         # --- storage ------------------------------------------------
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -205,13 +205,7 @@ def read_eventgen(
     spark: SparkSession, audit_path: str | None = None
 ) -> DataFrame:
     register(spark)
-    # Planning-time pushdown for Python sources is conf-gated, and the
-    # gate is consulted at PLAN time of the returned (lazy) DataFrame,
-    # not inside this function — so the conf must stay on after we
-    # return and cannot be save/restored here. It is additive
-    # (enables pushFilters for Python sources; sources that don't
-    # implement it are unaffected), session-scoped, and documented
-    # here as a deliberate session mutation (r5 ADVICE).
+    # get_spark declares it; a caller's session needs it, on at plan time
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     r = (
         spark.read.format("kes_eventgen")

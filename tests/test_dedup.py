@@ -248,7 +248,7 @@ def test_store_read_error_is_not_swallowed(spark, tmp_path):
         df.collect()
 
 
-def test_lsh_bucket_cap_bounds_boilerplate(spark, tmp_path):
+def test_lsh_bucket_cap_bounds_boilerplate(spark, tmp_path, monkeypatch):
     """Date-stamped boilerplate (the r4 verdict's near-identical
     hazard): 40 copies of one template differing only by a trailing
     date token. Not byte-identical, so the exact-clone collapse can't
@@ -278,12 +278,10 @@ def test_lsh_bucket_cap_bounds_boilerplate(spark, tmp_path):
     assert dedup.LAST_CAP_AUDIT.count() == 0
 
     # forced-low cap: candidates bounded, overflow observable
-    spark.conf.set("spark.kes.dedup.lshBucketCap", "6")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_LSH_BUCKET_CAP", 6)
         out = dedup.q_dedup_near_minhash(spark, str(tmp_path))
         pairs = {(r.doc_a, r.doc_b) for r in out.collect()}
-    finally:
-        spark.conf.unset("spark.kes.dedup.lshBucketCap")
     # flooded buckets (the template-dominated ones holding most of the
     # 40 docs) are gone; only pairs meeting in a small (≤6-member)
     # bucket survive, far below the quadratic full set
@@ -292,14 +290,12 @@ def test_lsh_bucket_cap_bounds_boilerplate(spark, tmp_path):
     assert len(audit) > 0  # at least one bucket tripped the cap
     assert all(r.n > 6 for r in audit)
     # determinism: same rows on a re-run
-    spark.conf.set("spark.kes.dedup.lshBucketCap", "6")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_LSH_BUCKET_CAP", 6)
         again = {
             (r.doc_a, r.doc_b)
             for r in dedup.q_dedup_near_minhash(spark, str(tmp_path)).collect()
         }
-    finally:
-        spark.conf.unset("spark.kes.dedup.lshBucketCap")
     assert again == pairs
 
 

@@ -504,7 +504,7 @@ def test_geo_nearest_is_true_argmin(spark):
 def test_market_basket_cap_drops_mega_baskets_with_audit(
     spark, tmp_path, monkeypatch
 ):
-    """Baskets beyond spark.kes.basket.maxItems are dropped WHOLE and
+    """Baskets beyond insights._BASKET_CAP items are dropped WHOLE and
     surface in LAST_BASKET_CAP_AUDIT — the r6-verdict bound on the one
     quadratic term in the pair fan-out. Small baskets still pair."""
     from keycloak_event_stream_spark.operators import insights
@@ -516,15 +516,13 @@ def test_market_basket_cap_drops_mega_baskets_with_audit(
     d.mkdir()
     df.coalesce(1).write.parquet(str(d / "lineitem.parquet"))
 
-    spark.conf.set("spark.kes.basket.maxItems", "5")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(insights, "_BASKET_CAP", 5)
         out = {
             (r.part_a, r.part_b, r.n_orders)
             for r in q_market_basket(spark, str(d)).collect()
         }
         audit = insights.LAST_BASKET_CAP_AUDIT.collect()
-    finally:
-        spark.conf.unset("spark.kes.basket.maxItems")
     # only the small baskets' pair survives; counted across both orders
     assert out == {(100, 101, 2)}
     assert [(r.l_orderkey, r.n_items) for r in audit] == [(1, 10)]

@@ -19,15 +19,6 @@ def _cache_size(spark) -> int:
     return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
 
 
-@pytest.fixture
-def register(monkeypatch):
-    """Register throwaway queries without touching the real registry."""
-    registry.collect()  # import every module first: the copy holds them all
-    monkeypatch.setattr(registry, "_QUERIES", dict(registry._QUERIES))
-    monkeypatch.setattr(registry, "_ORACLE", dict(registry._ORACLE))
-    return lambda name, fn: registry.register(name, oracle="SELECT 1")(fn)
-
-
 def _ranked(spark, n: int, k: int = 5):
     df = spark.range(n).select((F.col("id") * 37 % 211).alias("v"), "id")
     return two_phase_window(df, [F.col("v"), F.col("id")], row_number="rn", k=k)
@@ -221,110 +212,40 @@ def test_persist_state_probe_failure_warns_once_on_live_session(
     assert not [w for w in caught2 if issubclass(w.category, RuntimeWarning)]
 
 
-# Every registered query that pins (directly, through two_phase_window or
-# through a nested registered call) — found by building each query once
-# with persist() instrumented.
-PINNING_QUERIES = [
-    "q_abc_xyz", "q_association_rules", "q_auc_roc", "q_bloom_probe",
-    "q_bpe_encode", "q_bpe_pair_stats", "q_catalog_freshness",
-    "q_changepoint_cusum", "q_churn_hazard_weekly", "q_cohen_kappa",
-    "q_cohort_matrix_triangle", "q_compaction_bins", "q_cross_correlation",
-    "q_curriculum_interleave", "q_dedup_components", "q_dedup_cross_source",
-    "q_dedup_near_minhash", "q_dedup_threshold_sweep",
-    "q_first_last_touch_compare", "q_gain_curve", "q_gini",
-    "q_graph_assortativity", "q_graph_bfs_levels", "q_graph_common_neighbors",
-    "q_graph_hits", "q_graph_kcore", "q_graph_pagerank",
-    "q_graph_resource_alloc", "q_graph_triangles", "q_growth_accounting",
-    "q_hll_merge_eval", "q_join_skew_stats", "q_js_divergence", "q_ks_test",
-    "q_lang_vocab_overlap", "q_late_data_quantify", "q_lead_time",
-    "q_length_batching", "q_levene_test", "q_lorenz_deciles",
-    "q_lsh_cap_recall_eval", "q_lsh_intake_recall_eval", "q_mad",
-    "q_mannwhitney", "q_market_share_shift", "q_minhash_eval",
-    "q_mutual_information", "q_new_vs_returning", "q_order_gap_outliers",
-    "q_outlier_iqr", "q_pack_sequences", "q_pareto_abc", "q_peak_concurrency",
-    "q_percentile_bands_exact", "q_percentile_interp",
-    "q_percentile_trend_weekly", "q_pr_curve", "q_purchase_intervals",
-    "q_qq_plot", "q_quantile_normalize", "q_quantile_sketch_eval",
-    "q_recursive_hierarchy", "q_retention_curve_fit", "q_rfm_segmentation",
-    "q_robust_scaler", "q_sampling_bias_check", "q_shard_plan",
-    "q_shingle_size_sensitivity", "q_skyline", "q_source_card",
-    "q_source_corrupt_tolerant", "q_sparse_cosine_pairs", "q_spearman",
-    "q_spearman_corr", "q_stickiness", "q_supplier_balance_abc",
-    "q_systematic_sample", "q_threshold_optimizer", "q_time_to_convert",
-    "q_top_p_nucleus", "q_ts_similarity", "q_vocab_coverage",
-    "q_window_range_frame", "q_winsorized_mean_by", "q_zone_map_skip_eval",
-]
-
-
-def test_registry_pins_released(spark, register):
+def test_registry_pins_released(sweep):
     """Driver-shaped sweep: one shared session, no clearCache. After a
     pinning query's result is collected, the next registered call (or the
-    query's own pin_scope exit) leaves none of its CacheManager entries."""
-    from conftest import SF_DIR
+    query's own pin_scope exit) leaves none of its CacheManager entries.
+    The pinning queries are those that called persist while they were
+    built (directly, through two_phase_window or through a nested
+    registered call)."""
+    from tools.plan_audit import pins_left
 
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    ident = spark._jvm.System.identityHashCode
-
-    def entries() -> set[int]:
-        seq = cm.cachedData()
-        return {ident(seq.apply(i)) for i in range(seq.size())}
-
-    queries, _ = registry.collect()
-    probe = register("t_probe", lambda spark, sf_dir: spark.range(1))
-    leaks = {}
-    for name in PINNING_QUERIES:
-        before = entries()
-        queries[name](spark, SF_DIR).collect()
-        probe(spark, SF_DIR)
-        left = entries() - before
-        if left:
-            leaks[name] = len(left)
+    assert any(r.persists for r in sweep.records.values()), "no persist seen"
+    leaks = pins_left(sweep.records)  # the pinning queries, and the rest
     assert not leaks, f"{len(leaks)} queries leave entries: {leaks}"
 
 
-# Pinning queries that build lazily: at sf0.001 each leaves its pins
-# 'pending' until its plan executes. The others (graph loops, LSH
-# evals, ...) fill or release their pins before they return.
-DROPPED_PLANS = [
-    "q_abc_xyz", "q_auc_roc", "q_bloom_probe", "q_bpe_encode",
-    "q_bpe_pair_stats", "q_catalog_freshness", "q_changepoint_cusum",
-    "q_churn_hazard_weekly", "q_cohen_kappa", "q_cohort_matrix_triangle",
-    "q_compaction_bins", "q_cross_correlation", "q_curriculum_interleave",
-    "q_dedup_cross_source", "q_dedup_near_minhash", "q_dedup_threshold_sweep",
-    "q_first_last_touch_compare", "q_gain_curve", "q_gini",
-    "q_growth_accounting", "q_hll_merge_eval", "q_join_skew_stats",
-    "q_js_divergence", "q_ks_test", "q_lang_vocab_overlap",
-    "q_late_data_quantify", "q_lead_time", "q_length_batching",
-    "q_levene_test", "q_lorenz_deciles", "q_mad", "q_mannwhitney",
-    "q_market_share_shift", "q_mutual_information", "q_new_vs_returning",
-    "q_order_gap_outliers", "q_outlier_iqr", "q_pack_sequences",
-    "q_pareto_abc", "q_peak_concurrency",
-]
-
-
-def test_dropped_plans_leave_no_pins(spark, register):
-    """A plan audit: 40 pinning queries built and dropped without
-    running. Nothing can fill their pins any more, so one more
-    registered call releases every one of them, 'pending' or not."""
+def test_dropped_plans_leave_no_pins(spark, register, sweep):
+    """A plan audit: the pinning queries that build lazily (their pins
+    were still 'pending' when the sweep's build returned) built and
+    dropped without running. Nothing can fill their pins any more, so
+    one more registered call releases every one of them, 'pending' or
+    not."""
     from conftest import SF_DIR
+    from tools.plan_audit import cache_entries
 
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    ident = spark._jvm.System.identityHashCode
-
-    def entries() -> set[int]:
-        seq = cm.cachedData()
-        return {ident(seq.apply(i)) for i in range(seq.size())}
-
+    dropped = [n for n, r in sweep.records.items() if r.pending]
     queries, _ = registry.collect()
     probe = register("t_probe", lambda spark, sf_dir: spark.range(1))
     probe(spark, SF_DIR)  # release what earlier calls on this thread left
-    before = entries()
-    for name in DROPPED_PLANS:
+    before = cache_entries(spark)
+    for name in dropped:
         queries[name](spark, SF_DIR)  # built, never executed, dropped
-    made = entries() - before
+    made = cache_entries(spark) - before
     pending = [catalog._persist_state(d) for d in catalog._pins.query].count("pending")
     assert made and pending, (len(made), pending)
 
     probe(spark, SF_DIR)
-    assert not made & entries()
+    assert not made & cache_entries(spark)
     assert "pending" not in [catalog._persist_state(d) for d in catalog._pins.query]

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from keycloak_event_stream_spark.operators import graph
 from keycloak_event_stream_spark.registry import collect
 
 SF = "/root/testdata/sf0.001"
@@ -366,7 +367,7 @@ class TestGraphBroadcastSizeGuard:
     """The iterative graph family's |V|-sized state vectors (rank /
     hub score / keep set / BFS frontier) carry a size-guarded
     broadcast: hinted while the node count fits under
-    spark.kes.graph.broadcastMaxNodes, dropped above it so the planner
+    graph._BCAST_MAX_NODES, dropped above it so the planner
     falls back to exchanging the |V|-row state against the cached edge
     layout instead of OOMing at a 100 TB graph. Both plan shapes are
     pinned on the same fixture, and the shuffle path must reproduce
@@ -379,19 +380,18 @@ class TestGraphBroadcastSizeGuard:
         "q_graph_bfs_levels",
     )
 
-    CONF = "spark.kes.graph.broadcastMaxNodes"
-
     def _rows(self, df):
         return sorted(tuple(r) for r in df.collect())
 
     def test_default_mode_broadcasts_state(self, spark, queries):
-        spark.conf.unset(self.CONF)
         plan = _executed_plans(
             spark, lambda: queries["q_graph_pagerank"](spark, SF)
         )
         assert "BroadcastHashJoin" in plan
 
-    def test_forced_shuffle_mode_drops_broadcast_hint(self, spark, queries):
+    def test_forced_shuffle_mode_drops_broadcast_hint(
+        self, spark, queries, monkeypatch
+    ):
         # with the guard off, the state join must no longer be
         # hint-FORCED: disabling Spark's own auto threshold simulates
         # "planner estimates the state as too big" — an unconditional
@@ -399,7 +399,7 @@ class TestGraphBroadcastSizeGuard:
         # (the pre-guard bug), while the guarded code degrades to a
         # shuffle join
         prev_auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set(self.CONF, "0")
+        monkeypatch.setattr(graph, "_BCAST_MAX_NODES", 0)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         # the default-mode test above leaves pagerank's persisted
         # build tables (pairs/deg) in the CacheManager with plans
@@ -417,20 +417,17 @@ class TestGraphBroadcastSizeGuard:
             assert "BroadcastHashJoin" not in plan
             assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         finally:
-            spark.conf.unset(self.CONF)
             spark.conf.set(
                 "spark.sql.autoBroadcastJoinThreshold", prev_auto
             )
 
     @pytest.mark.parametrize("name", GRAPH_QUERIES)
-    def test_shuffle_mode_rows_identical(self, spark, queries, name):
-        spark.conf.unset(self.CONF)
+    def test_shuffle_mode_rows_identical(
+        self, spark, queries, name, monkeypatch
+    ):
         expected = self._rows(queries[name](spark, SF))
-        spark.conf.set(self.CONF, "0")
-        try:
-            got = self._rows(queries[name](spark, SF))
-        finally:
-            spark.conf.unset(self.CONF)
+        monkeypatch.setattr(graph, "_BCAST_MAX_NODES", 0)
+        got = self._rows(queries[name](spark, SF))
         assert got == expected
 
 

@@ -4,8 +4,6 @@ not contain an unpartitioned WindowExec (the 100 TB bottleneck)."""
 
 from __future__ import annotations
 
-import re
-
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -15,20 +13,7 @@ from keycloak_event_stream_spark.operators._scale import (
     two_phase_window,
     with_totals,
 )
-
-
-def global_window_specs(df) -> list[str]:
-    """Heuristic plan scan: windowspecdefinition argument lists that
-    start with an ordering expression (`col ASC/DESC`) or a bare frame
-    have no PARTITION BY — i.e. a single-partition WindowExec."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    specs = re.findall(r"windowspecdefinition\(([^)]*)", plan)
-    return [
-        s
-        for s in specs
-        if re.match(r"\s*\S+ (ASC|DESC)", s)
-        or re.match(r"\s*specifiedwindowframe", s)
-    ]
+from tools.plan_audit import global_window_specs, global_windows
 
 
 @pytest.fixture(scope="module")
@@ -176,28 +161,22 @@ def test_dense_rank_null_keys_count_as_distinct(spark):
         "q_window_ntile",
     ],
 )
-def test_window_cost_split_branches_identical(spark, name):
+def test_window_cost_split_branches_identical(spark, name, monkeypatch):
     """The skewed-window queries (partition key with a handful of
     values) pick naive-window vs two-phase off a footer-row threshold
-    (spark.kes.window.twoPhaseMinRows); both branches must produce
-    identical rows on the same input."""
+    (_scale.TWO_PHASE_MIN_ROWS); both branches must produce identical
+    rows on the same input."""
+    from keycloak_event_stream_spark.operators import _scale
     from keycloak_event_stream_spark.registry import collect
 
     qfn = collect()[0][name]
     sf = "/root/testdata/sf0.001"
-    key = "spark.kes.window.twoPhaseMinRows"
-    was = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, "2000000")  # fixture under threshold: naive
-        naive = sorted(map(tuple, qfn(spark, sf).collect()))
-        spark.conf.set(key, "0")  # force the two-phase branch
-        fast = sorted(map(tuple, qfn(spark, sf).collect()))
-        assert naive == fast
-    finally:
-        if was is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, was)
+    # fixture under threshold: naive
+    monkeypatch.setattr(_scale, "TWO_PHASE_MIN_ROWS", 2_000_000)
+    naive = sorted(map(tuple, qfn(spark, sf).collect()))
+    monkeypatch.setattr(_scale, "TWO_PHASE_MIN_ROWS", 0)  # force two-phase
+    fast = sorted(map(tuple, qfn(spark, sf).collect()))
+    assert naive == fast
 
 
 def test_partitioned_cumsum_matches_naive(spark, data):
@@ -285,15 +264,10 @@ DEBOTTLENECKED = {
 
 
 @pytest.mark.parametrize("name", sorted(DEBOTTLENECKED))
-def test_fixed_queries_have_no_global_window(spark, name):
-    import os
-
-    from keycloak_event_stream_spark.registry import collect
-
-    sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    queries, _ = collect()
-    df = queries[name](spark, sf)
-    assert len(global_window_specs(df)) <= DEBOTTLENECKED[name]
+def test_fixed_queries_have_no_global_window(sweep, name):
+    rec = sweep.records[name]
+    assert rec.error is None, rec.error
+    assert rec.windows <= DEBOTTLENECKED[name]
 
 
 # Queries whose plans legitimately keep an unpartitioned window: the
@@ -339,32 +313,16 @@ BOUNDED_GLOBAL_WINDOWS = {
 }
 
 
-def test_registry_window_hygiene(spark):
+def test_registry_window_hygiene(sweep):
     """Every registered batch query either has no unpartitioned
     WindowExec, was rewritten two-phase (DEBOTTLENECKED), or is
     documented above with the static bound that justifies one
     partition. Catches regressions AND new queries that sneak in a
-    row-level global sort."""
-    import os
-
-    from keycloak_event_stream_spark.registry import collect
-
-    sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    queries, _ = collect()
-    offenders = {}
-    for name, fn in queries.items():
-        if name.startswith("s_"):
-            continue  # streaming entries execute on build; plan-check n/a
-        try:
-            df = fn(spark, sf)
-        except Exception:
-            continue  # runtime failures are the oracle suite's job
-        n = len(global_window_specs(df))
-        allowed = DEBOTTLENECKED.get(name, 0) if name in DEBOTTLENECKED else 0
-        if name in BOUNDED_GLOBAL_WINDOWS:
-            continue
-        if n > allowed:
-            offenders[name] = n
+    row-level global sort. A query that raises is test_sweep's to
+    report."""
+    offenders = global_windows(
+        sweep.records, DEBOTTLENECKED, BOUNDED_GLOBAL_WINDOWS
+    )
     assert not offenders, (
         f"unpartitioned WindowExec in row-level queries: {offenders} — "
         "rewrite with _scale.two_phase_window or document the static "

@@ -87,8 +87,7 @@ def main() -> int:
     # passed the engine session and threw under the driver's).
     vanilla = "--vanilla" in args
     args = [a for a in args if a != "--vanilla"]
-    # --timings out.json: dump {name: spark_seconds} for plan_audit's
-    # --top-from (audit the most expensive registry queries each round)
+    # --timings out.json: dump {name: spark_seconds}
     timings_path = None
     if "--timings" in args:
         i = args.index("--timings")
