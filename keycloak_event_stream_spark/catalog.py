@@ -246,58 +246,83 @@ _LOOP_ROWS_PER_PART = 65536
 _FLOOR_PARTS = 4
 
 
-def conf_token_set(spark: SparkSession, key: str, value: str):
-    """Set a session conf for a scope; return a restore closure with
-    TOKEN semantics (r9 ADVICE: cheap insurance on top of the
-    documented single-threaded-driver regime). The closure puts the
-    saved value back only if the conf still holds what this scope set;
-    if a concurrent scope interleaved (the conf changed underneath),
-    it warns and leaves the other scope's value in place instead of
-    clobbering that scope's save point — the contextvars.Token
-    pattern. Nested scopes restore LIFO before their parent's finally
-    runs, so nesting never trips the guard. Under true interleaving
-    the final value still cannot be made right by ANY restore order
-    (each scope saved the other's transient) — the token rule merely
-    picks the non-destructive failure: never stomp a LIVE scope."""
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, value)
+def _width(n_rows: int, rows_per_part: int, cap: int) -> int:
+    """Shuffle width for a bounded input: one partition per
+    ``rows_per_part`` rows, never below ``_FLOOR_PARTS`` nor above
+    ``cap``. Callers pick the cap: an eval caps at the session width
+    floored at 32 (:func:`eval_width`), a streaming replay at the
+    session width itself."""
+    return max(_FLOOR_PARTS, min(cap, n_rows // rows_per_part + 1))
 
-    def _restore() -> None:
-        cur = spark.conf.get(key, None)
-        if cur != value:
-            import warnings
 
-            warnings.warn(
-                f"conf scope: {key} changed inside the scope "
-                f"({value!r} -> {cur!r}); a concurrent width scope "
-                "interleaved on this session — scoped runs must be "
-                "serialized (or use spark.newSession() per thread); "
-                "leaving the interloper's value in place",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-            return
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+def eval_width(
+    spark: SparkSession, n_rows: int, rows_per_part: int = _EVAL_ROWS_PER_PART
+) -> int:
+    """The width of a bounded eval over ``n_rows`` driving rows: the
+    cap is the session width floored at 32, so an eval may widen past a
+    narrow test session."""
+    cap = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 32)
+    return _width(n_rows, rows_per_part, cap)
 
-    return _restore
+
+@_contextmanager
+def conf_scope(spark: SparkSession, overrides: dict[str, str]):
+    """Set each ``key: value`` session conf for the block and put every
+    one back on exit, on a raise too, last set first restored.
+
+    Token semantics (the contextvars.Token pattern): a key is put back
+    only if it still holds what this scope set. If another scope
+    interleaved on the session and changed it, the scope warns and
+    leaves that value in place rather than clobbering the other scope's
+    save point; under true interleaving no restore order can be right,
+    and this one never stomps a live scope. Nested scopes restore
+    before their parent, so nesting never warns. A key that had no
+    value before the scope is unset again. Each override is appended
+    as ``(key, value, was)`` to the current call's ``conf`` note."""
+    done: list[tuple[str, str, str | None]] = []
+    try:
+        for key, value in overrides.items():
+            was = spark.conf.get(key, None)
+            spark.conf.set(key, value)
+            done.append((key, value, was))
+            _pins.notes.setdefault("conf", []).append((key, value, was))
+        yield
+    finally:
+        for key, value, was in reversed(done):
+            cur = spark.conf.get(key, None)
+            if cur != value:
+                import warnings
+
+                warnings.warn(
+                    f"conf scope: {key} changed inside the scope "
+                    f"({value!r} -> {cur!r}); a concurrent width scope "
+                    "interleaved on this session — scoped runs must be "
+                    "serialized (or use spark.newSession() per thread); "
+                    "leaving the interloper's value in place",
+                    RuntimeWarning,
+                    stacklevel=3,
+                )
+            elif was is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, was)
 
 
 class _Pins(threading.local):
-    """One thread's pins: ``query`` holds what its registered queries
-    pinned lazily (released at the thread's next outermost registered
-    call), ``owners`` maps each of those pins (by ``id``) to a weak
-    reference to the frame its outermost registered call returned,
-    ``scopes`` the open :func:`pin_scope` lists, innermost last, and
-    ``depth`` the registered-call nesting depth."""
+    """One thread's pins and notes: ``query`` holds what its registered
+    queries pinned lazily (released at the thread's next outermost
+    registered call), ``owners`` maps each of those pins (by ``id``) to
+    a weak reference to the frame its outermost registered call
+    returned, ``scopes`` the open :func:`pin_scope` lists, innermost
+    last, ``depth`` the registered-call nesting depth, and ``notes``
+    what the thread's latest outermost call recorded (:func:`note`)."""
 
     def __init__(self) -> None:
         self.query: list[DataFrame] = []
         self.owners: dict[int, weakref.ref] = {}
         self.scopes: list[list[DataFrame]] = []
         self.depth = 0
+        self.notes: dict = {}
 
 
 _pins = _Pins()
@@ -314,6 +339,19 @@ def pin(df: DataFrame, level=None) -> DataFrame:
     df = df.persist() if level is None else df.persist(level)
     (_pins.scopes[-1] if _pins.scopes else _pins.query).append(df)
     return df
+
+
+def note(key: str, value) -> None:
+    """Record a decision of the calling thread's current registered
+    call (a cap audit, a replay's row count) under ``key``; nested
+    calls write to their outermost call's notes."""
+    _pins.notes[key] = value
+
+
+def notes() -> dict:
+    """The notes of the calling thread's latest outermost registered
+    call; its next outermost call starts a fresh dict."""
+    return _pins.notes
 
 
 def _unpersist(df: DataFrame) -> None:
@@ -361,9 +399,11 @@ def query_pins():
     relations, several MB each — stay live in the JVM until Python's
     cyclic GC runs, which may be never between queries. Collecting
     here frees the earlier queries' JVM objects, and the frames of
-    dropped plans, at the next query."""
+    dropped plans, at the next query. It also starts the call's fresh
+    :func:`notes` dict."""
     outermost = _pins.depth == 0
     if outermost:
+        _pins.notes = {}
         gc.collect()
         held = []
         for df in _pins.query:
@@ -465,8 +505,8 @@ def bounded_eval_scope(
 ):
     """The eager-evaluation regime: input-derived shuffle width, plus
     AQE off when that width sits at its floor, around an EAGER bounded
-    computation; both confs always restored in ``finally``. Yields the
-    width.
+    computation; :func:`conf_scope` sets both and restores them on
+    exit. Yields the width.
 
     Why the width: a multi-shuffle analytic eval over a bounded input
     pays the session's corpus width at every exchange AND inside every
@@ -477,12 +517,11 @@ def bounded_eval_scope(
     q_association_rules / q_shingle_size_sensitivity /
     q_graph_assortativity / q_graph_common_neighbors (13-28 s -> ~1 s
     at sf0.01; BASELINE.md "Round 8 — bounded-eval width scope").
-    Width derives from the driving row count — max(4, min(cap,
-    n_rows // rows_per_part + 1)), cap = session width floored at 32 —
-    never a pinned constant, so a genuinely large input keeps corpus
-    width and the 100 TB posture is unchanged. Iteration loops nest a
-    second scope over their measured |V| or edge count with
-    ``rows_per_part=_LOOP_ROWS_PER_PART``.
+    Width derives from the driving row count (:func:`eval_width`: cap
+    = session width floored at 32) — never a pinned constant, so a
+    genuinely large input keeps corpus width and the 100 TB posture is
+    unchanged. Iteration loops nest a second scope over their measured
+    |V| or edge count with ``rows_per_part=_LOOP_ROWS_PER_PART``.
 
     Why AQE goes off at the floor, and only there: at width 4 AQE has
     nothing to coalesce and no skew to split, yet every query stage
@@ -498,33 +537,18 @@ def bounded_eval_scope(
 
     Callers MUST materialize inside the scope (these evals end in at
     most a few dozen rows — ``localCheckpoint(eager=True)`` them): a
-    lazily returned DataFrame executes after ``finally`` restores the
+    lazily returned DataFrame executes after the scope restores the
     confs and sees none of this. Conf is session-global for the
     scope's duration — the single-threaded-driver regime;
     concurrent-query correctness is pinned by
     tests/test_dedup.py::test_lp_conf_scope_concurrent_query_correct.
     """
-    parts_was = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    try:
-        cap = max(int(parts_was), 32)
-    except ValueError:
-        cap = 32
-    parts = max(_FLOOR_PARTS, min(cap, n_rows // rows_per_part + 1))
-    # Token restores (conf_token_set): a concurrent interleaved scope
-    # keeps its value instead of being clobbered with this scope's
-    # stale save point — the warn stays, the stomp goes.
-    restores = [
-        conf_token_set(spark, "spark.sql.shuffle.partitions", str(parts))
-    ]
+    parts = eval_width(spark, n_rows, rows_per_part)
+    overrides = {"spark.sql.shuffle.partitions": str(parts)}
     if parts == _FLOOR_PARTS:
-        restores.append(
-            conf_token_set(spark, "spark.sql.adaptive.enabled", "false")
-        )
-    try:
+        overrides["spark.sql.adaptive.enabled"] = "false"
+    with conf_scope(spark, overrides):
         yield parts
-    finally:
-        for restore in reversed(restores):
-            restore()
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:

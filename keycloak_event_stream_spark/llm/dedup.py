@@ -34,6 +34,7 @@ from keycloak_event_stream_spark.catalog import (
     bounded_eval_scope,
     footer_rows,
     load_table,
+    note,
     pin,
     pin_scope,
     spread,
@@ -91,7 +92,7 @@ _JACCARD_MIN = 0.2
 # formulation). Fixture max occupancy on unique texts is 12 (sf0.1),
 # so the cap of 512 never engages on the standard fixtures and the
 # oracle comparison is unaffected; the overflow is observable (never
-# silent) through the LAST_CAP_AUDIT DataFrame and through
+# silent) through the call's ``lsh_cap_audit`` note and through
 # q_lsh_band_occupancy's candidate-pair bill.
 _LSH_BUCKET_CAP = 512
 
@@ -102,14 +103,6 @@ _LSH_BUCKET_CAP = 512
 # scan->shingle chain into one (round-11 stage attribution), past it
 # the prior recompute-from-scan design applies unchanged.
 _SHINGLE_PIN_MAX_DOCS = 10_000_000
-
-#: Audit DataFrame for the most recent q_dedup_near_minhash call: one
-#: row per (band, bkey, n) bucket the cap dropped. Derived from the
-#: persisted band table, so inspecting it after the query executes is
-#: one cheap cache-side aggregate — the no-silent-cap gate (its
-#: corpus-wide companion is q_lsh_band_occupancy's candidate-pair
-#: bill). Empty ⇔ the cap never engaged.
-LAST_CAP_AUDIT = None
 
 _SPARK_SHINGLES = (
     "array_distinct(transform(sequence(1, size(w) - {k}), "
@@ -318,15 +311,17 @@ def _clone_rep_pairs(
     # band table and is tiny by construction (only buckets beyond the
     # cap), so it broadcasts into a left-anti join — the band table
     # never shuffles for the cap. The dropped buckets stay auditable
-    # through LAST_CAP_AUDIT (a cache-side aggregate, not an extra
-    # action), so an engaged cap is visible, never silent.
+    # through the call's ``lsh_cap_audit`` note: one row per (band,
+    # bkey, n) bucket the cap dropped, empty ⇔ the cap never engaged.
+    # It derives from the pinned band table, so inspecting it after the
+    # query executes is one cheap cache-side aggregate, not an extra
+    # action over the corpus.
     big = (
         bands.groupBy("band", "bkey")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > _LSH_BUCKET_CAP)
     )
-    global LAST_CAP_AUDIT
-    LAST_CAP_AUDIT = big
+    note("lsh_cap_audit", big)
     capped = bands.join(
         F.broadcast(big.select("band", "bkey")),
         ["band", "bkey"],
@@ -399,8 +394,8 @@ def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse can't absorb it — shares most band keys and would
     otherwise pay k² candidates per flooded bucket; capped-out docs
     still pair through any non-flooded band, and the dropped buckets
-    surface through the LAST_CAP_AUDIT DataFrame (never a silent
-    cap)."""
+    surface through the ``lsh_cap_audit`` note (``catalog.notes()``;
+    never a silent cap)."""
     clones, reps, rep_pairs = _clone_rep_pairs(spark, sf_dir)
     # fan-out 1: every pair WITHIN a clone group, Jaccard exactly 1.0
     # (a group's k members contribute k·(k−1)/2 output rows — quadratic

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from keycloak_event_stream_spark.catalog import conf_token_set, load_table
+from keycloak_event_stream_spark.catalog import conf_scope, load_table
 from keycloak_event_stream_spark.registry import register as _q
 
 
@@ -347,8 +347,7 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "_script_orders"
     )
-    restore = conf_token_set(spark, "spark.sql.scripting.enabled", "true")
-    try:
+    with conf_scope(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
             BEGIN
@@ -365,8 +364,6 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        restore()
 
 
 @_q(

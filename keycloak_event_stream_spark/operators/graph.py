@@ -155,7 +155,9 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization reads its sums twice and cannot), so the rounds
     still compose into one plan; it executes inside the scopes, with
     AQE off at the floor width, not at the caller's action."""
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
+    with bounded_eval_scope(
+        spark, footer_rows(sf_dir, "lineitem")
+    ) as width, pin_scope():
         o = spread(load_table(spark, sf_dir, "orders"))
         l = spread(load_table(spark, sf_dir, "lineitem"))
         pairs = (
@@ -193,8 +195,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # by the cached layout — 5 shuffles of |edges| become 0), src in
         # shuffle mode (the per-iteration contrib join clusters on src;
         # each iteration then exchanges only the |V|-row contrib vector).
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        loop_edges = pin(edges.repartition(n_shuffle, "dst" if bcast else "src"))
+        loop_edges = pin(edges.repartition(width, "dst" if bcast else "src"))
         with bounded_eval_scope(spark, n_nodes, _LOOP_ROWS_PER_PART):
             ranks = deg.select(
                 F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
@@ -430,7 +431,9 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs at the lineitem-derived width, the rounds at the node-derived
     # one, and the result materializes inside both (BASELINE.md
     # "Round 9 - graph build phase").
-    with bounded_eval_scope(spark, footer_rows(sf_dir, "lineitem")), pin_scope():
+    with bounded_eval_scope(
+        spark, footer_rows(sf_dir, "lineitem")
+    ) as width, pin_scope():
         o = spread(load_table(spark, sf_dir, "orders"))
         l = spread(load_table(spark, sf_dir, "lineitem"))
         # LONG node keys (round 11): the graph is directed c->s, so a
@@ -463,12 +466,9 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             # mode-switch time) — each of the 8 half-step joins then
             # exchanges only the |V|-row score vector against the matching
             # cached layout.
-            n_shuffle = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "32")
-            )
             edges_by = {
-                "src": pin(edges.repartition(n_shuffle, "src")),
-                "dst": pin(edges.repartition(n_shuffle, "dst")),
+                "src": pin(edges.repartition(width, "src")),
+                "dst": pin(edges.repartition(width, "dst")),
             }
         # loop conf scope (see docstring): the 8 eager
         # half-step actions move only |V|-row score tables. Every score

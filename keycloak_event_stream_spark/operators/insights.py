@@ -36,8 +36,10 @@ from pyspark.sql.window import Window
 
 from keycloak_event_stream_spark.catalog import (
     bounded_eval_scope,
+    eval_width,
     footer_rows,
     load_table,
+    note,
     pin,
     pin_scope,
     spread,
@@ -270,17 +272,11 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # k²/2 pairs of near-zero lift signal and can single-handedly dominate
 # the pair exchange. The filter is a map-side size() predicate on the
 # already-aggregated basket row — no extra shuffle — and dropped
-# baskets surface through LAST_BASKET_CAP_AUDIT (never a silent cap).
+# baskets surface through the call's ``basket_cap_audit`` note (never
+# a silent cap).
 # TPC-H baskets have <= 7 lines, so the cap never engages on the
 # fixtures and the oracle comparison stays exact.
 _BASKET_CAP = 256
-
-#: Audit DataFrame for the most recent q_market_basket call: one row
-#: per (l_orderkey, n_items) basket the cap dropped. Lazy — inspecting
-#: it re-runs the basket aggregate (the main query persists nothing),
-#: which is the audit's cost, not the query's. Empty ⇔ the cap never
-#: engaged.
-LAST_BASKET_CAP_AUDIT = None
 
 
 @_q(
@@ -320,8 +316,12 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixtures and the oracle stays exact) are dropped whole by a
     map-side size() filter on the aggregated row — same
     bounded-flood + audit design as the LSH bucket cap
-    (``llm/dedup.py`` LAST_CAP_AUDIT): dropped baskets are observable
-    through LAST_BASKET_CAP_AUDIT, never silent.
+    (``llm/dedup.py``, note ``lsh_cap_audit``): dropped baskets are
+    observable, never silent, through the ``basket_cap_audit`` note
+    (``catalog.notes()``), one row per (l_orderkey, n_items) basket
+    the cap dropped. It is lazy: inspecting it re-runs the basket
+    aggregate (the query persists nothing), which is the audit's cost,
+    not the query's. Empty ⇔ the cap never engaged.
     """
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
@@ -332,27 +332,22 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-basket pair expansion, so the one CPU-heavy stage of the query
     # ran on 4 of 32 cores (stage attribution: 3.6 s CPU / 4 tasks).
     # An explicit keyed repartition at an input-derived width (footer
-    # rows, same 8192-rows-per-part family as bounded_eval_scope, capped
-    # at the session's shuffle width) pins the fan-out's parallelism:
-    # the basket groupBy reuses this exchange (same key, guide §2.4), so
-    # the exchange COUNT is unchanged — AQE just no longer coalesces an
-    # explicitly-widthed user repartition. Interleaved A/B at sf0.1:
+    # rows, catalog.eval_width: the width bounded_eval_scope would set)
+    # pins the fan-out's parallelism: the basket groupBy reuses this
+    # exchange (same key, guide §2.4), so the exchange COUNT is
+    # unchanged — AQE just no longer coalesces an explicitly-widthed
+    # user repartition. Interleaved A/B at sf0.1:
     # 3.84 -> 1.85 s best-of-5, rows identical.
-    parts_was = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    try:
-        width_cap = max(int(parts_was), 32)
-    except ValueError:
-        width_cap = 32
-    width = max(
-        4, min(width_cap, footer_rows(sf_dir, "lineitem") // 8192 + 1)
-    )
+    width = eval_width(spark, footer_rows(sf_dir, "lineitem"))
     basket = li.repartition(width, "l_orderkey").groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("items")
     )
-    global LAST_BASKET_CAP_AUDIT
-    LAST_BASKET_CAP_AUDIT = basket.select(
-        "l_orderkey", F.size("items").alias("n_items")
-    ).filter(F.col("n_items") > _BASKET_CAP)
+    note(
+        "basket_cap_audit",
+        basket.select("l_orderkey", F.size("items").alias("n_items")).filter(
+            F.col("n_items") > _BASKET_CAP
+        ),
+    )
     basket = basket.filter(F.size("items") <= _BASKET_CAP)
     pairs = basket.select(
         F.explode(

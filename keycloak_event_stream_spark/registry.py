@@ -93,6 +93,13 @@ _MODULES = [
 # green row is oldest. Every other name follows in _MODULES order, then
 # definition order within its module.
 _PRIORITY = [
+    # ---- q_sql_scripting: its conf change moved to catalog.conf_scope;
+    # the four array/table-function names come back for fresh rows ----
+    "q_sql_scripting",
+    "q_array_explode",
+    "q_array_agg",
+    "q_explode_outer",
+    "q_sql_table_fn",
     # ---- plan changed at sf0.01: their bounded-eval scope sits at
     # the floor width, where it now turns AQE off ----
     "q_lsh_intake_recall_eval",
@@ -100,12 +107,7 @@ _PRIORITY = [
     "q_embedding_outliers",
     "q_kn_bigram_lm",
     # ---- first driver rows in round 12 ----
-    "q_geo_nearest",
     "q_late_data_quantify",
-    "q_dedup_proximity",
-    "q_session_window_native",
-    "q_window_tumbling_batch",
-    "q_survival_km",
     "q_peak_concurrency",
     "q_percentile_interp",
     "q_item_item_cf",

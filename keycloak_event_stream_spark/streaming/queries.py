@@ -38,7 +38,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from keycloak_event_stream_spark.catalog import table_path
+from keycloak_event_stream_spark.catalog import _width, conf_scope, note, table_path
 from keycloak_event_stream_spark.operators._exact import DEC, sql_dsum
 from keycloak_event_stream_spark.registry import register as _q
 
@@ -53,6 +53,7 @@ def read_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint nanos and is converted to a microsecond timestamp — same
     convention as :func:`keycloak_event_stream_spark.catalog.load_table`.
     """
+    # get_spark declares it; caller-supplied sessions need it here
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, "events")
     raw_schema = spark.read.parquet(path).schema
@@ -94,11 +95,6 @@ def read_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # s_stream_stream_semi_join (33.7 s at width 200 vs 2.7 s at width 8,
 # sf0.01 — BASELINE.md "Round 8 — measured r9 head item").
 _REPLAY_ROWS_PER_PART = 8192
-
-# Observability handle (the LAST_BASKET_CAP_AUDIT idiom): what the most
-# recent scoped replay derived and restored, for tests and diagnosis —
-# the scope must never be a silent re-regime.
-LAST_REPLAY_SCOPE: dict | None = None
 
 
 def _events_rows(sf_dir: str) -> int:
@@ -147,57 +143,38 @@ def _replay_grain(sf_dir: str) -> tuple[str, ...]:
     return ()
 
 
-def _replay_width_scope(spark: SparkSession, rows: int | None):
-    """Install the bounded-replay shuffle width for a streaming run and
-    return the restore callable (or ``None`` when ``rows is None``).
+def _drain(spark: SparkSession, writer, rows: int | None) -> None:
+    """Run a bounded replay's ``writer`` to completion with the
+    availableNow trigger.
 
-    ``rows`` — the bounded input's row count — scopes
-    ``spark.sql.shuffle.partitions`` around the run to
-    ``max(4, min(session width, rows // _REPLAY_ROWS_PER_PART + 1))``,
-    always restored by the caller's ``finally``: the registered s_*
-    entries are bounded VERIFICATION replays, so their state width
-    should derive from the bounded input, not from the session's
-    corpus-sized default (see _REPLAY_ROWS_PER_PART for the measured
-    12x cost). Production streams attach their own trigger on their
-    own session and are never re-regimed: ``rows=None`` leaves the
-    conf untouched. AQE needs no override here — stateful streaming
-    disables it itself. The conf is session-global for the run's
-    duration — the same single-threaded-driver regime as
-    ``catalog.bounded_eval_scope``; that a
-    concurrent query on the re-regimed session stays CORRECT (just
-    re-widthed) is pinned by tests/test_dedup.py::
-    test_lp_conf_scope_concurrent_query_correct. Shared by
-    :func:`_run_to_memory` and :func:`run_to_parquet` so the memory
-    and distributed sinks replay under an identical regime.
+    ``rows`` — the bounded input's row count — sets
+    ``spark.sql.shuffle.partitions`` for the run to
+    ``catalog._width(rows, _REPLAY_ROWS_PER_PART, session width)``
+    under :func:`catalog.conf_scope`, which notes the width and the
+    value it restores; the row count is noted as ``replay_rows``. The
+    registered s_* entries are bounded VERIFICATION replays, so their
+    state width should derive from the bounded input, not from the
+    session's corpus-sized default (see _REPLAY_ROWS_PER_PART for the
+    measured 12x cost). The cap is the session width, unlike
+    ``catalog.eval_width``'s floor of 32: a replay's state width must
+    never exceed it, since state-store instances per partition are the
+    cost being bounded. Production streams attach their own trigger on
+    their own session and are never re-regimed: ``rows=None`` leaves
+    the conf untouched. AQE needs no override here — stateful
+    streaming disables it itself. The conf is session-global for the
+    run's duration — the same single-threaded-driver regime as
+    ``catalog.bounded_eval_scope``; that a concurrent query on the
+    re-regimed session stays CORRECT (just re-widthed) is pinned by
+    tests/test_dedup.py::test_lp_conf_scope_concurrent_query_correct.
     """
-    global LAST_REPLAY_SCOPE
-    restore = None
+    overrides = {}
     if rows is not None:
-        parts_was = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        # Deliberately NOT catalog.bounded_eval_scope's cap policy:
-        # that scope floors the cap at 32 (an eval may widen past a
-        # narrow test session), while a replay's state width must
-        # never exceed the session width — state-store instances per
-        # partition are the cost being bounded here.
-        try:
-            cap = int(parts_was)
-        except ValueError:
-            cap = 200
-        parts = max(4, min(cap, rows // _REPLAY_ROWS_PER_PART + 1))
-        # token restore (catalog.conf_token_set, r9 ADVICE): a
-        # concurrent interleaved scope keeps its value instead of
-        # being clobbered with this scope's stale save point
-        from keycloak_event_stream_spark.catalog import conf_token_set
-
-        restore = conf_token_set(
-            spark, "spark.sql.shuffle.partitions", str(parts)
-        )
-        LAST_REPLAY_SCOPE = {
-            "rows": rows,
-            "parts": parts,
-            "parts_was": parts_was,
-        }
-    return restore
+        note("replay_rows", rows)
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        parts = _width(rows, _REPLAY_ROWS_PER_PART, cap)
+        overrides["spark.sql.shuffle.partitions"] = str(parts)
+    with conf_scope(spark, overrides):
+        writer.trigger(availableNow=True).start().awaitTermination()
 
 
 def _run_to_memory(df: DataFrame, mode: str, rows: int | None = None) -> DataFrame:
@@ -207,27 +184,17 @@ def _run_to_memory(df: DataFrame, mode: str, rows: int | None = None) -> DataFra
     right shape for the registered VERIFICATION replays (the driver
     collects the result anyway) but NOT for scale probes whose output
     is data-linear — use :func:`run_to_parquet` there. Width regime:
-    :func:`_replay_width_scope`.
+    :func:`_drain`.
     """
-    spark = df.sparkSession
-    restore = _replay_width_scope(spark, rows)
     _COUNTER[0] += 1
     name = f"s_sink_{os.getpid()}_{_COUNTER[0]}"
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if restore is not None:
-            restore()
+    writer = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
+    )
+    _drain(df.sparkSession, writer, rows)
     return df.sparkSession.table(name)
 
 
@@ -235,10 +202,9 @@ def run_to_parquet(
     df: DataFrame, path: str, rows: int | None = None
 ) -> DataFrame:
     """Distributed-sink twin of :func:`_run_to_memory`: identical
-    bounded replay (availableNow trigger + the same
-    :func:`_replay_width_scope` regime) but the output lands in a
-    parquet directory, never on the driver — the production sink
-    shape, and the harness fix for user-linear outputs (BASELINE.md
+    bounded replay (:func:`_drain`: availableNow trigger, same width
+    regime) but the output lands in a parquet directory, never on the
+    driver — the production sink shape, and the harness fix for user-linear outputs (BASELINE.md
     round-10 caveat: s_session_windows at 100x OOMed the MEMORY
     VERIFICATION SINK while the operator itself was fine; the r10
     verdict asked for a parquet sink + aggregate assertions so the
@@ -249,25 +215,14 @@ def run_to_parquet(
     callers assert AGGREGATES over it (counts, sums, distinct keys)
     and must not collect the row set.
     """
-    spark = df.sparkSession
-    restore = _replay_width_scope(spark, rows)
-    try:
-        q = (
-            df.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", path)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="ckpt_pq_sink_"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if restore is not None:
-            restore()
-    return spark.read.parquet(path)
+    writer = (
+        df.writeStream.format("parquet")
+        .outputMode("append")
+        .option("path", path)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_pq_sink_"))
+    )
+    _drain(df.sparkSession, writer, rows)
+    return df.sparkSession.read.parquet(path)
 
 
 @_q(

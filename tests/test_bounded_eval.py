@@ -57,9 +57,6 @@ AQE = "spark.sql.adaptive.enabled"
         ),
         # a narrow session is floored at 32 for the cap, so a large
         # input may widen past the session width
-        # (a non-numeric session value is unreachable through a real
-        # session — conf.set validates the int — so the scope's
-        # ValueError fallback stays defensive-only, untested here)
         pytest.param(
             "4", 100_000_000, _EVAL_ROWS_PER_PART, 32, id="4-100000000-32",
         ),
@@ -249,7 +246,7 @@ def test_scope_warns_on_interleaved_mutation(spark):
     documented hazard of the session-global conf scope (r8 ADVICE).
     The scope cannot prevent it, but it must be LOUD and
     NON-DESTRUCTIVE (r9 ADVICE, token semantics —
-    catalog.conf_token_set): a conf value at restore time that is not
+    catalog.conf_scope): a conf value at restore time that is not
     the scope's own setting raises a RuntimeWarning naming the hazard
     and LEAVES the interloper's value in place — restoring this
     scope's stale save point would clobber the live scope's save
@@ -296,25 +293,70 @@ def test_scope_warns_on_interleaved_mutation(spark):
         spark.conf.set(AQE, aqe_was)
 
 
-def test_conf_token_set_restores_and_unsets(spark):
-    """conf_token_set round-trips a set conf and unsets one that had
-    no prior value (so a scope on a pristine session leaves no
-    residue)."""
-    from keycloak_event_stream_spark.catalog import conf_token_set
+def test_conf_scope_restores_unsets_and_notes(spark):
+    """conf_scope round-trips a set conf, unsets one that had no prior
+    value (so a scope on a pristine session leaves no residue), does
+    both when the block raises, and notes each override as (key,
+    value, was) on the current call."""
+    from keycloak_event_stream_spark.catalog import conf_scope, notes
 
     was = spark.conf.get("spark.sql.shuffle.partitions")
+    key = "spark.kes.test.tokenScratch"
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "123")
-        restore = conf_token_set(spark, "spark.sql.shuffle.partitions", "9")
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "9"
-        restore()
+        n_noted = len(notes().get("conf", []))
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "9", key: "x"}):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "9"
+            assert spark.conf.get(key) == "x"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "123"
         # a key with no prior value is unset on restore
-        key = "spark.kes.test.tokenScratch"
-        restore2 = conf_token_set(spark, key, "x")
-        assert spark.conf.get(key) == "x"
-        restore2()
         assert spark.conf.get(key, None) is None
+        assert notes()["conf"][n_noted:] == [
+            ("spark.sql.shuffle.partitions", "9", "123"),
+            (key, "x", None),
+        ]
+        # a raise inside the block restores both, too
+        with pytest.raises(RuntimeError, match="boom"):
+            with conf_scope(
+                spark, {"spark.sql.shuffle.partitions": "9", key: "x"}
+            ):
+                raise RuntimeError("boom")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "123"
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", was)
+        spark.conf.unset(key)
+
+
+class _CountingConf:
+    """A session's RuntimeConfig that counts the calls made through it."""
+
+    def __init__(self, conf):
+        self.conf, self.calls = conf, 0
+
+    def __getattr__(self, name):
+        def call(*args):
+            self.calls += 1
+            return getattr(self.conf, name)(*args)
+
+        return call
+
+
+@pytest.mark.parametrize("n_rows,max_calls", [(10, 9), (60_000, 5)])
+def test_scope_conf_call_count(spark, n_rows, max_calls):
+    """bounded_eval_scope makes at most 9 spark.conf calls at the floor
+    width (two keys: one width read, then a save, set, check and
+    restore per key) and at most 5 above it (the width key only)."""
+    from types import SimpleNamespace
+
+    was = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        counting = SimpleNamespace(conf=_CountingConf(spark.conf))
+        with bounded_eval_scope(counting, n_rows):
+            pass
+        assert counting.conf.calls <= max_calls
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", was)
 

@@ -1,5 +1,5 @@
-"""Provider bootstrap parity: defaults, warn-and-default numeric
-parsing, feature gating (FirehoseEventStoreProviderFactory.java:62-142)."""
+"""Provider bootstrap parity: defaults, string parsing, feature gating
+(FirehoseEventStoreProviderFactory.java:62-142)."""
 
 from __future__ import annotations
 
@@ -10,15 +10,6 @@ from keycloak_event_stream_spark.sources.keycloak import KeycloakEventStore
 def test_defaults_match_reference_posture():
     c = EngineConfig()
     assert c.enabled is False  # off by default (isSupported gate)
-    assert c.shuffle_partitions is None  # session default
-
-
-def test_invalid_numeric_falls_back_with_default(caplog):
-    c = EngineConfig.from_mapping({"shuffle_partitions": "not-a-number"})
-    assert c.shuffle_partitions is None  # fallback (ref :131-142)
-    assert "invalid value" in caplog.text
-    c = EngineConfig.from_mapping({"shuffle_partitions": "8"})
-    assert c.shuffle_partitions == 8
 
 
 def test_bool_parsing():

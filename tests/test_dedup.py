@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from keycloak_event_stream_spark.catalog import notes
 from keycloak_event_stream_spark.llm import dedup
 
 
@@ -256,7 +257,7 @@ def test_lsh_bucket_cap_bounds_boilerplate(spark, tmp_path, monkeypatch):
     cap forced to 6, flooded (band, bkey) buckets drop WHOLE: the
     near-quadratic candidate set collapses to what survives in
     non-flooded buckets, and the dropped bucket/row counts surface
-    through LAST_CAP_OBSERVATION (no silent cap). With the default cap
+    through the call's lsh_cap_audit note (no silent cap). With the default cap
     (512) the same corpus emits the full pair set — the cap only
     engages when configured into range."""
     tpl = (
@@ -275,7 +276,7 @@ def test_lsh_bucket_cap_bounds_boilerplate(spark, tmp_path, monkeypatch):
     out_full = dedup.q_dedup_near_minhash(spark, str(tmp_path))
     n_full = out_full.count()
     assert n_full == 40 * 39 // 2
-    assert dedup.LAST_CAP_AUDIT.count() == 0
+    assert notes()["lsh_cap_audit"].count() == 0
 
     # forced-low cap: candidates bounded, overflow observable
     with monkeypatch.context() as m:
@@ -286,7 +287,7 @@ def test_lsh_bucket_cap_bounds_boilerplate(spark, tmp_path, monkeypatch):
     # 40 docs) are gone; only pairs meeting in a small (≤6-member)
     # bucket survive, far below the quadratic full set
     assert len(pairs) < n_full // 2
-    audit = dedup.LAST_CAP_AUDIT.collect()
+    audit = notes()["lsh_cap_audit"].collect()
     assert len(audit) > 0  # at least one bucket tripped the cap
     assert all(r.n > 6 for r in audit)
     # determinism: same rows on a re-run

@@ -6,7 +6,7 @@ from __future__ import annotations
 from conftest import SF_DIR
 from pyspark.sql import functions as F
 
-from keycloak_event_stream_spark.catalog import load_table
+from keycloak_event_stream_spark.catalog import load_table, notes
 from keycloak_event_stream_spark.operators.insights import (
     q_anomaly_zscore,
     q_attribution_last_touch,
@@ -505,7 +505,7 @@ def test_market_basket_cap_drops_mega_baskets_with_audit(
     spark, tmp_path, monkeypatch
 ):
     """Baskets beyond insights._BASKET_CAP items are dropped WHOLE and
-    surface in LAST_BASKET_CAP_AUDIT — the r6-verdict bound on the one
+    surface in the call's basket_cap_audit note — the r6-verdict bound on the one
     quadratic term in the pair fan-out. Small baskets still pair."""
     from keycloak_event_stream_spark.operators import insights
 
@@ -522,11 +522,11 @@ def test_market_basket_cap_drops_mega_baskets_with_audit(
             (r.part_a, r.part_b, r.n_orders)
             for r in q_market_basket(spark, str(d)).collect()
         }
-        audit = insights.LAST_BASKET_CAP_AUDIT.collect()
+        audit = notes()["basket_cap_audit"].collect()
     # only the small baskets' pair survives; counted across both orders
     assert out == {(100, 101, 2)}
     assert [(r.l_orderkey, r.n_items) for r in audit] == [(1, 10)]
     # default cap: fixture baskets are far smaller, cap must not engage
     full = q_market_basket(spark, str(d)).collect()
     assert {(r.part_a, r.part_b) for r in full} >= {(100, 101)}
-    assert insights.LAST_BASKET_CAP_AUDIT.count() == 0
+    assert notes()["basket_cap_audit"].count() == 0

@@ -952,13 +952,13 @@ def test_replay_scope_derives_width_and_restores_conf(spark):
     """The bounded-replay width scope (_run_to_memory): under a
     corpus-sized session width (200), a registered replay must run its
     stateful query at the input-derived width — max(4, min(session,
-    rows // 8192 + 1)) — record it in LAST_REPLAY_SCOPE (never a
+    rows // 8192 + 1)) — note the row count and the override (never a
     silent re-regime), restore the session conf afterwards, and return
     exactly the batch-equivalent result (the 12x state-store overhead
     diagnosis, BASELINE.md "Round 8 — measured r9 head item")."""
     import pyarrow.parquet as pq
 
-    from keycloak_event_stream_spark.catalog import load_table, table_path
+    from keycloak_event_stream_spark.catalog import load_table, notes, table_path
     from keycloak_event_stream_spark.streaming import queries as sq
     from tests.conftest import SF_DIR
 
@@ -972,13 +972,13 @@ def test_replay_scope_derives_width_and_restores_conf(spark):
         got = {(r.user_id, r.event_type) for r in out.collect()}
         # conf restored to the caller's width the moment the run ends
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
-        scope = sq.LAST_REPLAY_SCOPE
-        assert scope is not None
-        assert scope["rows"] == n_events
-        assert scope["parts"] == max(
-            4, min(200, n_events // sq._REPLAY_ROWS_PER_PART + 1)
+        assert notes()["replay_rows"] == n_events
+        [(key, parts, parts_was)] = notes()["conf"]
+        assert key == "spark.sql.shuffle.partitions"
+        assert parts == str(
+            max(4, min(200, n_events // sq._REPLAY_ROWS_PER_PART + 1))
         )
-        assert scope["parts_was"] == "200"
+        assert parts_was == "200"
         # re-widthed replay is result-identical to the batch DISTINCT
         exp = {
             (r.user_id, r.event_type)

@@ -11,8 +11,8 @@ operator's state — partitioned per user range, bounded by the
 watermark — is fine (BASELINE.md round-10 caveat; r10 verdict #4).
 
 This probe runs the identical stateful plan through
-``streaming.queries.run_to_parquet`` (availableNow replay, same
-_replay_width_scope regime, parquet file sink) and VERIFIES WITH
+``streaming.queries.run_to_parquet`` (availableNow replay and replay
+width of the memory sink, parquet file sink) and VERIFIES WITH
 AGGREGATES ONLY — nothing user-linear ever lands on the driver:
 
 - conservation: sum(n_events) over the sink == watermark-closed input
